@@ -43,12 +43,18 @@ def window_fingerprints(
 
     - ``md5`` — the r7-r11 shape: 32-char hex string. 128-bit.
     - ``xx128`` (DEFAULT since r12) — ``struct(xxhash64(s),
-      xxhash64(s, 1))``: the same 128-bit collision class as md5 (two
+      xxhash64(1, s))``: the same 128-bit collision class as md5 (two
       64-bit halves under distinct seeds; a false dup requires a
-      simultaneous collision in both), at a fraction of the hash CPU
-      (xxHash64 is an order of magnitude faster per byte than MD5) and
-      16 bytes of dense struct key through the corpus-wide groupBy
-      exchange versus ~40 bytes of hex-string UnsafeRow. Measured (r12
+      simultaneous collision in both). The literal comes FIRST because
+      Spark chains multi-argument hashes, each argument's hash seeding
+      the next: the r12 order ``xxhash64(s, 1)`` made the second half
+      ``XXH64.hashInt(1, seed=h1)``, a pure function of the first, so
+      the pair only had the 64-bit class. Both orders do the same hash
+      work (one string hash, one int hash); the r12 timings below were
+      taken on the chained order. xx128 costs a fraction of the hash CPU (xxHash64 is an order of
+      magnitude faster per byte than MD5) and moves 16 bytes of dense
+      struct key through the corpus-wide groupBy exchange versus ~40
+      bytes of hex-string UnsafeRow. Measured (r12
       interleaved in-JVM A/B, identical 47,700 spans on the x100
       corpus): sf0.1 wash (mins 1.586 md5 / 1.602 xx128 — the exchange
       is tiny there), x100 mins 75.4 md5 / **70.7 xx128** and md5 worst
@@ -96,13 +102,13 @@ def window_fingerprints(
         if impl == "xx64":
             def fingerprint(s):
                 return F.xxhash64(s)
-        else:  # xx128: two 64-bit halves; the seed-distinguishing
-            # lit(1) makes the second an independent member of the
-            # xxHash64 family
+        else:  # xx128: two 64-bit halves; hashing lit(1) FIRST seeds
+            # the second with a constant other than the first's, making
+            # it an independent member of the xxHash64 family
             def fingerprint(s):
                 return F.struct(
                     F.xxhash64(s).alias("h1"),
-                    F.xxhash64(s, F.lit(1)).alias("h2"),
+                    F.xxhash64(F.lit(1), s).alias("h2"),
                 )
 
         # the joined window string is staged through an inner transform

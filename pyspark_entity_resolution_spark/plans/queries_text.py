@@ -768,7 +768,7 @@ _SPAN_W = 10
     FROM acut
     """,
     "exact substring deduplication (the Lee et al. arXiv:2107.06499 "
-    "operation, distributed): rolling 10-token window md5 fingerprints, "
+    "operation, distributed): rolling 10-token window 128-bit fingerprints, "
     "ONE groupBy on the window hash finds corpus-wide verbatim repeats "
     "(every duplicated substring of >= w tokens contains a duplicated "
     "window), then a per-document interval merge stitches overlapping "

@@ -3,34 +3,17 @@
 from __future__ import annotations
 
 from .common import QuerySpec
-from . import queries_relational
+from . import (
+    queries_er,
+    queries_events,
+    queries_relational,
+    queries_text,
+    queries_vector,
+)
 
-_MODULES = [queries_relational]
-
-try:  # optional modules appear as they are built
-    from . import queries_er
-
-    _MODULES.append(queries_er)
-except ImportError:
-    pass
-try:
-    from . import queries_text
-
-    _MODULES.append(queries_text)
-except ImportError:
-    pass
-try:
-    from . import queries_vector
-
-    _MODULES.append(queries_vector)
-except ImportError:
-    pass
-try:
-    from . import queries_events
-
-    _MODULES.append(queries_events)
-except ImportError:
-    pass
+_MODULES = [
+    queries_relational, queries_er, queries_text, queries_vector, queries_events,
+]
 
 
 def all_queries() -> dict[str, QuerySpec]:

@@ -236,7 +236,9 @@ def _acquire_store_lease(spark, labels_path: str, owner: str):
     try:
         out = fs.create(jpath, False)  # overwrite=False: create-exclusive
     except Exception as exc:  # Hadoop FileAlreadyExistsException et al.
-        if fs.exists(jpath):
+        # the holder can release between the failed create and the
+        # exists() probe; the create's own error still names contention
+        if "FileAlreadyExistsException" in str(exc) or fs.exists(jpath):
             raise RuntimeError(
                 f"label store at {labels_path} is locked by another "
                 f"writer (lease file {jpath}): a fold and a compaction "

@@ -101,154 +101,142 @@ def test_explicit_checkpoint_storage_and_probes(spark):
     assert (_jvm_max_heap(spark) or 0) > 0
 
 
-def test_pinned_exchange_path_matches_default(spark, monkeypatch):
-    """The per-star exchange pin is volume-gated (PIN_EXCHANGE_ABOVE_EDGES,
-    2M), so ordinary test graphs never execute the pinned star plans —
-    force the gate to zero and assert the pinned path labels a random
-    graph identically to the default path. Guards the pin's rewiring
-    algebra (the repartition must not change which rows meet which
-    minima), not its performance. The pin exists only in the JOIN star
-    implementation (r7 default is window), so both arms run under
-    SPARK_GRAFT_CC_STAR=join."""
-    import random
+def _union_find_labels(pairs):
+    """Reference labeling: node -> min node of its component, by a
+    union-find whose merges always hang the larger root under the
+    smaller one (so every root is its component's minimum)."""
+    parent = {}
 
-    from pyspark_entity_resolution_spark.operators import clustering as C
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    rng = random.Random(42)
-    n_nodes, n_edges = 400, 900
-    edges = spark.createDataFrame(
-        [
-            (rng.randrange(n_nodes), rng.randrange(n_nodes))
-            for _ in range(n_edges)
-        ],
-        ["src", "dst"],
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(
-        connected_components(edges).collect()
-    )
-    monkeypatch.setattr(C, "PIN_EXCHANGE_ABOVE_EDGES", 0)
-    pinned = _components_as_partitions(
-        connected_components(edges).collect()
-    )
-    assert pinned == baseline
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
-def test_window_star_impl_matches_join_impl(spark, monkeypatch):
-    """SPARK_GRAFT_CC_STAR=window selects the join-free window-function
-    stars; each star's rewiring must equal the join form's row set, and
-    end-to-end labeling must be identical on a random multigraph (with
-    self-loops and duplicate edges, the inputs that stress the
-    filter/distinct placement)."""
+def _neighbors(pairs):
+    """Undirected adjacency of an edge multiset, self-loops dropped
+    (a self-loop puts u in its own neighborhood, which neither star's
+    minimum nor its emission rule can see)."""
+    from collections import defaultdict
+
+    nbrs = defaultdict(set)
+    for a, b in pairs:
+        if a != b:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    return nbrs
+
+
+def _large_star_reference(pairs):
+    """Kiveris et al. large-star: for every node u, link each strictly
+    larger neighbor v to m(u) = min(N(u) ∪ {u})."""
+    out = set()
+    for u, nu in _neighbors(pairs).items():
+        m = min(nu | {u})
+        out |= {(v, m) for v in nu if v > u}
+    return out
+
+
+def _small_star_reference(pairs):
+    """Kiveris et al. small-star: for every node u with smaller
+    neighbors N⁻(u), link each of N⁻(u) ∪ {u} to m = min(N⁻(u))."""
+    out = set()
+    for u, nu in _neighbors(pairs).items():
+        lower = {v for v in nu if v < u}
+        if lower:
+            m = min(lower)
+            out |= {(v, m) for v in lower | {u} if v != m}
+    return out
+
+
+def _labels(df):
+    return {r["node"]: r["component"] for r in df.collect()}
+
+
+def test_window_stars_match_kiveris_definitions(spark):
+    """Each window star's row set equals the set-operation definition,
+    and end-to-end labels (node -> min node, not only the partition)
+    equal union-find, on a random multigraph with self-loops and
+    duplicate edges in both directions."""
     import random
 
     from pyspark_entity_resolution_spark.operators.clustering import (
-        _large_star,
         _large_star_window,
-        _small_star,
         _small_star_window,
     )
 
     rng = random.Random(99)
-    n_nodes, n_edges = 300, 700
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
-    ] + [(5, 5), (7, 7), (10, 20), (10, 20)]  # self-loops + dup edges
+    raw = [(rng.randrange(300), rng.randrange(300)) for _ in range(700)] + [
+        (5, 5), (7, 7), (950, 950), (10, 20), (10, 20), (20, 10), (20, 10),
+    ]
     edges = spark.createDataFrame(raw, ["src", "dst"])
-    e = edges.select(
-        edges.src.alias("u"), edges.dst.alias("v")
-    ).filter("u <> v")
+    e = edges.select(edges.src.alias("u"), edges.dst.alias("v"))
 
-    j_large = {(r["u"], r["v"]) for r in _large_star(e, pin=False).collect()}
-    w_large = {(r["u"], r["v"]) for r in _large_star_window(e).collect()}
-    assert w_large == j_large
+    got_large = {(r["u"], r["v"]) for r in _large_star_window(e).collect()}
+    assert got_large == _large_star_reference(raw)
+    got_small = {(r["u"], r["v"]) for r in _small_star_window(e).collect()}
+    assert got_small == _small_star_reference(raw)
 
-    j_small = {(r["u"], r["v"]) for r in _small_star(e, pin=False).collect()}
-    w_small = {(r["u"], r["v"]) for r in _small_star_window(e).collect()}
-    assert w_small == j_small
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window")
-    windowed = _components_as_partitions(connected_components(edges).collect())
-    assert windowed == baseline
+    assert _labels(connected_components(edges)) == _union_find_labels(raw)
 
 
-def test_nodistinct_star_impl_matches_join_impl(spark, monkeypatch):
-    """The r8 fused-dedup stars (SPARK_GRAFT_CC_STAR=window-nodistinct)
-    drop the round-final distinct and dedup each star's INPUT inside its
-    window pass instead — their output may carry bounded duplicate rows,
-    but the edge SET per star must equal the join form's exactly, the
-    duplicate multiplicity must stay bounded (output rows <= distinct
-    input edges + centers, never multiset blowup), and end-to-end labels
-    must be identical on a random multigraph with self-loops and
-    duplicate edges."""
+def test_labels_match_union_find_on_chain_and_string_keys(spark):
+    """Convergence-sensitive shapes: a 200-node chain fed in shuffled
+    order (the most alternating-star rounds for its size) and
+    string-namespaced node keys (the cluster_matched_pairs path) — the
+    probe must declare the true fixed point and only it."""
     import random
 
-    from pyspark.sql import functions as F
+    chain = [(i, i + 1) for i in range(199)]
+    random.Random(5).shuffle(chain)
+    df = spark.createDataFrame(chain, ["src", "dst"])
+    labels = _labels(connected_components(df))
+    assert labels == _union_find_labels(chain)
+    assert set(labels.values()) == {0}
 
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        _large_star,
-        _large_star_window_nodistinct,
-        _small_star,
-        _small_star_window_nodistinct,
-    )
-
-    rng = random.Random(1234)
-    n_nodes, n_edges = 300, 700
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
-    ] + [(5, 5), (7, 7), (10, 20), (10, 20), (20, 10)]  # loops + dups both ways
-    edges = spark.createDataFrame(raw, ["src", "dst"])
-    e = edges.select(
-        edges.src.alias("u"), edges.dst.alias("v")
-    ).filter("u <> v")
-
-    j_large = {(r["u"], r["v"]) for r in _large_star(e, pin=False).collect()}
-    nd_large_rows = [
-        (r["u"], r["v"]) for r in _large_star_window_nodistinct(e).collect()
-    ]
-    assert set(nd_large_rows) == j_large
-    # input dedup bounds emission: one row per DISTINCT undirected edge
-    n_distinct_edges = e.select(
-        F.least("u", "v"), F.greatest("u", "v")
-    ).distinct().count()
-    assert len(nd_large_rows) <= n_distinct_edges
-
-    j_small = {(r["u"], r["v"]) for r in _small_star(e, pin=False).collect()}
-    nd_small_rows = [
-        (r["u"], r["v"])
-        for r in _small_star_window_nodistinct(e).collect()
-    ]
-    assert set(nd_small_rows) == j_small
-    n_centers = e.select(F.greatest("u", "v")).distinct().count()
-    assert len(nd_small_rows) <= n_distinct_edges + n_centers
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window-nodistinct")
-    fused = _components_as_partitions(connected_components(edges).collect())
-    assert fused == baseline
+    named = [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9"), ("b:10", "a:9")]
+    df = spark.createDataFrame(named, ["src", "dst"])
+    assert _labels(connected_components(df)) == _union_find_labels(named)
 
 
-def test_nodistinct_star_long_chain_and_string_keys(spark, monkeypatch):
-    """Convergence-sensitive shapes under the fused-dedup stars: a long
-    chain (max alternating-star rounds for the node count) and
-    string-namespaced node keys (the cluster_matched_pairs path) — the
-    duplicate-tolerant probe must still declare the true fixed point
-    and only it."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window-nodistinct")
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], ["src", "dst"]
-    )
-    parts = _components_as_partitions(connected_components(chain).collect())
-    assert parts == {frozenset(range(201))}
+def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
+    """The caller's materialized edge list is released when the loop
+    runs zero rounds and when a round raises, not only after round 1."""
+    import pytest
 
-    named = spark.createDataFrame(
-        [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9")], ["src", "dst"]
-    )
-    parts = _components_as_partitions(connected_components(named).collect())
-    assert parts == {frozenset({"a:1", "b:2", "a:3"}), frozenset({"a:9", "b:9"})}
+    from pyspark_entity_resolution_spark.operators import clustering as C
+
+    raw_ids = []
+    loop = C._connected_components_loop
+
+    def spy(raw, *args, **kwargs):
+        raw_ids.append(raw._jdf.queryExecution().analyzed().rdd().id())
+        return loop(raw, *args, **kwargs)
+
+    monkeypatch.setattr(C, "_connected_components_loop", spy)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 4)], ["src", "dst"])
+
+    def persisted(rdd_id):
+        return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+
+    C.connected_components(edges, max_iterations=0).collect()
+    assert not persisted(raw_ids[-1])
+
+    def boom(*args):
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(C, "_round_step", boom)
+    with pytest.raises(RuntimeError, match="round failed"):
+        C.connected_components(edges)
+    assert len(raw_ids) == 2 and not persisted(raw_ids[-1])
 
 
 def test_round_stats_diagnostic_records_every_round(spark):
@@ -300,62 +288,3 @@ def test_self_loop_only_nodes_label_as_singletons(spark):
     got2 = {(r.node, r.component)
             for r in connected_components(edges2).collect()}
     assert got2 == {(1, 1), (2, 1), (4, 4), (5, 4)}
-
-
-def test_round1_small_only_knob_matches_default(spark, monkeypatch):
-    """SPARK_GRAFT_CC_ROUND1=small-only (r11 experiment knob, measured-
-    and-rejected as default) runs the first round as small-star alone.
-    Labels must be identical: every star application preserves the
-    component partition and only the fixed-point probe declares
-    convergence, so the knob can cost rounds, never correctness."""
-    import random
-
-    rng = random.Random(123)
-    n_nodes, n_edges = 400, 900
-    raw = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes))
-        for _ in range(n_edges)
-    ] + [(3, 3), (8, 8), (11, 30), (11, 30)]
-    edges = spark.createDataFrame(raw, ["src", "dst"])
-
-    monkeypatch.delenv("SPARK_GRAFT_CC_ROUND1", raising=False)
-    baseline = _components_as_partitions(connected_components(edges).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CC_ROUND1", "small-only")
-    skipped = _components_as_partitions(connected_components(edges).collect())
-    assert skipped == baseline
-
-
-def test_ingest_knob_fused_matches_staged(spark, monkeypatch):
-    """SPARK_GRAFT_CC_INGEST selects whether round 1 consumes the raw
-    filtered edge plan directly (``fused``, the r12 default — no
-    pre-loop distinct/checkpoint/count of the largest edge set the loop
-    ever sees) or the r11 staged distinct checkpoint. Labels must be
-    identical: both star forms compute duplicate-insensitive
-    per-neighborhood minima and the round-final dedup absorbs input
-    multiplicity, so the knob can only move WHERE the dedup happens."""
-    import random
-
-    rng = random.Random(7)
-    raw = [
-        (rng.randrange(300), rng.randrange(300)) for _ in range(700)
-    ] + [(5, 5), (5, 5), (950, 950), (17, 44), (17, 44), (17, 44)]
-    edges = spark.createDataFrame(raw, ["src", "dst"])
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "staged")
-    staged = sorted(
-        (r.node, r.component) for r in connected_components(edges).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "fused")
-    fused = sorted(
-        (r.node, r.component) for r in connected_components(edges).collect()
-    )
-    assert fused == staged
-
-
-def test_ingest_knob_rejects_typos(spark, monkeypatch):
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_INGEST", "Fused ")
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with pytest.raises(ValueError, match="SPARK_GRAFT_CC_INGEST"):
-        connected_components(edges).collect()

@@ -176,14 +176,10 @@ def test_batch_ingest_join_carries_no_payload_arrays(spark):
     assert all("__arr_vec" not in ln for ln in eexplode), eexplode
 
 
-def test_window_star_rounds_are_join_free(spark, monkeypatch):
-    """The r7 connected-components default computes each star's
-    per-node minimum with a window function — the plan of one
-    alternating round must contain NO join operator (the join form's
-    exchange + aggregation + probe is exactly what the rewrite
-    removed), while the join form's round must contain joins. Guards
-    against a future edit quietly reintroducing a join on the
-    iterated path, where it costs per round."""
+def test_star_round_is_two_windows_no_join(spark):
+    """One connected-components round is two window shuffle+sort passes
+    (one per star) plus the round-final distinct's HashAggregate, with
+    no join: a join on the iterated path would cost once per round."""
     from pyspark.sql import functions as F
 
     from pyspark_entity_resolution_spark.operators.clustering import (
@@ -194,48 +190,10 @@ def test_window_star_rounds_are_join_free(spark, monkeypatch):
         [(1, 2), (2, 3), (5, 6)], ["u", "v"]
     ).select(F.col("u").cast("long"), F.col("v").cast("long"))
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window")
-    wplan = _round_step(e, pin=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "join")
-    jplan = _round_step(e, pin=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Join" not in wplan, wplan
-    assert "Window" in wplan
-    assert "Join" in jplan  # the reference form keeps its joins
-
-
-def test_nodistinct_star_round_is_two_exchanges(spark, monkeypatch):
-    """The r8 window-nodistinct CC round must be exactly TWO exchanges
-    (one per star's window) with zero joins and zero aggregates — the
-    variant's entire reason to exist is dropping the round-final
-    distinct's exchange + hash-aggregate pair. (It stays a knob, not
-    the default: at 100M edges the fatter un-deduped shuffles measured
-    a wash against the saved exchange — see _round_step.) The default
-    round must keep the r7 window shape: two windows, the distinct's
-    aggregate pair, still join-free."""
-    from pyspark.sql import functions as F
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        _round_step,
-    )
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], ["u", "v"]
-    ).select(F.col("u").cast("long"), F.col("v").cast("long"))
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_STAR", "window-nodistinct")
-    plan = _round_step(e, pin=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("Exchange") == 2, plan
-    assert "Join" not in plan and "HashAggregate" not in plan, plan
-    assert plan.count("Window") == 2
-
-    monkeypatch.delenv("SPARK_GRAFT_CC_STAR")
-    dplan = _round_step(e, pin=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert dplan.count("Window") == 2 and "Join" not in dplan
-    assert "HashAggregate" in dplan  # the round-final distinct
+    plan = _round_step(e)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Window") == 2, plan
+    assert "Join" not in plan, plan
+    assert "HashAggregate" in plan, plan
 
 
 def test_cc_adaptive_oracle_equals_static_at_gate_scale():

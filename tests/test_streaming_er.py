@@ -1000,6 +1000,33 @@ def test_lease_wait_retries_through_benign_contention(spark, tmp_path):
     ser._release_store_lease(spark, labels_path, held)
 
 
+def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
+    """A lease released between the failed create-exclusive and the
+    existence probe is still contention — RuntimeError, which
+    ``lease_wait`` retries — not a raw filesystem error that escapes
+    the bounded wait."""
+    import pytest
+
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    class ReleasedMeanwhile:
+        def getFileSystem(self, conf):
+            return self
+
+        def create(self, path, overwrite):
+            raise OSError(
+                "org.apache.hadoop.fs.FileAlreadyExistsException: "
+                "File already exists"
+            )
+
+        def exists(self, path):
+            return False
+
+    monkeypatch.setattr(ser, "_lease_path", lambda *a: ReleasedMeanwhile())
+    with pytest.raises(RuntimeError, match="locked by another writer"):
+        ser._acquire_store_lease(spark, "/store", "me")
+
+
 def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
     """The fold's pre-write probes are driver round trips on the
     micro-batch critical path. r6 folded the hit-component count into

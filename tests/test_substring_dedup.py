@@ -203,3 +203,20 @@ def test_hash_encoding_knob_rejects_typos(spark, monkeypatch):
     df = _docs(spark, [(0, _text(*range(20)))])
     with pytest.raises(ValueError, match="SPARK_GRAFT_SUBSTR_HASH"):
         window_fingerprints(df, w=10).collect()
+
+
+def test_xx128_halves_are_independent(spark, monkeypatch):
+    """Spark chains multi-argument hashes (each argument's hash seeds
+    the next), so ``xxhash64(s, lit(1))`` would make the second half
+    ``XXH64.hashInt(1, seed=h1)`` — a pure function of the first and a
+    64-bit collision class. The literal-first form must not be."""
+    monkeypatch.delenv("SPARK_GRAFT_SUBSTR_HASH", raising=False)
+    shared = list(range(100, 115))
+    df = _docs(spark, [(0, _text(*range(0, 5), *shared)), (1, _text(*shared))])
+    rows = window_fingerprints(df, w=10).select("wh.h1", "wh.h2").collect()
+    assert rows
+    xxh64 = spark._jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+    for h1, h2 in rows:
+        # instance form of the static XXH64.hashInt(1, h1): py4j's static
+        # lookup on this class fails once other reflection calls ran
+        assert h2 != xxh64(h1).hashInt(1)

@@ -84,8 +84,8 @@ def main() -> None:
     ap.add_argument("--scale-partitions", type=int, default=1)
     ap.add_argument(
         "--env", action="append", default=[], metavar="REF:KEY=VAL",
-        help="per-ARM env var (e.g. 'HEAD:SPARK_GRAFT_CC_ROUND1=small-"
-             "only') — lets one invocation A/B a knob at the SAME "
+        help="per-ARM env var (e.g. 'HEAD~0:SPARK_DRIVER_MEMORY=16g') "
+             "— lets one invocation A/B a knob at the SAME "
              "commit; pass the same ref twice and tag one arm")
     args = ap.parse_args()
     arm_env: dict[str, dict] = {}

@@ -88,11 +88,8 @@ def extra_plan_dfs(spark) -> dict[str, tuple[str, object]]:
     `connected_components_labels` converges before returning, so its
     output DF is a bare checkpoint scan (its section above is empty by
     construction) — the plan that matters at 100 TB is the alternating
-    STAR ROUND executed per iteration. Dump it under the default
-    implementation (SPARK_GRAFT_CC_STAR unset -> window since r7) so
-    PLANS.md documents the plan the gate and bench actually iterate;
-    r7 shipped the window form and this document kept silently
-    describing the join era."""
+    STAR ROUND executed per iteration, so PLANS.md documents the plan
+    the gate and bench actually iterate."""
     from pyspark.sql import functions as F
 
     from pyspark_entity_resolution_spark.operators.clustering import _round_step
@@ -103,14 +100,11 @@ def extra_plan_dfs(spark) -> dict[str, tuple[str, object]]:
     return {
         "cc_round_step_default": (
             "ONE alternating large+small star round of "
-            "connected_components under the DEFAULT implementation "
-            "(SPARK_GRAFT_CC_STAR unset = window-function stars, the "
-            "r7 join-free form; the r8 window-nodistinct variant was "
-            "measured-and-rejected as default — see _round_step) — "
+            "connected_components (window-function stars, join-free) — "
             "the plan connected_components_labels executes per "
             "iteration; its own section above is empty because the "
             "returned DF is the converged checkpoint.",
-            _round_step(e, pin=False),
+            _round_step(e),
         ),
     }
 
