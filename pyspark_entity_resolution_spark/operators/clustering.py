@@ -17,6 +17,12 @@ a round-final ``distinct`` — no joins (:func:`_round_step`) — with
 final component id is the MIN node id in the component —
 deterministic, unlike the reference's enumeration-order cluster ids
 (SURVEY.md §7.3: tests compare cluster *partitions*, not ids).
+
+Small graphs skip the rounds: at most ``target_edges_per_partition``
+edges (the size at which the loop would run on one shuffle partition
+anyway) are collected once and labeled on the driver by a union-find
+(:func:`_label_on_driver`), so driver memory holds at most that many
+edges; the result is a local relation with the same labels.
 """
 
 from __future__ import annotations
@@ -151,6 +157,14 @@ def connected_components(
 
     Execution notes (deliberate, documented trade-offs):
 
+    - SMALL GRAPHS ARE LABELED ON THE DRIVER: when the edge count is at
+      most ``target_edges_per_partition`` the edges are collected once
+      (so the driver holds at most that many edges) and labeled by a
+      union-find whose roots are component minima; the result is a
+      local DataFrame with the same contract (null-endpoint edges
+      dropped, self-loop-only nodes as singletons, every node once) and
+      ``LAST_RUN_ROUND_STATS`` reads ``[]``. Larger graphs run the star
+      rounds below.
     - EAGER at call time: the caller's edge plan is materialized once
       (``localCheckpoint`` + count) so the iterative rounds never
       re-evaluate an expensive upstream candidate join. This is not a
@@ -196,6 +210,13 @@ def connected_components(
         storageLevel=checkpoint_storage
     )
     n_edges = raw.count()  # one tiny job on the checkpointed rows
+    if n_edges <= target_edges_per_partition:
+        # one partition's worth of edges: the rounds would be one core's
+        # work plus a dozen jobs of fixed cost, so label them in-process
+        try:
+            return _label_on_driver(raw)
+        finally:
+            _release_checkpoint(raw)
 
     # size the loop's shuffle width to the EDGE volume, not the session
     # default: the rounds iterate on the (small) edge list, and a
@@ -260,12 +281,56 @@ def connected_components(
 # the round's star step + materializing count (+ fixed-point probe on
 # probed rounds), 'edges': the round's output edge count, 'probed':
 # whether the count plateau let the convergence probe run}. Written by
-# _connected_components_loop, read by tools/scale_probe.py century-cc
+# _connected_components_loop (and reset to [] by the driver-side
+# labeling, which runs no rounds), read by tools/scale_probe.py century-cc
 # (r8 judge task #8: the 100M-edge leg reads 375-730 s night-to-night
 # and one total can't say whether the variance is round-count or
 # per-round shuffle time). Driver-side diagnostic only — last call
 # wins; not part of the result contract and not thread-safe.
 LAST_RUN_ROUND_STATS: list = []
+
+
+def _label_on_driver(raw: DataFrame) -> DataFrame:
+    """Label the (small) checkpointed edge list ``raw(u, v)`` on the
+    driver: one collect, a union-find whose merges hang the larger root
+    under the smaller one (so every root is its component's minimum,
+    the loop's labeling), and the labels back as a local DataFrame of
+    the endpoints' common type. Edges with a null endpoint are dropped,
+    as the loop's ``u == v`` / ``u != v`` filters drop them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    global LAST_RUN_ROUND_STATS
+    LAST_RUN_ROUND_STATS = []
+    # the type the loop's union of both endpoint columns resolves to
+    key = raw.select("u").union(raw.select("v")).schema[0].dataType
+    rows = (
+        raw.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .select(F.col("u").cast(key), F.col("v").cast(key))
+        .collect()
+    )
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in rows:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    schema = StructType(
+        [StructField("node", key), StructField("component", key)]
+    )
+    table = pa.Table.from_pydict(
+        {"node": list(parent), "component": [find(x) for x in parent]},
+        schema=to_arrow_schema(schema),
+    )
+    return raw.sparkSession.createDataFrame(table, schema)
 
 
 def _connected_components_loop(

@@ -2,10 +2,14 @@
 
 Operates on a prefixed pair DataFrame (columns ``{l}_authors``,
 ``{l}_title``, ``{l}_num_authors``, ``{l}_venue`` and the ``{r}_*`` twins).
-The filter order — venue agreement first, then Levenshtein band, then the
-match rule, then Jaccard — matches the reference's manual expression
-ordering; since each filter precedes the projection it depends on, Catalyst
-preserves the cheap-before-expensive evaluation.
+The filter order — author-count agreement first, then venue agreement, then
+Levenshtein band, then the match rule, then Jaccard — is the reference's
+manual expression ordering with the rule's shared ``num_authors`` equality
+hoisted to the front: every band of the rule requires it, so it drops only
+pairs the rule drops, and as an equality between the two sides Catalyst
+makes it a key of the blocked join instead of a post-join filter. Since
+each filter precedes the projection it depends on, Catalyst preserves the
+cheap-before-expensive evaluation.
 """
 
 from __future__ import annotations
@@ -28,9 +32,9 @@ def score_and_match(
     max_levenshtein: int = 10,
     min_jaccard: float = 0.6,
 ) -> DataFrame:
-    """Filter venue-agreeing pairs, score author Levenshtein (-> ``scores``),
-    apply the three-band rule, score title Jaccard (-> ``title_jaccard_sim``)
-    and keep pairs above threshold."""
+    """Filter author-count- and venue-agreeing pairs, score author
+    Levenshtein (-> ``scores``), apply the three-band rule, score title
+    Jaccard (-> ``title_jaccard_sim``) and keep pairs above threshold."""
     l, r = left_prefix, right_prefix
     venues = DEFAULT_VENUES if venues is None else venues
 
@@ -41,8 +45,10 @@ def score_and_match(
     # rows and score values, substantially less work on long author strings
     scores = F.levenshtein(f"{l}_authors", f"{r}_authors", max_levenshtein - 1)
 
+    same_n_authors = F.col(f"{l}_num_authors") == F.col(f"{r}_num_authors")
     scored = (
-        pairs.filter(same_venue)
+        pairs.filter(same_n_authors)
+        .filter(same_venue)
         .withColumn(SCORE_COL, scores)
         .filter(F.col(SCORE_COL) >= 0)
         .filter(

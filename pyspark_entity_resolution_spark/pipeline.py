@@ -6,8 +6,10 @@ Composition of the stage operators, mirroring the reference's five stages
     parse -> filter -> clean -> block -> match -> cluster -> resolve
 
 Stage boundaries are plain DataFrames; callers choose whether to
-materialize (parquet) or keep the plan fused. No driver-side loops, no
-collect() anywhere on the data path.
+materialize (parquet) or keep the plan fused. No driver-side loops over
+records; the one collect() on the data path is bounded — clustering
+labels a match graph of at most ``target_edges_per_partition`` edges on
+the driver (operators/clustering.py), larger graphs stay distributed.
 """
 
 from __future__ import annotations

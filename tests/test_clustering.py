@@ -6,6 +6,10 @@ from pyspark_entity_resolution_spark.operators.clustering import (
     connected_components,
 )
 
+# Both labeling paths: the default bound sends these small graphs to the
+# driver-side union-find, a bound of one edge forces the star rounds.
+CC_PATHS = {"driver": {}, "star_loop": {"target_edges_per_partition": 1}}
+
 
 def _components_as_partitions(rows):
     from collections import defaultdict
@@ -89,7 +93,9 @@ def test_explicit_checkpoint_storage_and_probes(spark):
     )
     got = _components_as_partitions(
         connected_components(
-            edges, checkpoint_storage=StorageLevel.DISK_ONLY
+            edges,
+            checkpoint_storage=StorageLevel.DISK_ONLY,
+            target_edges_per_partition=1,
         ).collect()
     )
     assert got == {frozenset({"a", "b", "c"}), frozenset({"x", "y"})}
@@ -185,58 +191,72 @@ def test_window_stars_match_kiveris_definitions(spark):
     got_small = {(r["u"], r["v"]) for r in _small_star_window(e).collect()}
     assert got_small == _small_star_reference(raw)
 
-    assert _labels(connected_components(edges)) == _union_find_labels(raw)
+    assert _labels(
+        connected_components(edges, target_edges_per_partition=1)
+    ) == _union_find_labels(raw)
 
 
 def test_labels_match_union_find_on_chain_and_string_keys(spark):
     """Convergence-sensitive shapes: a 200-node chain fed in shuffled
     order (the most alternating-star rounds for its size) and
     string-namespaced node keys (the cluster_matched_pairs path) — the
-    probe must declare the true fixed point and only it."""
+    probe must declare the true fixed point and only it, and the
+    driver-side labeling must agree with it."""
     import random
 
     chain = [(i, i + 1) for i in range(199)]
     random.Random(5).shuffle(chain)
-    df = spark.createDataFrame(chain, ["src", "dst"])
-    labels = _labels(connected_components(df))
-    assert labels == _union_find_labels(chain)
-    assert set(labels.values()) == {0}
-
+    chain_df = spark.createDataFrame(chain, ["src", "dst"])
     named = [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9"), ("b:10", "a:9")]
-    df = spark.createDataFrame(named, ["src", "dst"])
-    assert _labels(connected_components(df)) == _union_find_labels(named)
+    named_df = spark.createDataFrame(named, ["src", "dst"])
+    for path, kw in CC_PATHS.items():
+        labels = _labels(connected_components(chain_df, **kw))
+        assert labels == _union_find_labels(chain), path
+        assert set(labels.values()) == {0}, path
+        got = _labels(connected_components(named_df, **kw))
+        assert got == _union_find_labels(named), path
 
 
 def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
     """The caller's materialized edge list is released when the loop
-    runs zero rounds and when a round raises, not only after round 1."""
+    runs zero rounds and when a round raises, not only after round 1,
+    and after the driver-side labeling of a small graph."""
     import pytest
 
     from pyspark_entity_resolution_spark.operators import clustering as C
 
     raw_ids = []
-    loop = C._connected_components_loop
 
-    def spy(raw, *args, **kwargs):
-        raw_ids.append(raw._jdf.queryExecution().analyzed().rdd().id())
-        return loop(raw, *args, **kwargs)
+    def spying(fn):
+        def spy(raw, *args, **kwargs):
+            raw_ids.append(raw._jdf.queryExecution().analyzed().rdd().id())
+            return fn(raw, *args, **kwargs)
 
-    monkeypatch.setattr(C, "_connected_components_loop", spy)
+        return spy
+
+    monkeypatch.setattr(
+        C, "_connected_components_loop", spying(C._connected_components_loop)
+    )
+    monkeypatch.setattr(C, "_label_on_driver", spying(C._label_on_driver))
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 4)], ["src", "dst"])
+    loop = CC_PATHS["star_loop"]
 
     def persisted(rdd_id):
         return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
 
-    C.connected_components(edges, max_iterations=0).collect()
+    C.connected_components(edges, max_iterations=0, **loop).collect()
     assert not persisted(raw_ids[-1])
+
+    C.connected_components(edges).collect()
+    assert len(raw_ids) == 2 and not persisted(raw_ids[-1])
 
     def boom(*args):
         raise RuntimeError("round failed")
 
     monkeypatch.setattr(C, "_round_step", boom)
     with pytest.raises(RuntimeError, match="round failed"):
-        C.connected_components(edges)
-    assert len(raw_ids) == 2 and not persisted(raw_ids[-1])
+        C.connected_components(edges, **loop)
+    assert len(raw_ids) == 3 and not persisted(raw_ids[-1])
 
 
 def test_round_stats_diagnostic_records_every_round(spark):
@@ -252,7 +272,9 @@ def test_round_stats_diagnostic_records_every_round(spark):
         (F.abs(F.xxhash64("id")) % 600).alias("src"),
         (F.abs(F.xxhash64(F.col("id") + 7)) % 600).alias("dst"),
     )
-    clustering.connected_components(edges).count()
+    clustering.connected_components(
+        edges, target_edges_per_partition=1
+    ).count()
     stats = clustering.LAST_RUN_ROUND_STATS
     assert stats, "no rounds recorded"
     assert all(s["sec"] > 0 for s in stats)
@@ -260,7 +282,8 @@ def test_round_stats_diagnostic_records_every_round(spark):
     assert stats[-1]["probed"] is True  # converged via the gated probe
     # a fresh call replaces the sink (last call wins)
     clustering.connected_components(
-        spark.createDataFrame([(1, 2)], "src long, dst long")
+        spark.createDataFrame([(1, 2)], "src long, dst long"),
+        target_edges_per_partition=1,
     ).count()
     assert clustering.LAST_RUN_ROUND_STATS is not stats
 
@@ -271,20 +294,62 @@ def test_self_loop_only_nodes_label_as_singletons(spark):
     still come back as their own component, nodes with both a self-loop
     and a real edge must not be double-labeled, and a pure
     no-self-loop input must cover every node (the empty-selfs fast
-    path)."""
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        connected_components,
-    )
-
+    path) — on both labeling paths."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (900, 900), (900, 900), (901, 901), (3, 3)],
         ["src", "dst"],
     )
-    got = {(r.node, r.component)
-           for r in connected_components(edges).collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (900, 900), (901, 901)}
-    # empty-selfs fast path: all nodes labeled, no singleton branch
     edges2 = spark.createDataFrame([(1, 2), (4, 5)], ["src", "dst"])
-    got2 = {(r.node, r.component)
-            for r in connected_components(edges2).collect()}
-    assert got2 == {(1, 1), (2, 1), (4, 4), (5, 4)}
+    for path, kw in CC_PATHS.items():
+        got = [(r.node, r.component)
+               for r in connected_components(edges, **kw).collect()]
+        assert sorted(got) == [(1, 1), (2, 1), (3, 1), (900, 900), (901, 901)], path
+        # empty-selfs fast path: all nodes labeled, no singleton branch
+        got2 = {(r.node, r.component)
+                for r in connected_components(edges2, **kw).collect()}
+        assert got2 == {(1, 1), (2, 1), (4, 4), (5, 4)}, path
+
+
+def test_null_endpoint_edges_dropped_on_both_paths(spark):
+    """An edge with a null endpoint carries no node (the loop's
+    ``u == v`` / ``u != v`` filters are null-rejecting); the driver-side
+    labeling must drop exactly the same edges."""
+    edges = spark.createDataFrame(
+        [("a", None), (None, "b"), ("c", "d"), (None, None), ("e", "e")],
+        "src string, dst string",
+    )
+    for path, kw in CC_PATHS.items():
+        got = [(r.node, r.component)
+               for r in connected_components(edges, **kw).collect()]
+        assert sorted(got) == [("c", "c"), ("d", "c"), ("e", "e")], path
+
+
+def test_small_graph_runs_at_most_five_jobs(spark):
+    """A graph within one partition's edge budget is labeled on the
+    driver: materialize, count and one collect — not a dozen star-round
+    jobs of fixed cost (the round loop ran 23 on this graph)."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (6, 6), (7, 1)], "src long, dst long"
+    )
+    sc.setJobGroup("cc-small-graph-jobs", "connected_components job count")
+    try:
+        rows = connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-small-graph-jobs")
+    assert len(rows) == 7
+    assert len(jobs) <= 5, jobs
+
+
+def test_small_call_after_large_resets_round_stats(spark):
+    """LAST_RUN_ROUND_STATS describes the most recent call: a small
+    (driver-labeled) graph after a star-loop run reports no rounds
+    instead of the previous call's."""
+    from pyspark_entity_resolution_spark.operators import clustering
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    clustering.connected_components(edges, **CC_PATHS["star_loop"])
+    assert clustering.LAST_RUN_ROUND_STATS
+    clustering.connected_components(edges)
+    assert clustering.LAST_RUN_ROUND_STATS == []

@@ -32,17 +32,25 @@ def test_text_stats_on_degenerate_text(spark):
     assert by_n[2]["lang"] == "und"  # no marker words
 
 
+# the default edge bound labels these graphs on the driver; a bound of
+# one edge sends any non-empty graph through the star rounds
+CC_PATHS = ({}, {"target_edges_per_partition": 1})
+
+
 def test_connected_components_empty_edges(spark):
     edges = spark.createDataFrame([], "src string, dst string")
-    assert connected_components(edges).count() == 0
+    for kw in CC_PATHS:
+        assert connected_components(edges, **kw).count() == 0, kw
 
 
 def test_connected_components_self_loops_only(spark):
     edges = spark.createDataFrame([("a", "a"), ("b", "b")], ["src", "dst"])
     # self-loops carry no connectivity, but the nodes still exist ->
     # singleton components (contract: every node appearing in edges)
-    rows = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
-    assert rows == {("a", "a"), ("b", "b")}
+    for kw in CC_PATHS:
+        labels = connected_components(edges, **kw).collect()
+        rows = [(r["node"], r["component"]) for r in labels]
+        assert sorted(rows) == [("a", "a"), ("b", "b")], kw
 
 
 def test_dedup_on_empty_documents(spark):

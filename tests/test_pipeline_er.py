@@ -52,6 +52,24 @@ def test_blocked_match_equals_oracle(spark, cleaned, fixture_paths, window):
     assert got == expected
 
 
+def test_author_count_is_a_blocked_join_key(spark, cleaned):
+    """Every match-rule band requires equal author counts, so the
+    equality filter comes first and Catalyst keys the blocked join on
+    it: the Levenshtein DP never sees a pair with unequal counts."""
+    import re
+
+    a, b = cleaned
+    df = match_publications(a, b, ERConfig(window=3))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # "<Join> [left keys], [right keys], <type>, ..." — keys only, not
+    # the residual condition (which mentions num_authors either way)
+    keys = re.findall(r"Join \[([^\]]*)\], \[([^\]]*)\]", plan)
+    assert keys, plan
+    assert any(
+        "a_num_authors" in lk and "b_num_authors" in rk for lk, rk in keys
+    ), keys
+
+
 def test_blocked_subset_of_full_and_quality(spark, cleaned, fixture_paths):
     _, _, recs_a, recs_b = fixture_paths
     a, b = cleaned

@@ -10,6 +10,10 @@ Usage:
     python tools/ab_cc_probe.py REF1 REF2 [--passes 2] \
         [--edges 10000000] [--nodes 5000000] [--scale-partitions 1]
 
+A REF naming an existing directory is used as the checkout as-is (for
+example a `git clone` of the parent commit, or the working tree);
+any other REF is a git ref checked out into a cached detached worktree.
+
 Output: one JSON line per (pass, ref), then min/median per ref.
 """
 
@@ -106,7 +110,10 @@ def main() -> None:
                          "alias one arm (e.g. HEAD vs HEAD~0)")
             seen.add(r)
 
-    trees = {ref: _worktree(ref) for ref in args.refs}
+    trees = {
+        ref: os.path.abspath(ref) if os.path.isdir(ref) else _worktree(ref)
+        for ref in args.refs
+    }
     results: dict[str, list] = {ref: [] for ref in args.refs}
     for p in range(args.passes):
         order = args.refs if p % 2 == 0 else list(reversed(args.refs))

@@ -85,11 +85,13 @@ def committed_digests(path: str = "/root/repo/PLANS.md") -> dict[str, str]:
 
 def extra_plan_dfs(spark) -> dict[str, tuple[str, object]]:
     """Plans worth pinning that are not a registry query's OUTPUT plan.
-    `connected_components_labels` converges before returning, so its
-    output DF is a bare checkpoint scan (its section above is empty by
-    construction) — the plan that matters at 100 TB is the alternating
-    STAR ROUND executed per iteration, so PLANS.md documents the plan
-    the gate and bench actually iterate."""
+    `connected_components_labels` labels its graph before returning, so
+    its output DF holds no labeling operator (its section above is empty
+    by construction): at sf0.01 the graph is within one partition's edge
+    bound and the output is the driver-side union-find's local relation,
+    above the bound it is the converged checkpoint scan. The plan that
+    matters at 100 TB is the alternating STAR ROUND executed per
+    iteration above the bound, so PLANS.md documents that plan."""
     from pyspark.sql import functions as F
 
     from pyspark_entity_resolution_spark.operators.clustering import _round_step
@@ -101,9 +103,11 @@ def extra_plan_dfs(spark) -> dict[str, tuple[str, object]]:
         "cc_round_step_default": (
             "ONE alternating large+small star round of "
             "connected_components (window-function stars, join-free) — "
-            "the plan connected_components_labels executes per "
-            "iteration; its own section above is empty because the "
-            "returned DF is the converged checkpoint.",
+            "the plan executed per iteration on graphs above "
+            "target_edges_per_partition edges; connected_components_labels' "
+            "own section above is empty because the returned DF is "
+            "already labeled (a local relation at sf0.01, a checkpoint "
+            "above the bound).",
             _round_step(e),
         ),
     }
