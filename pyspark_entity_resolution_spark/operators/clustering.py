@@ -30,6 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Row bound of the driver-side labeling paths: a graph of at most this
+# many edges is collected and labeled in-process (the size at which the
+# star loop would run on one shuffle partition anyway). Also bounds each
+# collect of the incremental fold's driver path (streaming/er.py).
+DRIVER_BOUND = 100_000
+
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Best-effort unpersist of a ``localCheckpoint`` result's backing
@@ -146,7 +152,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    target_edges_per_partition: int = 100_000,
+    target_edges_per_partition: int = DRIVER_BOUND,
     checkpoint_storage=None,
     disk_only_above_edges: int = 20_000_000,
 ) -> DataFrame:
@@ -290,13 +296,34 @@ def connected_components(
 LAST_RUN_ROUND_STATS: list = []
 
 
+def _min_root_labels(pairs) -> dict:
+    """``{node: component}`` for the non-null ``(u, v)`` pairs: a
+    union-find whose merges hang the larger root under the smaller one,
+    so every component is labeled by its minimum node, the star loop's
+    labeling. Every endpoint appears once; a self-loop-only node labels
+    itself."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
 def _label_on_driver(raw: DataFrame) -> DataFrame:
     """Label the (small) checkpointed edge list ``raw(u, v)`` on the
-    driver: one collect, a union-find whose merges hang the larger root
-    under the smaller one (so every root is its component's minimum,
-    the loop's labeling), and the labels back as a local DataFrame of
-    the endpoints' common type. Edges with a null endpoint are dropped,
-    as the loop's ``u == v`` / ``u != v`` filters drop them."""
+    driver: one collect, :func:`_min_root_labels`, and the labels back
+    as a local DataFrame of the endpoints' common type. Edges with a
+    null endpoint are dropped, as the loop's ``u == v`` / ``u != v``
+    filters drop them."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
@@ -310,24 +337,12 @@ def _label_on_driver(raw: DataFrame) -> DataFrame:
         .select(F.col("u").cast(key), F.col("v").cast(key))
         .collect()
     )
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in rows:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
+    labels = _min_root_labels(rows)
     schema = StructType(
         [StructField("node", key), StructField("component", key)]
     )
     table = pa.Table.from_pydict(
-        {"node": list(parent), "component": [find(x) for x in parent]},
+        {"node": list(labels), "component": list(labels.values())},
         schema=to_arrow_schema(schema),
     )
     return raw.sparkSession.createDataFrame(table, schema)

@@ -38,6 +38,25 @@ from ..functions.text import char_shingles, fingerprint_md5, tokens, word_shingl
 HEX = "0123456789abcdef"
 
 
+def _size_band(a: str, b: str, threshold: float) -> Column:
+    """Set sizes ``a`` and ``b`` within the factor a Jaccard of at least
+    ``threshold`` allows: jaccard >= t forces |A| >= t|B| and
+    |B| >= t|A| (intersection <= min, union >= max). A prefilter only —
+    the exact ``jaccard >= threshold`` decides — so it compares against
+    :func:`_below_product`."""
+    return (F.col(a) >= _below_product(threshold, F.col(b))) & (
+        F.col(b) >= _below_product(threshold, F.col(a))
+    )
+
+
+def _below_product(threshold: float, n: Column) -> Column:
+    """``threshold * n`` shaved by a relative 1e-12, so float rounding can
+    never lift it above the exact product (``0.55 * 100`` evaluates to
+    ``55.00000000000001``, which would drop a pair at exactly the
+    threshold). Bounds built on it are conservative."""
+    return F.lit(threshold * (1 - 1e-12)) * n
+
+
 # ------------------------------------------------------------- exact --
 
 def exact_duplicates(
@@ -320,14 +339,10 @@ def verify_token_jaccard(
     jac = F.try_divide(
         inter.cast("double"), F.col("a_nt") + F.col("b_nt") - inter
     )
-    # size-band prefilter, implied by the threshold: jaccard >= t forces
-    # |A| >= t|B| and |B| >= t|A| (intersection <= min, union >= max), so
-    # pairs outside the band skip the expensive per-pair array_intersect.
-    # Result set provably unchanged.
-    size_band = (
-        (F.col("a_nt") >= F.lit(threshold) * F.col("b_nt"))
-        & (F.col("b_nt") >= F.lit(threshold) * F.col("a_nt"))
-    )
+    # size-band prefilter, implied by the threshold: pairs outside the
+    # band skip the expensive per-pair array_intersect. Result set
+    # provably unchanged.
+    size_band = _size_band("a_nt", "b_nt", threshold)
     return (
         candidates.join(a, on="a_id")
         .join(b, on="b_id")
@@ -623,10 +638,7 @@ def ngram_jaccard_pairs(
     # jaccard >= t implies the gram-set sizes are within a 1/t factor:
     # cheap scalar band filter ahead of everything else (result set
     # provably unchanged)
-    size_band = (
-        (F.col("a_ng") >= F.lit(threshold) * F.col("b_ng"))
-        & (F.col("b_ng") >= F.lit(threshold) * F.col("a_ng"))
-    )
+    size_band = _size_band("a_ng", "b_ng", threshold)
     # exact verification: |A ∪ B| = |A| + |B| - |A ∩ B| (arrays are
     # pre-deduplicated) — one array pass per surviving pair
     inter = F.size(F.array_intersect("a_grams", "b_grams"))
@@ -714,7 +726,9 @@ def ngram_jaccard_pairs(
             ).alias("sg")
         )
     )
-    prefix_len = F.col("ng") - F.ceil(F.lit(threshold) * F.col("ng")) + F.lit(1)
+    prefix_len = (
+        F.col("ng") - F.ceil(_below_product(threshold, F.col("ng"))) + F.lit(1)
+    )
     # slim exploded prefix rows: (id, block, ng, prefix gram) — a pair
     # sharing several prefix grams is emitted once per shared gram and
     # deduplicated on (a_id, b_id); rows stay a few dozen bytes so the
@@ -1021,10 +1035,7 @@ def _match_candidates_verify(
     jac = F.try_divide(
         inter.cast("double"), F.col("__arr_nt") + F.col("__acc_nt") - inter
     )
-    size_band = (
-        (F.col("__arr_nt") >= F.lit(threshold) * F.col("__acc_nt"))
-        & (F.col("__acc_nt") >= F.lit(threshold) * F.col("__arr_nt"))
-    )
+    size_band = _size_band("__arr_nt", "__acc_nt", threshold)
     return (
         cands.join(prof, on="__acc_id")
         .filter(size_band)

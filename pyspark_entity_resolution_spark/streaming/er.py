@@ -163,11 +163,11 @@ def streaming_match_publications(
 
 # ------------------------------------------ incremental entity emission --
 
-def _node_bucket(n_buckets: int) -> Column:
+def _node_bucket(n_buckets: int, node: Column | str = "node") -> Column:
     """Stable hash bucket of a node key — the label-store partition
     column. MUST be computed identically every batch (xxhash64 is
     seed-stable across sessions)."""
-    return F.pmod(F.xxhash64(F.col("node")), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(node), F.lit(n_buckets)).cast("int")
 
 
 @dataclass
@@ -176,28 +176,42 @@ class FoldReport:
     :func:`incremental_entity_labels` so observability is the
     function's contract, not a process global.
 
-    ``labels`` is the full current label table (``node, component``) —
-    the value pre-r6 callers received directly. ``expansion_buckets``
-    is the bucket list the member expansion was pruned to (``None`` on
-    a full-store fallback: index absent/behind, or a cold start).
-    ``expansion_plan`` is the formatted physical plan of the executed
-    expansion scan (its ``PartitionFilters`` line shows the pruning) —
-    a string, never a live DataFrame, because the fold's dynamic
-    overwrite replaces the scanned files and re-executing such a plan
-    after the fold would read deleted files. ``n_hit_components``
-    counts the previously-known components this batch touched
-    (``None`` on cold start or when the index was absent — the fold
-    then never needed the number). ``written_buckets`` is the sorted
-    bucket list this fold actually rewrote (changed rows only — the
-    r6 diff-based write; ``None`` on cold start, where every bucket is
-    laid down)."""
+    ``labels`` is the full current label table (``node, component``),
+    read from the store at ``labels_path`` only when the property is
+    accessed (a fold pays no store listing for a table its caller may
+    never read); it reflects the store at access time.
+    ``expansion_buckets`` is the bucket list the member expansion was
+    pruned to (``None`` on a full-store fallback: index absent/behind,
+    or a cold start). ``expansion_plan`` is the formatted physical plan
+    of the expansion scan (its ``PartitionFilters`` line shows the
+    pruning) — a string, never a live DataFrame, because the fold's
+    dynamic overwrite replaces the scanned files and re-executing such
+    a plan after the fold would read deleted files. ``n_hit_components``
+    counts the previously-known components this batch touched (``None``
+    on cold start or when the index was absent — the fold then never
+    needed the number). ``written_buckets`` is the sorted bucket list
+    this fold actually rewrote (changed rows only; ``None`` on cold
+    start, where every bucket is laid down). ``on_driver`` tells whether
+    the fold took the driver path (every collect under
+    ``clustering.DRIVER_BOUND`` rows) or the distributed one."""
 
-    labels: DataFrame
+    labels_path: str
     expansion_buckets: list[int] | None = None
     expansion_plan: str | None = None
     n_hit_components: int | None = None
     cold_start: bool = False
     written_buckets: list[int] | None = None
+    on_driver: bool = False
+
+    @property
+    def labels(self) -> DataFrame:
+        from pyspark.sql import SparkSession
+
+        return (
+            SparkSession.active()
+            .read.parquet(self.labels_path)
+            .select("node", "component")
+        )
 
 
 def _lease_path(spark, labels_path: str):
@@ -423,18 +437,23 @@ def _check_store_meta(spark, labels_path: str, n_buckets: int) -> None:
         )
 
 
-def _write_component_index(labels: DataFrame, cidx_path: str, dynamic: bool) -> None:
-    """(Re)write component->bucket index rows. ``labels`` must carry
-    (component, bucket); with ``dynamic=True`` only the partitions
-    present in ``labels`` are replaced (per-fold maintenance), otherwise
-    the whole index is laid down (cold start / migration)."""
-    writer = (
-        labels.select("component", "bucket").distinct()
-        .write.mode("overwrite")
-    )
+def _write_buckets(df: DataFrame, path: str, dynamic: bool = True) -> None:
+    """Write ``df`` partitioned by ``bucket``; with ``dynamic=True`` only
+    the partitions present in ``df`` are replaced, otherwise the whole
+    directory is laid down."""
+    writer = df.write.mode("overwrite")
     if dynamic:
         writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("bucket").parquet(cidx_path)
+    writer.partitionBy("bucket").parquet(path)
+
+
+def _write_component_index(labels: DataFrame, cidx_path: str, dynamic: bool) -> None:
+    """(Re)write component->bucket index rows from ``labels`` carrying
+    (component, bucket): per-fold maintenance with ``dynamic=True``,
+    the whole index (cold start / migration) otherwise."""
+    _write_buckets(
+        labels.select("component", "bucket").distinct(), cidx_path, dynamic
+    )
 
 
 def incremental_entity_labels(
@@ -447,7 +466,7 @@ def incremental_entity_labels(
     right_name: str = "b",
     n_buckets: int = 64,
     lease_wait: float = 0.0,
-) -> DataFrame:
+) -> FoldReport:
     """Fold one batch of matched pairs into the persistent entity labels.
 
     Incremental connected components WITHOUT replaying history: the
@@ -503,10 +522,20 @@ def incremental_entity_labels(
     table. Re-delivered pairs (foreachBatch is at-least-once on restart)
     are idempotent: an edge already inside one component changes nothing.
 
-    Returns a :class:`FoldReport`; its ``labels`` field is the FULL
-    current label table (touched rows from this fold plus untouched
-    rows; the untouched-bucket portion is read lazily from files this
-    fold did not rewrite).
+    SMALL FOLDS RUN ON THE DRIVER: the batch edges, the probed
+    components, their members and the rows of the buckets to rewrite
+    are each collected under a cap of ``clustering.DRIVER_BOUND`` rows
+    (100k; the batch edges plus the members also stay under it, the
+    connected-components driver rule), labeled by the same min-root
+    union-find connected components uses, and written — index first,
+    store second — from one bucket-sorted local relation each, so a
+    rewritten bucket lands in ~one file. Nothing is written before the
+    last collect: when any capped collect exceeds the bound, the fold
+    runs the distributed path described above instead, with the same
+    results.
+
+    Returns a :class:`FoldReport`; its ``labels`` property is the FULL
+    current label table, read from the store when accessed.
 
     SINGLE-WRITER: the whole fold runs under the store's writer lease
     (see :func:`_acquire_store_lease`) — a concurrent fold or
@@ -559,14 +588,198 @@ def _fold_locked(
             )
         labels = connected_components(edges).localCheckpoint()
         bucketed = labels.withColumn("bucket", _node_bucket(n_buckets))
-        bucketed.write.mode("overwrite").partitionBy("bucket").parquet(
-            labels_path
-        )
+        _write_buckets(bucketed, labels_path, dynamic=False)
         _write_store_meta(spark, labels_path, n_buckets)
         _write_component_index(bucketed, _cidx_path(labels_path), dynamic=False)
-        return FoldReport(labels=labels, cold_start=True)
+        return FoldReport(labels_path, cold_start=True)
 
     # --- incremental fold against the bucketed store -----------------
+    try:
+        cidx = spark.read.parquet(_cidx_path(labels_path))
+    except AnalysisException:
+        cidx = None
+    report = _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets)
+    if report is None:
+        report = _fold_distributed(
+            spark, labels_path, edges, prev, cidx, n_buckets,
+            connected_components,
+        )
+    jmeta = _meta_path(spark, labels_path)
+    if not jmeta.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jmeta):
+        # upgrade a pre-sidecar store in place (the check above already
+        # accepted this fold's n_buckets as the layout)
+        _write_store_meta(spark, labels_path, n_buckets)
+    if cidx is None:
+        # a pre-index store rebuilds the whole index after its fold
+        _write_component_index(
+            spark.read.parquet(labels_path), _cidx_path(labels_path),
+            dynamic=False,
+        )
+    return report
+
+
+def _plan_string(spark, df: DataFrame) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def _capped_collect(df: DataFrame, cap: int):
+    """``df``'s rows, or None when it holds more than ``cap`` rows — in
+    one job (a bare ``limit`` on a multi-partition scan runs several)."""
+    rows = df.coalesce(1).limit(cap + 1).collect()
+    return None if len(rows) > cap else rows
+
+
+def _sql_string(value: str) -> str:
+    """A SQL expression for the string ``value``: a hex byte literal cast
+    to string, so no value needs escaping under any parser setting."""
+    return f"cast(X'{value.encode().hex()}' as string)"
+
+
+def _sql_in(column: str, exprs: list[str]) -> Column:
+    """``column IN (exprs)`` parsed from one SQL string: one JVM call,
+    where ``Column.isin`` pays a py4j round trip per value."""
+    if not exprs:
+        return F.lit(False)
+    return F.expr(f"{column} IN ({', '.join(exprs)})")
+
+
+def _write_sorted_buckets(spark, path: str, names: list[str], rows) -> None:
+    """Dynamic-overwrite the buckets of ``rows`` — string tuples whose
+    last field is the int bucket, sorted by it — from one local
+    relation. Its contiguous slices (one per ``defaultParallelism``)
+    land each bucket in one file, two where a slice boundary splits it."""
+    import pyarrow as pa
+
+    types = [pa.string()] * (len(names) - 1) + [pa.int32()]
+    table = pa.table(
+        [pa.array(col, t) for col, t in zip(zip(*rows), types)], names=names
+    )
+    _write_buckets(spark.createDataFrame(table), path)
+
+
+def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
+    """The fold with every intermediate on the driver, or None (having
+    written nothing) when a capped collect exceeds the bound. Same
+    probes, fallback rule, labels and written buckets as
+    :func:`_fold_distributed`.
+
+    The stored rows are collected by whole buckets: first the batch
+    nodes' buckets (the node probe), then the index-listed member
+    buckets not yet loaded. Every changed node lies in a loaded bucket,
+    so the carried rows of each rewritten bucket are already on the
+    driver. Each write is one bucket-sorted local relation, so a
+    rewritten bucket lands in ~one file."""
+    from ..operators import clustering
+
+    # everything held on the driver (batch edges plus stored rows, a
+    # superset of the union-find's input) stays under the bound
+    budget = clustering.DRIVER_BOUND
+    edge_rows = _capped_collect(
+        edges.select(
+            "src", "dst",
+            _node_bucket(n_buckets, "src"), _node_bucket(n_buckets, "dst"),
+        ),
+        budget,
+    )
+    if edge_rows is None:
+        return None
+    budget -= len(edge_rows)
+    batch_bucket = {}
+    for src, dst, src_bucket, dst_bucket in edge_rows:
+        batch_bucket[src], batch_bucket[dst] = src_bucket, dst_bucket
+    batch_bucket.pop(None, None)  # a null id matches no stored node
+
+    stored = {}  # node -> (component, bucket) of every loaded bucket
+
+    def load(bucket_filter) -> bool:
+        nonlocal budget
+        rows = _capped_collect(
+            prev.filter(bucket_filter).select("node", "component", "bucket"),
+            budget,
+        )
+        if rows is None:
+            return False
+        budget -= len(rows)
+        stored.update((r.node, (r.component, r.bucket)) for r in rows)
+        return True
+
+    loaded = sorted(set(batch_bucket.values()))
+    if not load(F.col("bucket").isin(loaded)):
+        return None
+    hit = sorted({stored[n][0] for n in batch_bucket if n in stored})
+    member_buckets, n_hit = None, None
+    if cidx is not None:
+        n_hit = len(hit)
+        listed = _capped_collect(
+            cidx.filter(_sql_in("component", [_sql_string(c) for c in hit]))
+            .select("component", "bucket"),
+            clustering.DRIVER_BOUND,
+        )
+        if listed is None:
+            return None
+        if len({r.component for r in listed}) == n_hit:
+            member_buckets = sorted({r.bucket for r in listed})
+    if hit:
+        # member expansion: the listed buckets (on a fallback, the whole
+        # store) not loaded yet
+        rest = (
+            ~F.col("bucket").isin(loaded) if member_buckets is None
+            else F.col("bucket").isin(sorted(set(member_buckets) - set(loaded)))
+        )
+        if not load(rest):
+            return None
+    hit_set = set(hit)
+    labels = clustering._min_root_labels(
+        [(s, d) for s, d, _, _ in edge_rows if s is not None and d is not None]
+        + [(n, c) for n, (c, _) in stored.items() if c in hit_set]
+    )
+    # new nodes plus members of retired ids (see _fold_distributed)
+    changed = {
+        node: comp for node, comp in labels.items()
+        if stored.get(node, (None,))[0] != comp
+    }
+    bucket_of = {**batch_bucket, **{n: b for n, (_, b) in stored.items()}}
+    if not changed.keys() <= bucket_of.keys():
+        return None  # a root with no stored row: label it the Spark way
+    written_buckets = sorted({bucket_of[n] for n in changed})
+    rewrite = set(written_buckets)
+    to_write = sorted(
+        [(n, c, bucket_of[n]) for n, c in changed.items()]
+        + [(n, c, b) for n, (c, b) in stored.items()
+           if b in rewrite and n not in changed],
+        key=lambda r: (r[2], r[0]),
+    )
+    if to_write:
+        # index first, store second, as on the distributed path
+        if cidx is not None:
+            index = sorted(
+                {(c, b) for _, c, b in to_write}, key=lambda r: (r[1], r[0])
+            )
+            _write_sorted_buckets(
+                spark, _cidx_path(labels_path), ["component", "bucket"], index
+            )
+        _write_sorted_buckets(
+            spark, labels_path, ["node", "component", "bucket"], to_write
+        )
+    scan = (
+        prev if member_buckets is None
+        else prev.filter(F.col("bucket").isin(member_buckets))
+    )
+    return FoldReport(
+        labels_path,
+        expansion_buckets=member_buckets,
+        expansion_plan=_plan_string(spark, scan),
+        n_hit_components=n_hit,
+        written_buckets=written_buckets,
+        on_driver=True,
+    )
+
+
+def _fold_distributed(
+    spark, labels_path, edges, prev, cidx, n_buckets, connected_components,
+) -> FoldReport:
     batch_nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -598,10 +811,6 @@ def _fold_locked(
     # does not know every hit component (crash between the index and
     # store writes of a previous fold — see the docstring's crash-safety
     # contract).
-    try:
-        cidx = spark.read.parquet(_cidx_path(labels_path))
-    except AnalysisException:
-        cidx = None
     member_buckets, n_hit = None, None
     if cidx is not None:
         # ONE action answers all three probe questions (how many hit
@@ -650,32 +859,29 @@ def _fold_locked(
     # the pruning); the live scan DataFrame is deliberately not exposed
     # — after the dynamic overwrite below its captured file listing
     # points at deleted files
-    expansion_plan = scan._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    expansion_plan = _plan_string(spark, scan)
     members = scan.join(hit_components, on="component", how="left_semi")
     star = members.select(
         F.col("node").alias("src"), F.col("component").alias("dst")
     )
     new_labels = connected_components(edges.unionByName(star))  # eager ckpt
 
-    # DIFF-BASED WRITE (r6): rewrite only buckets holding rows whose
-    # label actually CHANGED, not every bucket holding any member of a
-    # touched component. Node-hash bucketing scatters a component's
-    # members across ~min(members, n_buckets) buckets, so the previous
-    # all-members rewrite made ONE new member of a large component
-    # rewrite nearly the whole store (measured x27 fold cost at a x100
-    # store in `scale_probe.py century-labelstore`). The common fold
-    # changes almost nothing: a component's id is the MIN member key,
-    # so members of a surviving component keep byte-identical rows, and
-    # only (a) brand-new nodes and (b) members of RETIRED (merged-away)
-    # component ids differ. `members` is exactly the prior rows of
-    # every node whose label could change (batch nodes not in it are
-    # new), so one left join against it classifies each new_labels row.
-    # Index invariants survive unchanged: a retired id's members ALL
-    # change, so every bucket listing it is rewritten (purging it), and
-    # unrewritten index buckets stay valid because their store buckets
-    # are untouched; a surviving id keeps its (superset-safe) listings.
+    # DIFF-BASED WRITE: rewrite only buckets holding rows whose label
+    # actually CHANGED, not every bucket holding any member of a touched
+    # component. Node-hash bucketing scatters a component's members
+    # across ~min(members, n_buckets) buckets, so an all-members rewrite
+    # would make ONE new member of a large component rewrite nearly the
+    # whole store. The common fold changes almost nothing: a component's
+    # id is the MIN member key, so members of a surviving component keep
+    # byte-identical rows, and only (a) brand-new nodes and (b) members
+    # of RETIRED (merged-away) component ids differ. `members` is
+    # exactly the prior rows of every node whose label could change
+    # (batch nodes not in it are new), so one left join against it
+    # classifies each new_labels row. Index invariants survive
+    # unchanged: a retired id's members ALL change, so every bucket
+    # listing it is rewritten (purging it), and unrewritten index
+    # buckets stay valid because their store buckets are untouched; a
+    # surviving id keeps its (superset-safe) listings.
     changed = (
         new_labels.join(
             members.select("node", F.col("component").alias("__old")),
@@ -688,11 +894,7 @@ def _fold_locked(
     # materialize the (small) changed set once: its bucket ids drive a
     # STATIC partition filter for the carried read (the same
     # collect-then-isin pattern as the node probe above — join-based
-    # pruning would hinge on DPP firing), and both writes re-read it.
-    # Bisected against the alternatives (one fused write-set checkpoint:
-    # 52 fold jobs; a lazy `changed` evaluated by the collect and the
-    # checkpoint separately: 53) — checkpoint-then-collect is the
-    # cheapest shape at 50
+    # pruning would hinge on DPP firing), and both writes re-read it
     changed = changed.withColumn(
         "bucket", _node_bucket(n_buckets)
     ).localCheckpoint()
@@ -715,26 +917,9 @@ def _fold_locked(
     # pre-index store instead rebuilds the whole index after its fold.
     if cidx is not None:
         _write_component_index(to_write, _cidx_path(labels_path), dynamic=True)
-    to_write.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(labels_path)
-    jmeta = _meta_path(spark, labels_path)
-    if not jmeta.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jmeta):
-        # upgrade a pre-sidecar store in place (the check above already
-        # accepted this fold's n_buckets as the layout)
-        _write_store_meta(spark, labels_path, n_buckets)
-    if cidx is None:
-        _write_component_index(
-            spark.read.parquet(labels_path), _cidx_path(labels_path),
-            dynamic=False,
-        )
-
-    # full current table via a FRESH post-write read: the pre-write
-    # `prev` plan captured a file listing whose touched-bucket files the
-    # dynamic overwrite just replaced, so re-using it would read deleted
-    # files; a new read lists the store as it now is
+    _write_buckets(to_write, labels_path)
     return FoldReport(
-        labels=spark.read.parquet(labels_path).select("node", "component"),
+        labels_path,
         expansion_buckets=expansion_buckets,
         expansion_plan=expansion_plan,
         n_hit_components=n_hit,
@@ -821,13 +1006,7 @@ def _compact_locked(
             .filter(F.col("bucket").isin(over))
             .localCheckpoint()  # materialize before replacing source files
         )
-        (
-            rows.repartition(len(over), "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
+        _write_buckets(rows.repartition(len(over), "bucket"), path)
         if path == labels_path:
             compacted = over
     return compacted
@@ -910,18 +1089,20 @@ def entity_lookup(
     buckets, never the full store. ``n_buckets`` must match the store's
     layout, like every other fold parameter.
 
-    The bucket ids are derived through Spark's own ``xxhash64`` (one
-    tiny local-relation job over the requested keys, no reimplementation
-    of the hash driver-side), then applied as a static partition filter.
+    The bucket ids are Spark's own ``xxhash64`` of each key as a
+    literal, which constant folding turns into a static ``bucket IN
+    (...)`` partition filter at plan time: no job and no driver-side
+    reimplementation of the hash. The store's schema is still inferred,
+    so a flat-layout store fails on the missing ``bucket`` column
+    instead of returning nothing.
     """
     _check_store_meta(spark, labels_path, n_buckets)
-    keys_df = spark.createDataFrame(
-        [(k,) for k in node_keys], "node string"
-    ).withColumn("bucket", _node_bucket(n_buckets))
-    buckets = sorted({r["bucket"] for r in keys_df.select("bucket").collect()})
+    keys = [_sql_string(k) for k in node_keys if k is not None]
     return (
         spark.read.parquet(labels_path)
-        .filter(F.col("bucket").isin(buckets))
-        .join(F.broadcast(keys_df.select("node")), on="node", how="left_semi")
+        .filter(_sql_in(
+            "bucket", [f"pmod(xxhash64({k}), {n_buckets})" for k in keys]
+        ))
+        .filter(_sql_in("node", keys))
         .select("node", "component")
     )

@@ -243,3 +243,30 @@ def test_certificate_tolerates_null_grams(spark):
         [(1, ["alpha", None]), (2, ["beta", None]), (3, [None])], schema
     )
     assert dd._hash_injective(df, F.col("grams")) is True
+
+
+def _subset_pair(spark):
+    """A 100-token doc and its 55-token prefix: Jaccard exactly 0.55,
+    where the float product ``0.55 * 100`` is ``55.00000000000001``."""
+    words = [f"w{i:03d}" for i in range(100)]
+    return spark.createDataFrame(
+        [(1, " ".join(words), "en", "web"), (2, " ".join(words[:55]), "en", "web")],
+        ["doc_id", "text", "lang", "source"],
+    )
+
+
+@pytest.mark.parametrize("strategy", ["blocked", "prefix"])
+def test_pair_at_exact_threshold_is_kept(spark, strategy):
+    # both the size band (55 >= 0.55 * 100) and the prefix length
+    # (100 - ceil(0.55 * 100) + 1 = 46) must use the exact product
+    got = _rows(D.ngram_jaccard_pairs(
+        _subset_pair(spark), k=1, threshold=0.55, strategy=strategy,
+        shingle="token",
+    ))
+    assert got == [(1, 2, 0.55)]
+
+
+def test_verify_keeps_pair_at_exact_threshold(spark):
+    cands = spark.createDataFrame([(1, 2)], "a_id long, b_id long")
+    got = D.verify_token_jaccard(cands, _subset_pair(spark), threshold=0.55)
+    assert [(r.a_id, r.b_id, r.jaccard) for r in got.collect()] == [(1, 2, 0.55)]

@@ -192,45 +192,49 @@ def test_streaming_matches_emit_incrementally(spark, tmp_path):
 
 # ------------------------------------------ incremental entity emission --
 
-def test_incremental_labels_merge_matches_batch(spark, tmp_path):
+def test_incremental_labels_merge_matches_batch(spark, tmp_path, monkeypatch):
     """The hard incremental case: a later batch delivers an edge that
     MERGES two existing components. Folding previous labels in as star
     edges must land on exactly the labels a from-scratch batch run over
-    the full match history produces."""
+    the full match history produces — on the driver path and, with the
+    driver bound at 0, on the distributed path."""
+    from pyspark_entity_resolution_spark.operators import clustering
     from pyspark_entity_resolution_spark.operators.clustering import (
         cluster_matched_pairs,
     )
     from pyspark_entity_resolution_spark.streaming.er import (
+        entity_table,
         incremental_entity_labels,
     )
 
-    labels_path = str(tmp_path / "labels")
     batch1 = spark.createDataFrame(
         [(1, 101), (2, 102), (3, 103)], "a_id long, b_id long"
     )
     batch2 = spark.createDataFrame(
         [(1, 102), (4, 104)], "a_id long, b_id long"  # merges {1,101}+{2,102}
     )
-    incremental_entity_labels(spark, labels_path, batch1)
-    incremental_entity_labels(spark, labels_path, batch2)
-
-    from pyspark_entity_resolution_spark.streaming.er import entity_table
-
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in entity_table(spark, labels_path).collect()
-    }
     expected = {
         (r["id"], r["df_name"], r["cluster_id"])
         for r in cluster_matched_pairs(
             batch1.unionByName(batch2), "a_id", "b_id"
         ).collect()
     }
-    assert got == expected
-    # the merge really happened: a:1, b:101, a:2, b:102 share one cluster
-    clusters = {(i, d): c for i, d, c in got}
-    assert len({clusters[("1", "a")], clusters[("101", "b")],
-                clusters[("2", "a")], clusters[("102", "b")]}) == 1
+    for bound in (clustering.DRIVER_BOUND, 0):
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        labels_path = str(tmp_path / f"labels_{bound}")
+        incremental_entity_labels(spark, labels_path, batch1)
+        report = incremental_entity_labels(spark, labels_path, batch2)
+        assert report.on_driver == (bound > 0)
+
+        got = {
+            (r["id"], r["df_name"], r["cluster_id"])
+            for r in entity_table(spark, labels_path).collect()
+        }
+        assert got == expected
+        # the merge really happened: a:1, b:101, a:2, b:102 share one cluster
+        clusters = {(i, d): c for i, d, c in got}
+        assert len({clusters[("1", "a")], clusters[("101", "b")],
+                    clusters[("2", "a")], clusters[("102", "b")]}) == 1
 
 
 def test_streaming_entities_match_batch_across_microbatches(spark, tmp_path):
@@ -508,55 +512,62 @@ def test_expansion_full_scan_without_index_then_rebuilds(spark, tmp_path):
     assert report.expansion_buckets is not None
 
 
-def test_expansion_falls_back_when_index_misses_a_component(spark, tmp_path):
+def test_expansion_falls_back_when_index_misses_a_component(
+    spark, tmp_path, monkeypatch
+):
     """Crash-recovery contract: a hit component absent from the index
     (the index ran ahead of the store in an interrupted fold) must force
-    the full-store expansion, never a silent partial one."""
+    the full-store expansion, never a silent partial one — on both the
+    driver and the distributed path."""
     from pyspark.sql import functions as F  # noqa: F811 (local clarity)
 
+    from pyspark_entity_resolution_spark.operators import clustering
     from pyspark_entity_resolution_spark.operators.clustering import (
         cluster_matched_pairs,
     )
     from pyspark_entity_resolution_spark.streaming import er as ser
 
-    labels_path = str(tmp_path / "labels_stale")
-    cidx_path = labels_path + "__cidx"
     batch1 = spark.createDataFrame(
         [(1, 101), (2, 102)], "a_id long, b_id long"
     )
-    ser.incremental_entity_labels(spark, labels_path, batch1, n_buckets=4)
-
-    # simulate an index that no longer knows the component of node a:1
-    victim = (
-        spark.read.parquet(labels_path)
-        .filter(F.col("node") == "a:1")
-        .select("component")
-        .collect()[0][0]
-    )
-    pruned_idx = (
-        spark.read.parquet(cidx_path)
-        .filter(F.col("component") != victim)
-        .localCheckpoint()
-    )
-    pruned_idx.write.mode("overwrite").partitionBy("bucket").parquet(cidx_path)
-
     batch2 = spark.createDataFrame([(1, 103)], "a_id long, b_id long")
-    report = ser.incremental_entity_labels(
-        spark, labels_path, batch2, n_buckets=4
-    )
-    assert report.expansion_buckets is None  # detected, fell back
-
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in ser.entity_table(spark, labels_path).collect()
-    }
     expected = {
         (r["id"], r["df_name"], r["cluster_id"])
         for r in cluster_matched_pairs(
             batch1.unionByName(batch2), "a_id", "b_id"
         ).collect()
     }
-    assert got == expected
+    for bound in (clustering.DRIVER_BOUND, 0):
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        labels_path = str(tmp_path / f"labels_stale_{bound}")
+        cidx_path = labels_path + "__cidx"
+        ser.incremental_entity_labels(spark, labels_path, batch1, n_buckets=4)
+
+        # simulate an index that no longer knows the component of node a:1
+        victim = (
+            spark.read.parquet(labels_path)
+            .filter(F.col("node") == "a:1")
+            .select("component")
+            .collect()[0][0]
+        )
+        pruned_idx = (
+            spark.read.parquet(cidx_path)
+            .filter(F.col("component") != victim)
+            .localCheckpoint()
+        )
+        pruned_idx.write.mode("overwrite").partitionBy("bucket").parquet(cidx_path)
+
+        report = ser.incremental_entity_labels(
+            spark, labels_path, batch2, n_buckets=4
+        )
+        assert report.expansion_buckets is None  # detected, fell back
+        assert report.on_driver == (bound > 0)
+
+        got = {
+            (r["id"], r["df_name"], r["cluster_id"])
+            for r in ser.entity_table(spark, labels_path).collect()
+        }
+        assert got == expected
 
 
 def test_compaction_coalesces_hot_buckets_losslessly(spark, tmp_path):
@@ -712,58 +723,63 @@ def test_entity_lookup_prunes_to_key_buckets(spark, tmp_path):
     ).count() == 0
 
 
-def test_fold_replay_with_index_ahead_of_store(spark, tmp_path):
+def test_fold_replay_with_index_ahead_of_store(spark, tmp_path, monkeypatch):
     """Crash window the design explicitly claims safe: the fold writes
     the component index BEFORE the label store, so a crash between the
     two leaves the index AHEAD (keyed by the interrupted fold's ids)
     while the store is still pre-fold. The replay must land on exactly
     the from-scratch batch labels — either through superset bucket
     lists for surviving ids or the detected full-scan fallback for
-    retired ids."""
+    retired ids — on both the driver and the distributed path."""
     import shutil
 
+    from pyspark_entity_resolution_spark.operators import clustering
     from pyspark_entity_resolution_spark.operators.clustering import (
         cluster_matched_pairs,
     )
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     n_buckets = 8
-    store = str(tmp_path / "store")
-    ghost = str(tmp_path / "ghost")  # scratch copy to produce the
-    # interrupted fold's index without advancing the real store
-
     batch1 = spark.createDataFrame(
         [(1, 101), (2, 102), (3, 103), (4, 104)], "a_id long, b_id long"
     )
     # batch2 merges components {1,101} and {2,102} -> the non-surviving
     # old id is retired by the fold, the surviving min id gains buckets
     batch2 = spark.createDataFrame([(1, 102)], "a_id long, b_id long")
-
-    ser.incremental_entity_labels(spark, store, batch1, n_buckets=n_buckets)
-    shutil.copytree(store, ghost)
-    shutil.copytree(store + "__cidx", ghost + "__cidx")
-
-    # run the fold to completion on the scratch copy, then transplant
-    # ONLY its (post-fold) index onto the real (pre-fold) store —
-    # byte-identical to crashing between the index and store writes
-    ser.incremental_entity_labels(spark, ghost, batch2, n_buckets=n_buckets)
-    shutil.rmtree(store + "__cidx")
-    shutil.copytree(ghost + "__cidx", store + "__cidx")
-
-    # replay the batch against the index-ahead store
-    ser.incremental_entity_labels(spark, store, batch2, n_buckets=n_buckets)
-
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in ser.entity_table(spark, store).collect()
-    }
     expected = {
         (r["id"], r["df_name"], r["cluster_id"])
         for r in cluster_matched_pairs(
             batch1.unionByName(batch2), "a_id", "b_id"
         ).collect()
     }
-    assert got == expected
+    for bound in (clustering.DRIVER_BOUND, 0):
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        store = str(tmp_path / f"store_{bound}")
+        ghost = str(tmp_path / f"ghost_{bound}")  # scratch copy to produce
+        # the interrupted fold's index without advancing the real store
+
+        ser.incremental_entity_labels(spark, store, batch1, n_buckets=n_buckets)
+        shutil.copytree(store, ghost)
+        shutil.copytree(store + "__cidx", ghost + "__cidx")
+
+        # run the fold to completion on the scratch copy, then transplant
+        # ONLY its (post-fold) index onto the real (pre-fold) store —
+        # byte-identical to crashing between the index and store writes
+        ser.incremental_entity_labels(spark, ghost, batch2, n_buckets=n_buckets)
+        shutil.rmtree(store + "__cidx")
+        shutil.copytree(ghost + "__cidx", store + "__cidx")
+
+        # replay the batch against the index-ahead store
+        report = ser.incremental_entity_labels(
+            spark, store, batch2, n_buckets=n_buckets
+        )
+        assert report.on_driver == (bound > 0)
+
+        got = {
+            (r["id"], r["df_name"], r["cluster_id"])
+            for r in ser.entity_table(spark, store).collect()
+        }
+        assert got == expected
 
 
 def test_store_meta_rejects_mismatched_n_buckets(spark, tmp_path):
@@ -1028,12 +1044,13 @@ def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
 
 
 def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
-    """The fold's pre-write probes are driver round trips on the
-    micro-batch critical path. r6 folded the hit-component count into
-    the index-probe aggregation (marker-row union), taking the probe
-    phase from three collect-class actions (bucket collect, index
-    probe, hit count) to two. Pin the TOTAL per-fold job count so a
-    future change can't quietly stack more per-batch latency."""
+    """The fold's jobs are driver round trips on the micro-batch
+    critical path. A small fold runs on the driver: the batch-edge
+    collect, the stored rows of the batch nodes' buckets, the index
+    probe, the member buckets not loaded yet, and the two writes, plus
+    the store and index reads' schema jobs (no listing jobs at 4
+    buckets). Pin the TOTAL per-fold job count so a future change can't
+    quietly stack more per-batch latency."""
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     labels_path = str(tmp_path / "labels_jobs")
@@ -1045,25 +1062,36 @@ def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
-    ser.incremental_entity_labels(
+    report = ser.incremental_entity_labels(
         spark, labels_path,
         spark.createDataFrame([(1, 103)], "a_id long, b_id long"),
         n_buckets=4,
     )
     after = set(tracker.getJobIdsForGroup(None) or [])
     n_jobs = len(after - before)
-    # measured 44 at r6 after folding the hit count into the index
-    # probe (one fewer action than pre-r6); 50 after the r6 diff-based
-    # write, whose changed-set checkpoint + written-bucket collect +
-    # carried checkpoint add ~6 ms-class jobs per fold and in exchange
-    # cut the WRITE volume from O(touched-component member scatter) to
-    # O(changed rows) — the trade that dominates real fold wall time
-    # (the labelstore century probe measured the all-members rewrite at
-    # x27 fold cost on a x100 store). The bound has
-    # headroom for Spark-version job-splitting differences; tighten it
-    # if a cheaper shape is bisected (52- and 53-job variants are
-    # recorded at the changed-set checkpoint in streaming/er.py).
-    assert 0 < n_jobs <= 54, f"fold ran {n_jobs} driver jobs"
+    assert report.on_driver
+    # measured 8, with 2 of headroom; the distributed path runs 31-32
+    # in this shape
+    assert 0 < n_jobs <= 10, f"fold ran {n_jobs} driver jobs"
+
+
+def test_entity_lookup_runs_without_a_bucket_job(spark, tmp_path):
+    """The lookup's bucket ids fold at plan time: only the store read's
+    schema job and the lookup itself run (no listing job at 8 buckets)."""
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    labels_path = str(tmp_path / "labels_lookup_jobs")
+    ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(i, 100 + i) for i in range(1, 13)], "a_id long, b_id long"),
+        n_buckets=8,
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    rows = ser.entity_lookup(spark, labels_path, ["a:1", "b:105", "a:999"], n_buckets=8).collect()
+    n_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+    assert {r.node for r in rows} == {"a:1", "b:105"}
+    assert n_jobs <= 3, f"lookup ran {n_jobs} jobs"  # measured 2
 
 
 @pytest.mark.slow
@@ -1132,16 +1160,19 @@ def test_store_and_index_file_counts_bounded_under_long_churn(spark, tmp_path):
     assert got == expected
 
 
-def test_diff_write_skips_unchanged_members_of_touched_components(spark, tmp_path):
-    """The r6 diff-based write: a fold rewrites only buckets holding rows
+def test_diff_write_skips_unchanged_members_of_touched_components(
+    spark, tmp_path, monkeypatch
+):
+    """The diff-based write: a fold rewrites only buckets holding rows
     whose LABEL changed, not every bucket holding a member of a touched
     component. Attaching a new node to a surviving component (its id is
     the min member key, so existing member rows are byte-equal) must
     rewrite exactly the new node's bucket; a merge must rewrite exactly
     the retired side's member buckets. Without the diff, node-hash
     scatter makes one new member of a large component rewrite
-    ~min(members, n_buckets) buckets — the whole store (measured x27
-    fold cost at a x100 store in scale_probe.py century-labelstore)."""
+    ~min(members, n_buckets) buckets — the whole store. Checked on the
+    driver path and, with the driver bound at 0, the distributed one."""
+    from pyspark_entity_resolution_spark.operators import clustering
     from pyspark_entity_resolution_spark.operators.clustering import (
         cluster_matched_pairs,
     )
@@ -1150,7 +1181,6 @@ def test_diff_write_skips_unchanged_members_of_touched_components(spark, tmp_pat
         incremental_entity_labels,
     )
 
-    labels_path = str(tmp_path / "labels_diff")
     n_buckets = 16
 
     def _buckets_of(nodes):
@@ -1167,54 +1197,166 @@ def test_diff_write_skips_unchanged_members_of_touched_components(spark, tmp_pat
         [(1, 100 + i) for i in range(1, 9)] + [(2, 301), (2, 302)],
         "a_id long, b_id long",
     )
-    incremental_entity_labels(spark, labels_path, batch1, n_buckets=n_buckets)
-
-    # --- attach a new node: only its own bucket may be rewritten ------
-    before = _snapshot_bucket_files(labels_path)
-    report = incremental_entity_labels(
-        spark,
-        labels_path,
-        spark.createDataFrame([(1, 200)], "a_id long, b_id long"),
-        n_buckets=n_buckets,
-    )
-    # a:1 is the surviving min root, so the only changed row is b:200
-    assert set(report.written_buckets) == _buckets_of(["b:200"])
-    after = _snapshot_bucket_files(labels_path)
-    for rel, data in before.items():
-        bucket = int(rel.split("/")[0].split("=")[1])
-        if bucket not in set(report.written_buckets):
-            assert after.get(rel) == data, f"unchanged bucket rewritten: {rel}"
-
-    # --- merge: only the retired side's member buckets rewritten ------
-    before = _snapshot_bucket_files(labels_path)
-    report = incremental_entity_labels(
-        spark,
-        labels_path,
-        spark.createDataFrame([(2, 101)], "a_id long, b_id long"),
-        n_buckets=n_buckets,
-    )
-    # components a:1... and a:2... merge; "a:1" is the min, so exactly
-    # the a:2 side's members change labels (b:101 already carried a:1)
-    assert set(report.written_buckets) == _buckets_of(["a:2", "b:301", "b:302"])
-    after = _snapshot_bucket_files(labels_path)
-    for rel, data in before.items():
-        bucket = int(rel.split("/")[0].split("=")[1])
-        if bucket not in set(report.written_buckets):
-            assert after.get(rel) == data, f"unchanged bucket rewritten: {rel}"
-
-    # --- and the store still equals the from-scratch batch labels -----
     all_matches = batch1.unionByName(
         spark.createDataFrame([(1, 200), (2, 101)], "a_id long, b_id long")
     )
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in entity_table(spark, labels_path).collect()
-    }
     expected = {
         (r["id"], r["df_name"], r["cluster_id"])
         for r in cluster_matched_pairs(all_matches, "a_id", "b_id").collect()
     }
-    assert got == expected
+    for bound in (clustering.DRIVER_BOUND, 0):
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        labels_path = str(tmp_path / f"labels_diff_{bound}")
+        incremental_entity_labels(spark, labels_path, batch1, n_buckets=n_buckets)
+
+        # --- attach a new node: only its own bucket may be rewritten ------
+        before = _snapshot_bucket_files(labels_path)
+        report = incremental_entity_labels(
+            spark,
+            labels_path,
+            spark.createDataFrame([(1, 200)], "a_id long, b_id long"),
+            n_buckets=n_buckets,
+        )
+        assert report.on_driver == (bound > 0)
+        # a:1 is the surviving min root, so the only changed row is b:200
+        assert set(report.written_buckets) == _buckets_of(["b:200"])
+        after = _snapshot_bucket_files(labels_path)
+        for rel, data in before.items():
+            bucket = int(rel.split("/")[0].split("=")[1])
+            if bucket not in set(report.written_buckets):
+                assert after.get(rel) == data, f"unchanged bucket rewritten: {rel}"
+
+        # --- merge: only the retired side's member buckets rewritten ------
+        before = _snapshot_bucket_files(labels_path)
+        report = incremental_entity_labels(
+            spark,
+            labels_path,
+            spark.createDataFrame([(2, 101)], "a_id long, b_id long"),
+            n_buckets=n_buckets,
+        )
+        # components a:1... and a:2... merge; "a:1" is the min, so exactly
+        # the a:2 side's members change labels (b:101 already carried a:1)
+        assert set(report.written_buckets) == _buckets_of(["a:2", "b:301", "b:302"])
+        after = _snapshot_bucket_files(labels_path)
+        for rel, data in before.items():
+            bucket = int(rel.split("/")[0].split("=")[1])
+            if bucket not in set(report.written_buckets):
+                assert after.get(rel) == data, f"unchanged bucket rewritten: {rel}"
+
+        # --- and the store still equals the from-scratch batch labels -----
+        got = {
+            (r["id"], r["df_name"], r["cluster_id"])
+            for r in entity_table(spark, labels_path).collect()
+        }
+        assert got == expected
+
+
+def _fold_twice(spark, tmp_path, monkeypatch, batch, bound, n_buckets=16):
+    """Fold ``batch`` into two copies of one store, on the driver path and
+    with the driver bound patched to ``bound``; returns both reports and
+    label maps."""
+    import shutil
+
+    from pyspark_entity_resolution_spark.operators import clustering
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    base = str(tmp_path / "base")
+    ser.incremental_entity_labels(
+        spark, base,
+        spark.createDataFrame(
+            [(i, 100 + i) for i in range(1, 25)] + [(i, 200 + i) for i in range(1, 25, 3)],
+            "a_id long, b_id long",
+        ),
+        n_buckets=n_buckets,
+    )
+    out = []
+    for name, patched in (("driver", None), ("patched", bound)):
+        store = str(tmp_path / name)
+        shutil.copytree(base, store)
+        shutil.copytree(base + "__cidx", store + "__cidx")
+        if patched is not None:
+            monkeypatch.setattr(clustering, "DRIVER_BOUND", patched)
+        report = ser.incremental_entity_labels(spark, store, batch, n_buckets=n_buckets)
+        labels = {
+            r.node: r.component
+            for r in spark.read.parquet(store).select("node", "component").collect()
+        }
+        out.append((report, labels))
+    return out
+
+
+def test_driver_fold_writes_about_one_file_per_bucket(spark, tmp_path):
+    """The driver path writes each rewritten bucket from one bucket-sorted
+    local relation: at most written_buckets + defaultParallelism new data
+    files in the store (the distributed write unions two checkpoints,
+    and every task writes a file into every bucket)."""
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    labels_path = str(tmp_path / "labels_files")
+    ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(i, 100 + i) for i in range(1, 41)], "a_id long, b_id long"),
+        n_buckets=16,
+    )
+    before = set(_snapshot_bucket_files(labels_path))
+    report = ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame(
+            [(i, 300 + i) for i in range(1, 41, 2)] + [(i, 400 + i) for i in range(50, 60)],
+            "a_id long, b_id long",
+        ),
+        n_buckets=16,
+    )
+    new_files = [
+        p for p in _snapshot_bucket_files(labels_path)
+        if p not in before and p.endswith(".parquet")
+    ]
+    assert len(report.written_buckets) > 4
+    bound = len(report.written_buckets) + spark.sparkContext.defaultParallelism
+    assert len(new_files) <= bound, (len(new_files), bound)
+
+
+def test_fold_over_bound_falls_back_before_writing(spark, tmp_path, monkeypatch):
+    """A fold whose stored rows exceed a patched driver bound (the batch
+    edges still fit) takes the distributed path without any driver-path
+    write, and lands on the same labels and written buckets."""
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    writes = []
+    real = ser._write_sorted_buckets
+    monkeypatch.setattr(
+        ser, "_write_sorted_buckets",
+        lambda *a, **k: (writes.append(a[1]), real(*a, **k)),
+    )
+    batch = spark.createDataFrame([(1, 500), (2, 101), (7, 600)], "a_id long, b_id long")
+    (driver, labels_d), (patched, labels_p) = _fold_twice(
+        spark, tmp_path, monkeypatch, batch, bound=10
+    )
+    assert driver.on_driver and not patched.on_driver
+    assert len(writes) == 2  # the driver fold's index and store, nothing more
+    assert patched.written_buckets == driver.written_buckets
+    assert patched.n_hit_components == driver.n_hit_components
+    assert patched.expansion_buckets == driver.expansion_buckets
+    assert labels_p == labels_d
+
+
+def test_null_id_batch_row_folds_alike_on_both_paths(spark, tmp_path, monkeypatch):
+    """A batch row with a null id contributes no edge (connected
+    components drops null endpoints), but its other endpoint is still
+    probed: both paths must agree on the labels and the report."""
+    batch = spark.createDataFrame(
+        [(1, 500), (5, None), (None, 107), (None, None), (30, 700)],
+        "a_id long, b_id long",
+    )
+    (driver, labels_d), (dist, labels_t) = _fold_twice(
+        spark, tmp_path, monkeypatch, batch, bound=0
+    )
+    assert driver.on_driver and not dist.on_driver
+    assert labels_d == labels_t
+    assert "a:5" in labels_d and "b:107" in labels_d  # stored, untouched
+    assert "a:30" in labels_d and labels_d["b:700"] == "a:30"
+    assert (driver.written_buckets, driver.n_hit_components, driver.expansion_buckets) \
+        == (dist.written_buckets, dist.n_hit_components, dist.expansion_buckets)
 
 
 _LEASE_RACE_SCRIPT = r'''
