@@ -324,75 +324,6 @@ def _bench_er_pipeline_e2e(spark) -> float:
         shutil.rmtree(dest, ignore_errors=True)
 
 
-def er_e2e_stage_sec(spark) -> dict:
-    """UNTIMED (relative to the headline row) per-stage split of the e2e
-    ER pipeline — r12 (r11 verdict task 4): the 6 s e2e row was the
-    biggest headline number for two rounds with no visibility into WHICH
-    stage carries it. Mirrors run_er_pipeline's stage boundaries exactly
-    (same lazy localCheckpoints), materializing each boundary with the
-    noop sink in dependency order so each stage's first materialization
-    cost lands in its own bucket. One warm pass — numbers are
-    attribution weights, not gate values; the headline row above stays
-    the timed artifact entry."""
-    import shutil
-    import tempfile
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        cluster_matched_pairs,
-    )
-    from pyspark_entity_resolution_spark.operators.resolve import (
-        entity_table,
-        pick_representatives,
-    )
-    from pyspark_entity_resolution_spark.pipeline import (
-        ERConfig,
-        match_publications,
-        prepare_publications,
-    )
-    from pyspark_entity_resolution_spark.sources.io import write_csv
-
-    pa, pb = _gen_er_corpus("/tmp/er_bench_corpus_v1")
-    cfg = ERConfig(window=3)
-    stages: dict[str, float] = {}
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def _timed(tag, fn):
-        t0 = time.perf_counter()
-        out = fn()
-        stages[tag] = round(time.perf_counter() - t0, 3)
-        return out
-
-    left = _timed("parse_clean_left", lambda: (
-        lambda df: (_noop(df), df)[1]
-    )(prepare_publications(spark, pa, cfg).localCheckpoint(eager=False)))
-    right = _timed("parse_clean_right", lambda: (
-        lambda df: (_noop(df), df)[1]
-    )(prepare_publications(spark, pb, cfg).localCheckpoint(eager=False)))
-    matches = _timed("block_match", lambda: (
-        lambda df: (_noop(df), df)[1]
-    )(match_publications(left, right, cfg).localCheckpoint(eager=False)))
-    clustered = _timed("cluster_cc", lambda: cluster_matched_pairs(
-        matches, left_id="a_id", right_id="b_id", left_name="a",
-        right_name="b",
-    ))
-    entities = _timed("resolve_entity_table", lambda: (
-        lambda df: (_noop(df), df)[1]
-    )(entity_table(
-        pick_representatives(clustered),
-        raw_by_side={"a": left, "b": right}, sides=["a", "b"],
-    )))
-    dest = tempfile.mkdtemp(prefix="er_stage_out_")
-    try:
-        _timed("csv_write", lambda: write_csv(
-            entities, f"{dest}/entities", sep="\t"
-        ))
-    finally:
-        shutil.rmtree(dest, ignore_errors=True)
-    return stages
-
-
 def multimodal_sections(spark, sf_dir: str | None = None) -> dict:
     """Per-kernel arms of the media-family pack over a deterministic
     synthetic corpus (tools/media_corpus.py: planted near-dup WAV
@@ -777,10 +708,6 @@ def main(full: bool = False, baseline_ref: str | None = None) -> None:
         # arm instead of reading workload growth as a regression
         pack_section_sec = {"multimodal_pack": mm_sections}
 
-        er_stages = er_e2e_stage_sec(spark)
-        print(f"[bench] er_pipeline_e2e_n3 stages: {er_stages}",
-              file=sys.stderr, flush=True)
-
     # --- workload self-description (untimed) -------------------------
     # Table cardinalities come from parquet footer metadata (cheap); the
     # driver regenerates /root/testdata between rounds, so these pin
@@ -812,8 +739,6 @@ def main(full: bool = False, baseline_ref: str | None = None) -> None:
         if "ann_methods_topk" in pack_section_sec:
             # r8 artifact continuity: the ANN arms rode under this key
             workload["ann_methods_arm_sec"] = pack_section_sec["ann_methods_topk"]
-    if not full:
-        workload["er_e2e_stage_sec"] = er_stages
     if build_exec_sec:
         workload["build_exec_sec"] = build_exec_sec
     metric = "full_total_runtime" if full else "headline_total_runtime"

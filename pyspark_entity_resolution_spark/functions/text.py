@@ -205,5 +205,9 @@ def fingerprint_md5(c: Column | str) -> Column:
 
 def minhash_fingerprint(c: Column | str, k: int = 3) -> Column:
     """Rolling-window fingerprint: lexicographic MIN of the md5 of each
-    char k-gram — a 1-permutation MinHash over shingles."""
-    return F.array_min(F.transform(char_shingles(c, k), F.md5))
+    distinct char k-gram — a 1-permutation MinHash over the shingle set.
+    The min over the set equals the min over the multiset, so hashing
+    each distinct shingle once is the cheaper form."""
+    return F.array_min(
+        F.transform(F.array_distinct(char_shingles(c, k)), F.md5)
+    )

@@ -39,13 +39,12 @@ DRIVER_BOUND = 100_000
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Best-effort unpersist of a ``localCheckpoint`` result's backing
-    RDD blocks. Superseded round checkpoints used to stay persisted
-    until the JVM's ContextCleaner got around to them, which at the
-    x100 probe scale (100M-edge rounds) held multiple full edge-set
-    copies on the heap at once — the measured GC-pressure variance in
-    the century probe. A non-LogicalRDD plan (or a Connect session,
-    where the JVM internals are unreachable) is silently skipped: the
-    call is an optimization, never a correctness dependency."""
+    RDD blocks. Left to the JVM's ContextCleaner, superseded round
+    checkpoints stay persisted, which at 100M-edge rounds holds several
+    full edge-set copies on the heap at once. A non-LogicalRDD plan (or
+    a Connect session, where the JVM internals are unreachable) is
+    silently skipped: the call is an optimization, never a correctness
+    dependency."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
@@ -183,8 +182,8 @@ def connected_components(
       crowd the unified memory region do the per-round checkpoints
       demote to DISK_ONLY (the rounds re-read each checkpoint a handful
       of times; the OS page cache absorbs most of it). Measured both
-      ways on the x100 probe (100M edges): at 8g heap MEMORY_AND_DISK
-      dies in AGGREGATE_OUT_OF_MEMORY — persisted blocks are protected
+      ways at 100M edges: at 8g heap MEMORY_AND_DISK dies in
+      AGGREGATE_OUT_OF_MEMORY — persisted blocks are protected
       from execution eviction up to ``spark.memory.storageFraction`` —
       while at 64g DISK_ONLY costs ~1.3x wall-clock over in-memory
       checkpoints, so neither choice is right unconditionally. Pass
@@ -248,13 +247,13 @@ def connected_components(
         # block footprint is readable from the storage manager. The
         # loop keeps at most ~2 full-size checkpoints resident
         # (previous + current round — superseded ones are released
-        # eagerly; r10 removed the resident all-nodes table); 4x still
-        # buffers large-star's transient
-        # expansion. Demote only when that working set would not fit
-        # beside execution in the unified region (~60% of heap, half
-        # of it eviction-protected storage). Unknown heap or footprint
-        # (Connect, storage-info miss) demotes conservatively: the
-        # fixed edge-count threshold already says the graph is huge.
+        # eagerly, and no all-nodes table is held); 4x still buffers
+        # large-star's transient expansion. Demote only when that
+        # working set would not fit beside execution in the unified
+        # region (~60% of heap, half of it eviction-protected storage).
+        # Unknown heap or footprint (Connect, storage-info miss) demotes
+        # conservatively: the fixed edge-count threshold already says
+        # the graph is huge.
         ckpt_bytes = _checkpoint_bytes(raw)
         heap = _jvm_max_heap(spark)
         if ckpt_bytes is None or heap is None or 4 * ckpt_bytes > 0.3 * heap:
@@ -267,10 +266,9 @@ def connected_components(
         # needed it materialized before the size was known): one cheap
         # shuffle-free copy-through, after which the big edge set no
         # longer occupies the storage-memory region the loop's first
-        # distinct() aggregations need. Measured on the x100 probe
-        # (100M edges, 8g heap): with raw resident in unified memory the
-        # all-nodes distinct dies in UNABLE_TO_ACQUIRE_MEMORY before the
-        # first round starts.
+        # distinct() aggregations need: at 100M edges on an 8g heap,
+        # with raw resident in unified memory, a node distinct died in
+        # UNABLE_TO_ACQUIRE_MEMORY before the first round started.
         demoted = raw.localCheckpoint(storageLevel=level)
         _release_checkpoint(raw)
         raw = demoted
@@ -288,11 +286,12 @@ def connected_components(
 # probed rounds), 'edges': the round's output edge count, 'probed':
 # whether the count plateau let the convergence probe run}. Written by
 # _connected_components_loop (and reset to [] by the driver-side
-# labeling, which runs no rounds), read by tools/scale_probe.py century-cc
-# (r8 judge task #8: the 100M-edge leg reads 375-730 s night-to-night
-# and one total can't say whether the variance is round-count or
-# per-round shuffle time). Driver-side diagnostic only — last call
-# wins; not part of the result contract and not thread-safe.
+# labeling, which runs no rounds). Read by erbench/run.py
+# (``clustering.rounds``) and by tools/ab_bench.py's ``cc_<edges>`` rows,
+# both through ``getattr(clustering, "LAST_RUN_ROUND_STATS", [])``, so
+# renaming or deleting it zeroes their round counts instead of failing.
+# Driver-side diagnostic only — last call wins; not part of the result
+# contract and not thread-safe.
 LAST_RUN_ROUND_STATS: list = []
 
 
@@ -357,18 +356,15 @@ def _connected_components_loop(
     round_stats: list = []
     LAST_RUN_ROUND_STATS = round_stats
     # Singleton recovery needs only the SELF-LOOP-ONLY nodes, not the
-    # full node set (r10): every node with at least one non-self-loop
-    # edge is preserved through the star rounds — a node that is the
-    # minimum of some neighborhood survives as the rewired target m,
-    # any other node keeps an edge toward a smaller neighbor and
-    # survives as a source, and the alternating-stars connectivity
-    # invariant (Kiveris et al.) keeps every size->=2 component's nodes
-    # in the edge set through convergence — so the final labeling
-    # already covers them, and the old 2|E|-row all-nodes distinct
-    # (checkpointed and held resident through the WHOLE loop: at the
-    # 100M-edge probe a 50M-row table squatting in the storage region
-    # the rounds compete for) only ever contributed nodes whose every
-    # edge was a self-loop. Those come from a near-free filter instead.
+    # full node set: every node with at least one non-self-loop edge is
+    # preserved through the star rounds — a node that is the minimum of
+    # some neighborhood survives as the rewired target m, any other node
+    # keeps an edge toward a smaller neighbor and survives as a source,
+    # and the alternating-stars connectivity invariant (Kiveris et al.)
+    # keeps every size->=2 component's nodes in the edge set through
+    # convergence — so the final labeling already covers them. A
+    # near-free filter finds the rest, where an all-nodes distinct would
+    # hold a 2|E|-row table in the storage region the rounds compete for.
     self_only = (
         raw.filter(F.col("u") == F.col("v"))
         .select(F.col("u").alias("node"))
@@ -388,18 +384,6 @@ def _connected_components_loop(
     prev_count = n_edges
     pending_release = raw
 
-    # NOTE on a measured dead end (round 6): per-round FREEZE-OUT of
-    # finished star components (drop proper stars from the working edge
-    # set so later rounds shuffle only the churning frontier) was
-    # implemented and bisected as a net LOSS on the probe workloads —
-    # 1M edges 20.5 s -> 43.0 s, 10M edges 73.8 s -> 99.7 s — because
-    # on a random match graph the giant component holds nearly all the
-    # edge mass and never freezes until the final round, while the
-    # bookkeeping (node-role aggregation + done/live split joins) adds
-    # ~3 extra full-edge-set shuffles and 2 extra actions to EVERY
-    # round. What survives from that attempt is (a) the superseded-
-    # checkpoint release below and (b) the stricter node-role
-    # convergence probe, both wins independent of graph shape.
     try:
         for _ in range(max_iterations):
             _round_t0 = _time.perf_counter()
@@ -419,29 +403,28 @@ def _connected_components_loop(
             # necessarily reproduces the previous round's edge count
             # (f(fixpoint) = fixpoint), so rounds where the count still
             # moved skip the probe outright — its union+groupBy re-reads
-            # 2|e| checkpointed rows, measured ~18% of loop wall-clock
-            # at 10M edges (8.8 s of 49 s) and proportionally more at
-            # 100M, while the gating count is a near-free scan of the
-            # persisted blocks that the lazy checkpoint needs as its
-            # materializing action anyway. An accidental count plateau
-            # before convergence just runs the probe one round early (it
-            # answers "not yet"); a star forest reached in the same
-            # round the count moved is detected one round late (one
-            # extra no-op round, then the plateau gates the probe in).
+            # 2|e| checkpointed rows, while the gating count is a
+            # near-free scan of the persisted blocks that the lazy
+            # checkpoint needs as its materializing action anyway. An
+            # accidental count plateau before convergence just runs the
+            # probe one round early (it answers "not yet"); a star
+            # forest reached in the same round the count moved is
+            # detected one round late (one extra no-op round, then the
+            # plateau gates the probe in).
             # Correctness never rests on the gate — only the probe below
             # ever declares convergence.
             if count == prev_count:
                 # Fixed-point probe via node roles in ONE map-side-
                 # combined aggregation: the round output is a settled
                 # star forest iff no node both emits and receives an
-                # edge AND no node emits more than one. This is
-                # deliberately STRICTER than the previous "no target is
-                # also a source" semi-join probe: small-star output can
-                # hand a node TWO outgoing edges toward two different
-                # local minima (it sat in two rewired neighborhoods
-                # whose roots are not themselves sources), a state the
-                # old probe declared converged — mislabeling that node
-                # into two components — but which is not a fixed point.
+                # edge AND no node emits more than one. "No target is
+                # also a source" alone is not enough: small-star output
+                # can hand a node TWO outgoing edges toward two
+                # different local minima (it sat in two rewired
+                # neighborhoods whose roots are not themselves sources),
+                # a state that test declares converged — mislabeling
+                # that node into two components — but which is not a
+                # fixed point.
                 # Such a node keeps nsrc > 1 here, so the loop keeps
                 # iterating until the halves merge. Row counts are exact
                 # because the round-final distinct leaves no duplicates.

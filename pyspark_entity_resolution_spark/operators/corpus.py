@@ -151,11 +151,11 @@ def prepare_training_corpus(
     production corpus ships alongside the text so future batches can be
     overlap-checked without re-fingerprinting history. The stage
     defaults to ``winnow_hash="xx64"`` — the xxhash64 fast path,
-    measured 0.59-0.60x of md5 end-to-end at 5k/50k docs (r7,
-    tools/scale_probe.py probe_winnow) — because the fingerprint
-    consumer here is Spark-side only; pass ``"md5"`` when fingerprints
-    must be reproducible by an external engine (the oracle-checked gate
-    row keeps md5 for exactly that reason).
+    measured 0.59-0.60x of md5 end-to-end at 5k/50k docs (r7; README's
+    scale table) — because the fingerprint consumer here is Spark-side
+    only; pass ``"md5"`` when fingerprints must be reproducible by an
+    external engine (the oracle-checked gate row keeps md5 for exactly
+    that reason).
 
     Optional stages mirror the full production scrub sequence:
     ``max_dup_ngram_frac`` adds the Gopher repetition gate between the

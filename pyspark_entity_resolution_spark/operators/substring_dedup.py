@@ -38,43 +38,15 @@ def window_fingerprints(
     windows (nothing of length >= w can repeat out of them).
 
     ``wh`` is internal (never part of any operator's output); only its
-    ability to distinguish distinct windows matters. The encoding is
-    selected by ``SPARK_GRAFT_SUBSTR_HASH``:
-
-    - ``md5`` — the r7-r11 shape: 32-char hex string. 128-bit.
-    - ``xx128`` (DEFAULT since r12) — ``struct(xxhash64(s),
-      xxhash64(1, s))``: the same 128-bit collision class as md5 (two
-      64-bit halves under distinct seeds; a false dup requires a
-      simultaneous collision in both). The literal comes FIRST because
-      Spark chains multi-argument hashes, each argument's hash seeding
-      the next: the r12 order ``xxhash64(s, 1)`` made the second half
-      ``XXH64.hashInt(1, seed=h1)``, a pure function of the first, so
-      the pair only had the 64-bit class. Both orders do the same hash
-      work (one string hash, one int hash); the r12 timings below were
-      taken on the chained order. xx128 costs a fraction of the hash CPU (xxHash64 is an order of
-      magnitude faster per byte than MD5) and moves 16 bytes of dense
-      struct key through the corpus-wide groupBy exchange versus ~40
-      bytes of hex-string UnsafeRow. Measured (r12
-      interleaved in-JVM A/B, identical 47,700 spans on the x100
-      corpus): sf0.1 wash (mins 1.586 md5 / 1.602 xx128 — the exchange
-      is tiny there), x100 mins 75.4 md5 / **70.7 xx128** and md5 worst
-      in both pass orders — a per-window-byte win that grows with
-      corpus size.
-    - ``xx64`` — single 64-bit hash; measurement arm for pricing the
-      second hash column (x100 min 67.8 — ~4% under xx128). NOT for
-      production: no certificate bounds its collision rate on an
-      unbounded window vocabulary, and unlike the token-vocabulary
-      paths there is no cheap injectivity certificate here (it would
-      have to shuffle the window STRINGS the hash exists to avoid).
+    ability to distinguish distinct windows matters. It is
+    ``struct(xxhash64(s), xxhash64(1, s))``: two 64-bit halves under
+    distinct seeds, so a false duplicate needs a simultaneous collision
+    in both (the 128-bit class of md5, at a fraction of its hash CPU and
+    as a 16-byte struct key through the groupBy exchange). The literal
+    comes FIRST because Spark chains multi-argument hashes, each
+    argument's hash seeding the next: ``xxhash64(s, 1)`` would make the
+    second half a pure function of the first.
     """
-    import os
-
-    impl = os.environ.get("SPARK_GRAFT_SUBSTR_HASH", "xx128")
-    if impl not in ("md5", "xx64", "xx128"):
-        raise ValueError(
-            "SPARK_GRAFT_SUBSTR_HASH must be 'md5', 'xx64' or 'xx128', "
-            f"got {impl!r}"
-        )
     # stage the token array as a REAL column behind a lazy-checkpoint
     # projection barrier: without it CollapseProject re-inlines the
     # split/filter tokenization into the per-window lambda, re-tokenizing
@@ -91,38 +63,23 @@ def window_fingerprints(
     # CASE-guard as well as filter: ANSI `sequence` raises on start > stop,
     # and the filter alone does not pin expression evaluation order.
     starts = F.sequence(F.lit(1), F.size(tk) - F.lit(w - 1))
-    if impl == "md5":  # the exact r7-r11 expression tree
-        wins = F.when(
-            F.size(tk) >= w,
-            F.transform(
-                starts, lambda i: F.md5(F.array_join(F.slice(tk, i, w), " "))
-            ),
-        )
-    else:
-        if impl == "xx64":
-            def fingerprint(s):
-                return F.xxhash64(s)
-        else:  # xx128: two 64-bit halves; hashing lit(1) FIRST seeds
-            # the second with a constant other than the first's, making
-            # it an independent member of the xxHash64 family
-            def fingerprint(s):
-                return F.struct(
-                    F.xxhash64(s).alias("h1"),
-                    F.xxhash64(F.lit(1), s).alias("h2"),
-                )
 
-        # the joined window string is staged through an inner transform
-        # so the xx128 struct hashes ONE materialized string per window
-        # instead of evaluating the join once per struct field
-        wins = F.when(
-            F.size(tk) >= w,
-            F.transform(
-                F.transform(
-                    starts, lambda i: F.array_join(F.slice(tk, i, w), " ")
-                ),
-                fingerprint,
-            ),
+    def fingerprint(s):
+        return F.struct(
+            F.xxhash64(s).alias("h1"),
+            F.xxhash64(F.lit(1), s).alias("h2"),
         )
+
+    # the joined window string is staged through an inner transform so
+    # the struct hashes ONE materialized string per window instead of
+    # evaluating the join once per struct field
+    wins = F.when(
+        F.size(tk) >= w,
+        F.transform(
+            F.transform(starts, lambda i: F.array_join(F.slice(tk, i, w), " ")),
+            fingerprint,
+        ),
+    )
     return (
         base.select("id", wins.alias("__wins"))
         .select("id", F.posexplode("__wins").alias("idx", "wh"))

@@ -111,9 +111,6 @@ def text_analysis_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wide and the round-robin is a cheap row redistribution.
     d = load_spread(spark, sf_dir, "documents")
     c = F.col("text")
-    minhash = F.array_min(
-        F.transform(F.array_distinct(T.char_shingles(c, 3)), F.md5)
-    )
     return d.select(
         "doc_id",
         T.token_count(c).alias("n_tokens"),
@@ -123,7 +120,7 @@ def text_analysis_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.stopword_ratio(c).alias("stop_ratio"),
         T.detect_language(c).alias("detected_lang"),
         T.fingerprint_md5(c).alias("fp_md5"),
-        minhash.alias("fp_minhash"),
+        T.minhash_fingerprint(c, 3).alias("fp_minhash"),
         C.remove_stopwords(c).alias("no_stopwords"),
     )
 

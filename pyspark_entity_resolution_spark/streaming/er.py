@@ -545,10 +545,6 @@ def incremental_entity_labels(
     finishing as this fold arrives — so callers need no hand-rolled
     retry loop; a lease still held past the wait raises as before.
     """
-    from pyspark.errors import AnalysisException
-
-    from ..operators.clustering import connected_components
-
     _check_store_meta(spark, labels_path, n_buckets)
     fs = _acquire_store_lease_retry(
         spark, labels_path, "incremental_entity_labels", lease_wait
@@ -556,8 +552,7 @@ def incremental_entity_labels(
     try:
         return _fold_locked(
             spark, labels_path, new_matches, left_id, right_id,
-            left_name, right_name, n_buckets, AnalysisException,
-            connected_components,
+            left_name, right_name, n_buckets,
         )
     finally:
         _release_store_lease(spark, labels_path, fs)
@@ -565,9 +560,12 @@ def incremental_entity_labels(
 
 def _fold_locked(
     spark, labels_path, new_matches, left_id, right_id,
-    left_name, right_name, n_buckets, AnalysisException,
-    connected_components,
+    left_name, right_name, n_buckets,
 ) -> FoldReport:
+    from pyspark.errors import AnalysisException
+
+    from ..operators.clustering import connected_components
+
     edges = new_matches.select(
         F.concat(F.lit(left_name + ":"), F.col(left_id).cast("string")).alias("src"),
         F.concat(F.lit(right_name + ":"), F.col(right_id).cast("string")).alias("dst"),
@@ -601,8 +599,7 @@ def _fold_locked(
     report = _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets)
     if report is None:
         report = _fold_distributed(
-            spark, labels_path, edges, prev, cidx, n_buckets,
-            connected_components,
+            spark, labels_path, edges, prev, cidx, n_buckets
         )
     jmeta = _meta_path(spark, labels_path)
     if not jmeta.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jmeta):
@@ -778,8 +775,10 @@ def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
 
 
 def _fold_distributed(
-    spark, labels_path, edges, prev, cidx, n_buckets, connected_components,
+    spark, labels_path, edges, prev, cidx, n_buckets
 ) -> FoldReport:
+    from ..operators.clustering import connected_components
+
     batch_nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))

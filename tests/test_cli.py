@@ -113,14 +113,22 @@ def test_auto_baseline_ref_is_prior_round_not_head():
     assert subject.startswith("round ")
 
 
-def test_ab_bench_worktree_cache_is_sha_keyed():
+def test_ab_bench_worktree_cache_is_sha_keyed(tmp_path, monkeypatch):
     """ensure_worktree resolves movable refs to commit shas before
     caching — a name-keyed cache would silently measure a stale
-    checkout after the ref moves."""
-    from tools.ab_bench import resolve_ref
+    checkout after the ref moves. A REF naming a directory is that
+    checkout as-is: its absolute path, with no git call."""
+    from tools import ab_bench
 
-    sha = resolve_ref("HEAD")
-    assert len(sha) == 40 and resolve_ref(sha) == sha
+    sha = ab_bench.resolve_ref("HEAD")
+    assert len(sha) == 40 and ab_bench.resolve_ref(sha) == sha
+
+    def no_git(*args, **kwargs):
+        raise AssertionError(f"git called for a directory REF: {args}")
+
+    monkeypatch.setattr(ab_bench.subprocess, "run", no_git)
+    monkeypatch.chdir(tmp_path.parent)
+    assert ab_bench.ensure_worktree(tmp_path.name) == str(tmp_path)
 
 
 def test_interleaved_baseline_embeds_pairs_and_summary(monkeypatch):

@@ -260,8 +260,8 @@ def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
 
 
 def test_round_stats_diagnostic_records_every_round(spark):
-    """LAST_RUN_ROUND_STATS (r9, feeding the century-cc probe's
-    per-round decomposition): one entry per executed round, seconds
+    """LAST_RUN_ROUND_STATS (read by erbench's ``clustering.rounds`` and
+    ab_bench's ``cc_<edges>`` rows): one entry per executed round, seconds
     positive, edge counts non-increasing after the first star pass
     settles, and the final round is the probed one that converged."""
     from pyspark.sql import functions as F

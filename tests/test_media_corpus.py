@@ -1,8 +1,8 @@
 """tools/media_corpus.py — the deterministic fixture generator behind
-the multimodal bench row and the century-audio probe. Its pair-count
-contract (EXACTLY 3 qualifying pairs per 10-clip group, n-fold corpus
--> n-fold pairs) is what makes the probe's output assertion meaningful,
-so pin it here against brute force."""
+the multimodal bench row. Its pair-count contract (EXACTLY 3 qualifying
+pairs per 10-clip group, n-fold corpus -> n-fold pairs) is what makes an
+n-fold scale reading's output assertion meaningful, so pin it here
+against brute force."""
 
 from tools.media_corpus import (
     N_WINDOWS,

@@ -171,46 +171,11 @@ def test_profile_fraction_and_clean_doc_retention(spark):
     assert (prof[2].dup_tokens, prof[2].n_spans, prof[2].dup_token_frac) == (0, 0, 0.0)
 
 
-def test_hash_encodings_produce_identical_outputs(spark, monkeypatch):
-    """SPARK_GRAFT_SUBSTR_HASH selects the internal window-fingerprint
-    encoding (md5 hex string / xx128 struct / xx64 bigint). ``wh`` never
-    leaves the operator, so every encoding must yield identical spans
-    and identical cut texts — including the keep-first survivor choice,
-    which orders by (id, start) WITHIN a fingerprint partition and is
-    therefore encoding-independent."""
-    shared = list(range(100, 115))
-    rows = [
-        (0, _text(*range(0, 5), *shared)),
-        (1, _text(*shared, *range(200, 206))),
-        (2, _text(*range(300, 311))),
-        (3, _text(*shared, *shared)),  # internal repetition too
-    ]
-    df = _docs(spark, rows)
-    outs = {}
-    for impl in ("md5", "xx128", "xx64"):
-        monkeypatch.setenv("SPARK_GRAFT_SUBSTR_HASH", impl)
-        spans = sorted(tuple(r) for r in duplicated_spans(df, w=10).collect())
-        cut = sorted(tuple(r) for r in cut_spans(df, w=10).collect())
-        outs[impl] = (spans, cut)
-    assert outs["md5"] == outs["xx128"] == outs["xx64"]
-    assert outs["md5"][0], "fixture must actually contain duplicated spans"
-
-
-def test_hash_encoding_knob_rejects_typos(spark, monkeypatch):
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_HASH", "sha1")
-    df = _docs(spark, [(0, _text(*range(20)))])
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SUBSTR_HASH"):
-        window_fingerprints(df, w=10).collect()
-
-
-def test_xx128_halves_are_independent(spark, monkeypatch):
+def test_xx128_halves_are_independent(spark):
     """Spark chains multi-argument hashes (each argument's hash seeds
     the next), so ``xxhash64(s, lit(1))`` would make the second half
     ``XXH64.hashInt(1, seed=h1)`` — a pure function of the first and a
     64-bit collision class. The literal-first form must not be."""
-    monkeypatch.delenv("SPARK_GRAFT_SUBSTR_HASH", raising=False)
     shared = list(range(100, 115))
     df = _docs(spark, [(0, _text(*range(0, 5), *shared)), (1, _text(*shared))])
     rows = window_fingerprints(df, w=10).select("wh.h1", "wh.h2").collect()

@@ -10,19 +10,28 @@ so machine drift lands on both sides equally.
 
 Usage:
     python tools/ab_bench.py REF1 REF2 [...] [--passes 3] [--runs 3] \
-        [--rows er_pipeline_blocked_n3,er_pipeline_e2e_n3] \
+        [--rows er_pipeline_blocked_n3,er_pipeline_e2e_n3,cc_10000000] \
         [--queries name1,name2]
+
+A REF naming an existing directory is used as the checkout as-is (for
+example a ``git clone`` of the parent commit); any other REF is a git
+ref checked out into a detached worktree cached by commit sha.
 
 ``--rows`` selects the corpus-generated ER pipeline rows (measured
 exactly as bench.py measures them: min-of-``--runs`` inside one JVM,
-noop sink); ``--queries`` selects registry queries by name (same
-min-of-N, noop sink, sf dir from $SPARK_GRAFT_SF_DIR). bench.py embeds
-:func:`interleaved_ab` for the per-artifact same-host baseline. The probe script is embedded
-here and injected into every worktree unchanged, so old refs that
-predate any bench.py flag still measure identically — the only API it
-uses (pipeline.ERConfig / prepare_publications / match_publications /
-run_er_pipeline, plans.registry.all_queries, session.get_spark) has
-been stable since round 4.
+noop sink) and ``cc_<edges>`` rows: ``connected_components`` on a
+hashed-edge graph of ``<edges>`` edges over ``<edges> // 2`` nodes,
+timed once per JVM (a 100M-edge call runs for minutes), reported as
+seconds plus ``<row>_components`` and ``<row>_rounds``. ``--queries``
+selects registry queries by name (same min-of-N, noop sink, sf dir from
+$SPARK_GRAFT_SF_DIR). bench.py embeds :func:`interleaved_ab` for the
+per-artifact same-host baseline. The probe script is embedded here and
+injected into every checkout unchanged, so old refs that predate any
+bench.py flag still measure identically — the only API it uses
+(pipeline.ERConfig / prepare_publications / match_publications /
+run_er_pipeline, clustering.connected_components,
+plans.registry.all_queries, session.get_spark) has been stable since
+round 4.
 
 Output: one JSON line per (pass, ref, row) to stdout, then a summary
 with per-ref min/median across passes.
@@ -92,7 +101,8 @@ if queries:
         fn = spec.fn
         out[name] = _min_runs(lambda: _noop(fn(spark, sf_dir)))
 
-if rows:
+er_rows = [r for r in rows if r.startswith("er_")]
+if er_rows:
     # bench.py has carried _gen_er_corpus with these exact params since
     # r3. NOTE: the on-disk corpus cache is SHARED across refs (the
     # generator returns early when the dumps exist), so whichever arm
@@ -107,7 +117,7 @@ if rows:
     )
     pa, pb = _gen_er_corpus("/tmp/er_bench_corpus_v1")
 
-    if "er_pipeline_blocked_n3" in rows:
+    if "er_pipeline_blocked_n3" in er_rows:
         cfg = ERConfig(window=3)
         def _blocked():
             left = prepare_publications(spark, pa, cfg)
@@ -115,7 +125,7 @@ if rows:
             _noop(match_publications(left, right, cfg))
         out["er_pipeline_blocked_n3"] = _min_runs(_blocked)
 
-    if "er_pipeline_e2e_n3" in rows:
+    if "er_pipeline_e2e_n3" in er_rows:
         import shutil, tempfile
         from pyspark_entity_resolution_spark.sources.io import write_csv
         dest = tempfile.mkdtemp(prefix="ab_er_out_")
@@ -127,6 +137,22 @@ if rows:
             out["er_pipeline_e2e_n3"] = _min_runs(_e2e)
         finally:
             shutil.rmtree(dest, ignore_errors=True)
+
+for row in (r for r in rows if r.startswith("cc_")):
+    from pyspark_entity_resolution_spark.operators import clustering
+    n_edges = int(row[len("cc_"):])
+    n_nodes = n_edges // 2
+    edges = spark.range(n_edges).select(
+        (F.abs(F.xxhash64(F.col("id"))) % n_nodes).alias("src"),
+        (F.abs(F.xxhash64(F.col("id") + 7_777_777)) % n_nodes).alias("dst"),
+    )
+    t0 = time.perf_counter()
+    labels = clustering.connected_components(edges)
+    n_components = labels.select("component").distinct().count()
+    out[row] = round(time.perf_counter() - t0, 3)
+    out[f"{row}_components"] = n_components
+    # getattr: a ref without the round-stats diagnostic still runs
+    out[f"{row}_rounds"] = len(getattr(clustering, "LAST_RUN_ROUND_STATS", []))
 
 print("AB_RESULT " + json.dumps(out), flush=True)
 spark.stop()
@@ -144,8 +170,11 @@ def resolve_ref(ref: str) -> str:
 
 
 def ensure_worktree(ref: str) -> str:
-    """Detached worktree for ref under /tmp, cached by COMMIT SHA,
-    created once and reused."""
+    """The checkout a REF names: an existing directory as-is (its
+    absolute path, no git call), else a detached worktree under /tmp
+    cached by COMMIT SHA, created once and reused."""
+    if os.path.isdir(ref):
+        return os.path.abspath(ref)
     sha = resolve_ref(ref)
     path = f"/tmp/ab_worktree_{sha[:16]}"
     if not os.path.isdir(path):
@@ -169,7 +198,8 @@ def run_probe(
     env["AB_RUNS"] = str(runs)
     proc = subprocess.run(
         [sys.executable, "-c", PROBE], env=env, cwd=worktree,
-        capture_output=True, text=True, timeout=1800,
+        # an hour: the 100M-edge CC loop alone has read ~635 s
+        capture_output=True, text=True, timeout=3600,
     )
     for line in proc.stdout.splitlines():
         if line.startswith("AB_RESULT "):

@@ -1,5 +1,5 @@
 """Deterministic synthetic media corpus (WAV clips + PNG images) for the
-multimodal bench row and the century-audio scale probe.
+multimodal bench row.
 
 Layout: MEDIA_SCHEMA rows. Audio ids come in groups of 10 — member 0 is
 the group's base clip, members 1-2 are planted near-duplicates (one
@@ -8,12 +8,13 @@ within-group match fractions are 23/24, 23/24, and 22/24 — all above
 the 0.9 default), members 3-9 are unrelated patterns. Every level
 pattern is a pure integer hash of (group, member, window), so an n-fold
 corpus has exactly n-fold groups and EXACTLY n-fold qualifying pairs
-(3 per group): the pair-count assertion of the probe. Images are
-32x32 RGB PNGs with id-seeded noise, encoded with the stdlib (zlib +
-filter-0 scanlines) — real decode work for the png-stdlib kernel.
+(3 per group): the pair-count assertion of an n-fold scale reading.
+Images are 32x32 RGB PNGs with id-seeded noise, encoded with the stdlib
+(zlib + filter-0 scanlines) — real decode work for the png-stdlib
+kernel.
 
-Generation is DISTRIBUTED (mapInPandas over spark.range): the x100
-probe corpus never funnels through the driver.
+Generation is DISTRIBUTED (mapInPandas over spark.range): a x100
+corpus never funnels through the driver.
 """
 
 from __future__ import annotations
