@@ -169,7 +169,8 @@ def connected_components(
       local DataFrame with the same contract (null-endpoint edges
       dropped, self-loop-only nodes as singletons, every node once) and
       ``LAST_RUN_ROUND_STATS`` reads ``[]``. Larger graphs run the star
-      rounds below.
+      rounds below, and raise RuntimeError when ``max_iterations``
+      rounds pass without the fixed-point probe declaring convergence.
     - EAGER at call time: the caller's edge plan is materialized once
       (``localCheckpoint`` + count) so the iterative rounds never
       re-evaluate an expensive upstream candidate join. This is not a
@@ -383,6 +384,7 @@ def _connected_components_loop(
     # union) and must stay resident until round 1's output materializes
     prev_count = n_edges
     pending_release = raw
+    converged = False
 
     try:
         for _ in range(max_iterations):
@@ -398,7 +400,6 @@ def _connected_components_loop(
                 # further consumer (self_only is its own checkpoint)
                 _release_checkpoint(pending_release)
                 pending_release = None
-            converged = False
             # COUNT-GATED fixed-point probe: a converged round
             # necessarily reproduces the previous round's edge count
             # (f(fixpoint) = fixpoint), so rounds where the count still
@@ -459,6 +460,13 @@ def _connected_components_loop(
             _release_checkpoint(prev)
             if converged:
                 break
+        if not converged:
+            # an unconverged round output is not a star forest: a node
+            # can carry edges to two roots and come back twice
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"max_iterations={max_iterations} rounds"
+            )
 
         # converged: e is a star forest (child -> root). Roots label
         # themselves, and nodes whose only edges were self-loops come

@@ -122,20 +122,18 @@ def streaming_match_publications(
     max_levenshtein: int = 10,
     min_jaccard: float = 0.6,
 ) -> DataFrame:
-    """Streaming twin of the batch publication matcher
-    (operators/matching.py score_and_match): block on ``year``, then the
-    reference's exact predicate chain — venue agreement, bounded author
-    Levenshtein, three-band match rule, title Jaccard threshold.
+    """Streaming twin of the batch publication matcher: block on
+    ``year``, then run the batch predicate chain itself
+    (operators/matching.py score_and_match) on the joined ``a_``/``b_``
+    pairs.
 
     Inputs are cleaned publication streams with at least
     (id, title, authors, year, venue, num_authors, ts). Emits matched
     pairs with the batch matcher's column contract
     (a_id, b_id, scores, title_jaccard_sim).
     """
-    from ..functions.similarity import both_contain, match_rule, token_jaccard
-    from ..operators.matching import DEFAULT_VENUES
+    from ..operators.matching import JACCARD_COL, SCORE_COL, score_and_match
 
-    venues = DEFAULT_VENUES if venues is None else venues
     pairs = streaming_candidate_pairs(
         left,
         right,
@@ -145,16 +143,13 @@ def streaming_match_publications(
         left_watermark=watermark,
         right_watermark=watermark,
     )
-    scores = F.levenshtein("a_authors", "b_authors", max_levenshtein - 1)
     return (
-        pairs.filter(both_contain("a_venue", "b_venue", venues))
-        .withColumn("scores", scores)
-        .filter(F.col("scores") >= 0)
-        .filter(match_rule("scores", "a_num_authors", "b_num_authors", max_levenshtein))
-        .withColumn("title_jaccard_sim", token_jaccard("a_title", "b_title"))
-        .filter(F.col("title_jaccard_sim") >= min_jaccard)
+        score_and_match(
+            pairs, venues=venues, max_levenshtein=max_levenshtein,
+            min_jaccard=min_jaccard,
+        )
         .select(
-            "a_id", "b_id", "scores", "title_jaccard_sim",
+            "a_id", "b_id", SCORE_COL, JACCARD_COL,
             F.col(f"a_{ts_col}").alias("a_ts"),
             F.col(f"b_{ts_col}").alias("b_ts"),
         )
@@ -180,16 +175,11 @@ class FoldReport:
     read from the store at ``labels_path`` only when the property is
     accessed (a fold pays no store listing for a table its caller may
     never read); it reflects the store at access time.
-    ``expansion_buckets`` is the bucket list the member expansion was
-    pruned to (``None`` on a full-store fallback: index absent/behind,
-    or a cold start). ``expansion_plan`` is the formatted physical plan
-    of the expansion scan (its ``PartitionFilters`` line shows the
-    pruning) — a string, never a live DataFrame, because the fold's
-    dynamic overwrite replaces the scanned files and re-executing such
-    a plan after the fold would read deleted files. ``n_hit_components``
-    counts the previously-known components this batch touched (``None``
-    on cold start or when the index was absent — the fold then never
-    needed the number). ``written_buckets`` is the sorted bucket list
+    ``expansion_buckets`` is always ``None``: the member expansion reads
+    the whole store. ``n_hit_components`` counts the previously-known
+    components this batch touched (driver path only; ``None`` on the
+    distributed path and on cold start, which never count them).
+    ``written_buckets`` is the sorted bucket list
     this fold actually rewrote (changed rows only; ``None`` on cold
     start, where every bucket is laid down). ``on_driver`` tells whether
     the fold took the driver path (every collect under
@@ -197,7 +187,6 @@ class FoldReport:
 
     labels_path: str
     expansion_buckets: list[int] | None = None
-    expansion_plan: str | None = None
     n_hit_components: int | None = None
     cold_start: bool = False
     written_buckets: list[int] | None = None
@@ -225,8 +214,8 @@ def _lease_path(spark, labels_path: str):
 
 def _acquire_store_lease(spark, labels_path: str, owner: str):
     """Create-exclusive writer lease for the label store. The store's
-    write protocol (index-ahead ordering, dynamic partition overwrite,
-    compaction's read-then-replace) is SINGLE-WRITER: two concurrent
+    write protocol (dynamic partition overwrite, compaction's
+    read-then-replace) is SINGLE-WRITER: two concurrent
     writers would silently corrupt buckets. ``foreachBatch`` already
     serializes fold+compact inside one streaming query; this lease
     extends the guarantee to direct callers in other processes.
@@ -311,15 +300,6 @@ def break_store_lease(spark, labels_path: str) -> bool:
     jpath = _lease_path(spark, labels_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.delete(jpath, False))
-
-
-def _cidx_path(labels_path: str) -> str:
-    """Sibling directory of the label store holding the component->bucket
-    index: one row per distinct ``(component, bucket)`` pair, partitioned
-    by ``bucket`` exactly like the store itself. The index is what makes
-    member expansion O(touched components): it answers "which buckets
-    hold members of these components" without scanning node rows."""
-    return labels_path.rstrip("/") + "__cidx"
 
 
 def _meta_path(spark, labels_path: str):
@@ -447,15 +427,6 @@ def _write_buckets(df: DataFrame, path: str, dynamic: bool = True) -> None:
     writer.partitionBy("bucket").parquet(path)
 
 
-def _write_component_index(labels: DataFrame, cidx_path: str, dynamic: bool) -> None:
-    """(Re)write component->bucket index rows from ``labels`` carrying
-    (component, bucket): per-fold maintenance with ``dynamic=True``,
-    the whole index (cold start / migration) otherwise."""
-    _write_buckets(
-        labels.select("component", "bucket").distinct(), cidx_path, dynamic
-    )
-
-
 def incremental_entity_labels(
     spark,
     labels_path: str,
@@ -498,23 +469,11 @@ def incremental_entity_labels(
     defines the layout); a store written by the pre-bucketed flat
     layout is migrated wholesale on its first fold.
 
-    READS are bucket-pruned symmetrically via a component->bucket side
-    index (``{labels_path}__cidx``: one tiny row per distinct
-    (component, bucket) pair, partitioned by bucket like the store):
-    the node probe prunes to the batch nodes' own buckets, and member
-    expansion reads only the buckets the index lists for the hit
-    components — per-batch read is O(touched components), matching the
-    write's O(touched buckets). Index maintenance rides the same
-    dynamic partition overwrite (touched buckets only). Crash safety:
-    the index is written BEFORE the store each fold, so after a crash
-    between the two writes the index is at most AHEAD of the store —
-    a component id the interrupted fold retired is then absent from
-    the index, which the fold detects and answers with one
-    full-store expansion (ids keep their pre-fold buckets listed,
-    because member sets only grow, so a present id's bucket list is
-    always a superset of its true buckets); a store with no index yet
-    (pre-index layout) takes the same full-scan path once and builds
-    the index after its fold.
+    READS: the node probe prunes to the batch nodes' own buckets; when
+    the batch touches a stored component, member expansion scans the
+    rest of the store for its members, because a component's members
+    scatter over ~min(members, n_buckets) buckets. Each fold makes one
+    store write.
 
     Node identity is namespaced ``{side}:{id}`` exactly like the batch
     operator (operators/clustering.py cluster_matched_pairs), so drained
@@ -527,9 +486,9 @@ def incremental_entity_labels(
     are each collected under a cap of ``clustering.DRIVER_BOUND`` rows
     (100k; the batch edges plus the members also stay under it, the
     connected-components driver rule), labeled by the same min-root
-    union-find connected components uses, and written — index first,
-    store second — from one bucket-sorted local relation each, so a
-    rewritten bucket lands in ~one file. Nothing is written before the
+    union-find connected components uses, and written from one
+    bucket-sorted local relation, so a rewritten bucket lands in ~one
+    file. Nothing is written before the
     last collect: when any capped collect exceeds the bound, the fold
     runs the distributed path described above instead, with the same
     results.
@@ -588,37 +547,18 @@ def _fold_locked(
         bucketed = labels.withColumn("bucket", _node_bucket(n_buckets))
         _write_buckets(bucketed, labels_path, dynamic=False)
         _write_store_meta(spark, labels_path, n_buckets)
-        _write_component_index(bucketed, _cidx_path(labels_path), dynamic=False)
         return FoldReport(labels_path, cold_start=True)
 
     # --- incremental fold against the bucketed store -----------------
-    try:
-        cidx = spark.read.parquet(_cidx_path(labels_path))
-    except AnalysisException:
-        cidx = None
-    report = _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets)
+    report = _fold_on_driver(spark, labels_path, edges, prev, n_buckets)
     if report is None:
-        report = _fold_distributed(
-            spark, labels_path, edges, prev, cidx, n_buckets
-        )
+        report = _fold_distributed(spark, labels_path, edges, prev, n_buckets)
     jmeta = _meta_path(spark, labels_path)
     if not jmeta.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jmeta):
         # upgrade a pre-sidecar store in place (the check above already
         # accepted this fold's n_buckets as the layout)
         _write_store_meta(spark, labels_path, n_buckets)
-    if cidx is None:
-        # a pre-index store rebuilds the whole index after its fold
-        _write_component_index(
-            spark.read.parquet(labels_path), _cidx_path(labels_path),
-            dynamic=False,
-        )
     return report
-
-
-def _plan_string(spark, df: DataFrame) -> str:
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
 
 
 def _capped_collect(df: DataFrame, cap: int):
@@ -656,18 +596,17 @@ def _write_sorted_buckets(spark, path: str, names: list[str], rows) -> None:
     _write_buckets(spark.createDataFrame(table), path)
 
 
-def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
+def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
     """The fold with every intermediate on the driver, or None (having
     written nothing) when a capped collect exceeds the bound. Same
-    probes, fallback rule, labels and written buckets as
-    :func:`_fold_distributed`.
+    labels and written buckets as :func:`_fold_distributed`.
 
-    The stored rows are collected by whole buckets: first the batch
-    nodes' buckets (the node probe), then the index-listed member
-    buckets not yet loaded. Every changed node lies in a loaded bucket,
-    so the carried rows of each rewritten bucket are already on the
-    driver. Each write is one bucket-sorted local relation, so a
-    rewritten bucket lands in ~one file."""
+    Three capped collects of stored rows: the batch nodes' whole
+    buckets (the node probe), the hit components' members in every
+    other bucket, and the whole buckets that hold a changed member but
+    were not loaded yet, so the write carries every row of each
+    rewritten bucket. The write is one bucket-sorted local relation,
+    so a rewritten bucket lands in ~one file."""
     from ..operators import clustering
 
     # everything held on the driver (batch edges plus stored rows, a
@@ -688,7 +627,7 @@ def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
         batch_bucket[src], batch_bucket[dst] = src_bucket, dst_bucket
     batch_bucket.pop(None, None)  # a null id matches no stored node
 
-    stored = {}  # node -> (component, bucket) of every loaded bucket
+    stored = {}  # node -> (component, bucket) of every collected row
 
     def load(bucket_filter) -> bool:
         nonlocal budget
@@ -705,32 +644,18 @@ def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
     loaded = sorted(set(batch_bucket.values()))
     if not load(F.col("bucket").isin(loaded)):
         return None
-    hit = sorted({stored[n][0] for n in batch_bucket if n in stored})
-    member_buckets, n_hit = None, None
-    if cidx is not None:
-        n_hit = len(hit)
-        listed = _capped_collect(
-            cidx.filter(_sql_in("component", [_sql_string(c) for c in hit]))
-            .select("component", "bucket"),
-            clustering.DRIVER_BOUND,
-        )
-        if listed is None:
-            return None
-        if len({r.component for r in listed}) == n_hit:
-            member_buckets = sorted({r.bucket for r in listed})
-    if hit:
-        # member expansion: the listed buckets (on a fallback, the whole
-        # store) not loaded yet
-        rest = (
-            ~F.col("bucket").isin(loaded) if member_buckets is None
-            else F.col("bucket").isin(sorted(set(member_buckets) - set(loaded)))
-        )
-        if not load(rest):
-            return None
-    hit_set = set(hit)
+    hit = {stored[n][0] for n in batch_bucket if n in stored}
+    # member expansion: the hit components' rows in the other buckets,
+    # filtered where they are read (a component's members scatter, so
+    # whole buckets would bring the rest of the store to the driver)
+    if hit and not load(
+        ~F.col("bucket").isin(loaded)
+        & _sql_in("component", [_sql_string(c) for c in hit])
+    ):
+        return None
     labels = clustering._min_root_labels(
         [(s, d) for s, d, _, _ in edge_rows if s is not None and d is not None]
-        + [(n, c) for n, (c, _) in stored.items() if c in hit_set]
+        + [(n, c) for n, (c, _) in stored.items() if c in hit]
     )
     # new nodes plus members of retired ids (see _fold_distributed)
     changed = {
@@ -741,6 +666,11 @@ def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
     if not changed.keys() <= bucket_of.keys():
         return None  # a root with no stored row: label it the Spark way
     written_buckets = sorted({bucket_of[n] for n in changed})
+    # the other rows of a rewritten bucket that was not loaded whole
+    # (one holding a retired member) ride along in the rewrite
+    partial = sorted(set(written_buckets) - set(loaded))
+    if partial and not load(F.col("bucket").isin(partial)):
+        return None
     rewrite = set(written_buckets)
     to_write = sorted(
         [(n, c, bucket_of[n]) for n, c in changed.items()]
@@ -749,34 +679,18 @@ def _fold_on_driver(spark, labels_path, edges, prev, cidx, n_buckets):
         key=lambda r: (r[2], r[0]),
     )
     if to_write:
-        # index first, store second, as on the distributed path
-        if cidx is not None:
-            index = sorted(
-                {(c, b) for _, c, b in to_write}, key=lambda r: (r[1], r[0])
-            )
-            _write_sorted_buckets(
-                spark, _cidx_path(labels_path), ["component", "bucket"], index
-            )
         _write_sorted_buckets(
             spark, labels_path, ["node", "component", "bucket"], to_write
         )
-    scan = (
-        prev if member_buckets is None
-        else prev.filter(F.col("bucket").isin(member_buckets))
-    )
     return FoldReport(
         labels_path,
-        expansion_buckets=member_buckets,
-        expansion_plan=_plan_string(spark, scan),
-        n_hit_components=n_hit,
+        n_hit_components=len(hit),
         written_buckets=written_buckets,
         on_driver=True,
     )
 
 
-def _fold_distributed(
-    spark, labels_path, edges, prev, cidx, n_buckets
-) -> FoldReport:
+def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
     from ..operators.clustering import connected_components
 
     batch_nodes = (
@@ -799,67 +713,11 @@ def _fold_distributed(
         .join(batch_buckets, on=["bucket", "node"], how="inner")
         .select("component")
         .distinct()
-        # reused by the index probe, the bucket-pruned expansion, and
-        # (on fallback) the full expansion — materialize once
+        # read by both uses of the member expansion (the CC input and
+        # the diff join) — materialize once
         .localCheckpoint()
     )
-    # member expansion, bucket-pruned through the component->bucket
-    # index: collect the (<= n_buckets) bucket ids holding members of
-    # hit components and read only those directories. Fall back to one
-    # full-store expansion when the index is absent (pre-index store) or
-    # does not know every hit component (crash between the index and
-    # store writes of a previous fold — see the docstring's crash-safety
-    # contract).
-    member_buckets, n_hit = None, None
-    if cidx is not None:
-        # ONE action answers all three probe questions (how many hit
-        # components, how many the index knows, which buckets): marker
-        # rows for the hit components ride a unionByName next to the
-        # inner-join result, so the former extra hit_components.count()
-        # round trip is folded into this aggregation. The big cidx side
-        # keeps its broadcast-inner-join shape.
-        hits_with_buckets = cidx.join(
-            F.broadcast(hit_components), on="component", how="inner"
-        )
-        probe = (
-            hits_with_buckets.select(
-                "component", "bucket", F.lit(False).alias("__marker")
-            )
-            .unionByName(
-                hit_components.select(
-                    "component",
-                    F.lit(None).cast(cidx.schema["bucket"].dataType).alias("bucket"),
-                    F.lit(True).alias("__marker"),
-                )
-            )
-            .agg(
-                F.count_distinct(
-                    F.when(F.col("__marker"), F.col("component"))
-                ).alias("n_hit"),
-                F.count_distinct(
-                    F.when(~F.col("__marker"), F.col("component"))
-                ).alias("known"),
-                F.collect_set("bucket").alias("buckets"),  # nulls ignored
-            )
-            .collect()[0]
-        )
-        n_hit = probe["n_hit"]
-        if probe["known"] == n_hit:
-            member_buckets = probe["buckets"]
-    scan = (
-        prev
-        if member_buckets is None
-        else prev.filter(F.col("bucket").isin([int(b) for b in member_buckets]))
-    )
-    expansion_buckets = (
-        None if member_buckets is None else sorted(int(b) for b in member_buckets)
-    )
-    # the plan STRING is captured for the report (PartitionFilters show
-    # the pruning); the live scan DataFrame is deliberately not exposed
-    # — after the dynamic overwrite below its captured file listing
-    # points at deleted files
-    expansion_plan = _plan_string(spark, scan)
-    members = scan.join(hit_components, on="component", how="left_semi")
+    members = prev.join(hit_components, on="component", how="left_semi")
     star = members.select(
         F.col("node").alias("src"), F.col("component").alias("dst")
     )
@@ -876,11 +734,7 @@ def _fold_distributed(
     # of RETIRED (merged-away) component ids differ. `members` is
     # exactly the prior rows of every node whose label could change
     # (batch nodes not in it are new), so one left join against it
-    # classifies each new_labels row. Index invariants survive
-    # unchanged: a retired id's members ALL change, so every bucket
-    # listing it is rewritten (purging it), and unrewritten index
-    # buckets stay valid because their store buckets are untouched; a
-    # surviving id keeps its (superset-safe) listings.
+    # classifies each new_labels row.
     changed = (
         new_labels.join(
             members.select("node", F.col("component").alias("__old")),
@@ -893,7 +747,7 @@ def _fold_distributed(
     # materialize the (small) changed set once: its bucket ids drive a
     # STATIC partition filter for the carried read (the same
     # collect-then-isin pattern as the node probe above — join-based
-    # pruning would hinge on DPP firing), and both writes re-read it
+    # pruning would hinge on DPP firing), and the write re-reads it
     changed = changed.withColumn(
         "bucket", _node_bucket(n_buckets)
     ).localCheckpoint()
@@ -909,21 +763,8 @@ def _fold_distributed(
         .select("node", "component", "bucket")
         .localCheckpoint()
     )
-    to_write = changed.unionByName(carried)
-    # index first, store second (inputs are checkpointed, so the two
-    # writes see identical rows): a crash between them leaves the index
-    # ahead of the store, the recoverable direction — see docstring. A
-    # pre-index store instead rebuilds the whole index after its fold.
-    if cidx is not None:
-        _write_component_index(to_write, _cidx_path(labels_path), dynamic=True)
-    _write_buckets(to_write, labels_path)
-    return FoldReport(
-        labels_path,
-        expansion_buckets=expansion_buckets,
-        expansion_plan=expansion_plan,
-        n_hit_components=n_hit,
-        written_buckets=written_buckets,
-    )
+    _write_buckets(changed.unionByName(carried), labels_path)
+    return FoldReport(labels_path, written_buckets=written_buckets)
 
 
 def _bucket_file_counts(spark, path: str) -> dict[int, int]:
@@ -952,12 +793,11 @@ def compact_label_store(
     spark,
     labels_path: str,
     max_files_per_bucket: int = 8,
-    include_index: bool = True,
     lease_wait: float = 0.0,
 ) -> list[int]:
     """Rewrite-coalesce label-store buckets whose data-file count exceeds
     ``max_files_per_bucket``, down to ~one file per bucket. Returns the
-    compacted bucket ids (label store; the index compacts silently).
+    compacted bucket ids.
 
     Every fold's dynamic partition overwrite can emit one file per task
     per touched bucket, so hot buckets accumulate small files between
@@ -981,34 +821,22 @@ def compact_label_store(
         spark, labels_path, "compact_label_store", lease_wait
     )
     try:
-        return _compact_locked(
-            spark, labels_path, max_files_per_bucket, include_index
-        )
+        return _compact_locked(spark, labels_path, max_files_per_bucket)
     finally:
         _release_store_lease(spark, labels_path, fs)
 
 
-def _compact_locked(
-    spark, labels_path, max_files_per_bucket, include_index
-) -> list[int]:
-    compacted: list[int] = []
-    paths = [labels_path]
-    if include_index:
-        paths.append(_cidx_path(labels_path))
-    for path in paths:
-        counts = _bucket_file_counts(spark, path)
-        over = sorted(b for b, n in counts.items() if n > max_files_per_bucket)
-        if not over:
-            continue
+def _compact_locked(spark, labels_path, max_files_per_bucket) -> list[int]:
+    counts = _bucket_file_counts(spark, labels_path)
+    over = sorted(b for b, n in counts.items() if n > max_files_per_bucket)
+    if over:
         rows = (
-            spark.read.parquet(path)
+            spark.read.parquet(labels_path)
             .filter(F.col("bucket").isin(over))
             .localCheckpoint()  # materialize before replacing source files
         )
-        _write_buckets(rows.repartition(len(over), "bucket"), path)
-        if path == labels_path:
-            compacted = over
-    return compacted
+        _write_buckets(rows.repartition(len(over), "bucket"), labels_path)
+    return over
 
 
 def streaming_resolve_entities(

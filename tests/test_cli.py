@@ -131,6 +131,37 @@ def test_ab_bench_worktree_cache_is_sha_keyed(tmp_path, monkeypatch):
     assert ab_bench.ensure_worktree(tmp_path.name) == str(tmp_path)
 
 
+def test_ab_bench_removes_only_the_worktrees_it_created(tmp_path, monkeypatch):
+    """interleaved_ab removes the git worktree it added for a git REF,
+    also when a probe raises out of the pass loop, and leaves a
+    directory REF alone."""
+    import pytest
+
+    from tools import ab_bench
+
+    git_calls = []
+
+    def fake_run(cmd, **kwargs):
+        git_calls.append(cmd)
+
+    def failing_probe(tree, *args, **kwargs):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(ab_bench.subprocess, "run", fake_run)
+    monkeypatch.setattr(ab_bench, "resolve_ref", lambda ref: "f" * 40)
+    monkeypatch.setattr(ab_bench, "run_probe", failing_probe)
+    with pytest.raises(KeyboardInterrupt):
+        ab_bench.interleaved_ab(
+            [str(tmp_path), "HEAD"], ["cc_1000"], [], passes=1, runs=1
+        )
+    path = "/tmp/ab_worktree_" + "f" * 16
+    assert [c[:3] for c in git_calls] == [
+        ["git", "worktree", "add"], ["git", "worktree", "remove"]
+    ]
+    assert git_calls[-1][-1] == path
+    assert tmp_path.is_dir()
+
+
 def test_interleaved_baseline_embeds_pairs_and_summary(monkeypatch):
     """The embedded same-host baseline is interleaved-grade since r8:
     the artifact block must carry the per-pass pair records verbatim

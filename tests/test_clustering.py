@@ -217,10 +217,26 @@ def test_labels_match_union_find_on_chain_and_string_keys(spark):
         assert got == _union_find_labels(named), path
 
 
+def test_star_loop_raises_when_iterations_run_out(spark):
+    """An unconverged round output is not a star forest (one round on a
+    65-node chain leaves nodes with edges to two roots), so running out
+    of max_iterations must raise instead of returning duplicate node
+    rows; with enough rounds the same chain labels as one component."""
+    import pytest
+
+    chain = [(i, i + 1) for i in range(64)]
+    edges = spark.createDataFrame(chain, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="max_iterations=1"):
+        connected_components(edges, max_iterations=1, **CC_PATHS["star_loop"])
+    rows = connected_components(edges, **CC_PATHS["star_loop"]).collect()
+    assert len(rows) == 65 and {r["component"] for r in rows} == {0}
+
+
 def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
     """The caller's materialized edge list is released when the loop
-    runs zero rounds and when a round raises, not only after round 1,
-    and after the driver-side labeling of a small graph."""
+    runs zero rounds (and raises for not converging) and when a round
+    raises, not only after round 1, and after the driver-side labeling
+    of a small graph."""
     import pytest
 
     from pyspark_entity_resolution_spark.operators import clustering as C
@@ -244,7 +260,8 @@ def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
     def persisted(rdd_id):
         return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
 
-    C.connected_components(edges, max_iterations=0, **loop).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        C.connected_components(edges, max_iterations=0, **loop)
     assert not persisted(raw_ids[-1])
 
     C.connected_components(edges).collect()

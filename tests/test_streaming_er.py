@@ -409,167 +409,6 @@ def test_flat_label_store_migrates_to_bucketed(spark, tmp_path):
     assert got == expected
 
 
-def test_member_expansion_prunes_to_index_buckets(spark, tmp_path):
-    """The component->bucket index must narrow member expansion to the
-    buckets actually holding members of hit components: the fold records
-    a proper subset of live buckets, the pruned scan's physical plan
-    carries a partition filter on the bucket column, and the resulting
-    labels still equal the from-scratch batch run."""
-    import os
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        cluster_matched_pairs,
-    )
-    from pyspark_entity_resolution_spark.streaming import er as ser
-
-    labels_path = str(tmp_path / "labels_cidx")
-    n_buckets = 8
-    batch1 = spark.createDataFrame(
-        [(i, 100 + i) for i in range(1, 13)], "a_id long, b_id long"
-    )
-    ser.incremental_entity_labels(spark, labels_path, batch1, n_buckets=n_buckets)
-    assert os.path.isdir(labels_path + "__cidx")  # index laid down at cold start
-
-    live_buckets = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(labels_path)
-        if d.startswith("bucket=")
-    }
-    assert len(live_buckets) > 2
-
-    batch2 = spark.createDataFrame([(1, 120)], "a_id long, b_id long")
-    report = ser.incremental_entity_labels(
-        spark, labels_path, batch2, n_buckets=n_buckets
-    )
-
-    pruned = report.expansion_buckets
-    assert pruned is not None  # the index answered, no full-scan fallback
-    assert set(pruned) < live_buckets  # strictly fewer buckets than the store
-    assert report.n_hit_components == 1  # one prior component touched
-    pf = report.expansion_plan.split("PartitionFilters:", 1)
-    assert len(pf) == 2 and "bucket" in pf[1].splitlines()[0]
-    # observability is the FoldReport contract alone: the r5-era
-    # process-global back-channel is gone (deprecated r6, removed r7)
-    assert not hasattr(ser, "LAST_FOLD_INFO")
-
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in ser.entity_table(spark, labels_path).collect()
-    }
-    expected = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in cluster_matched_pairs(
-            batch1.unionByName(batch2), "a_id", "b_id"
-        ).collect()
-    }
-    assert got == expected
-
-
-def test_expansion_full_scan_without_index_then_rebuilds(spark, tmp_path):
-    """A bucketed store with no component index (pre-index layout, or a
-    crash before the cold-start index write) folds via one full-store
-    expansion, still lands on batch-equal labels, and leaves a rebuilt
-    index behind for the next fold."""
-    import os
-    import shutil
-
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        cluster_matched_pairs,
-    )
-    from pyspark_entity_resolution_spark.streaming import er as ser
-
-    labels_path = str(tmp_path / "labels_noidx")
-    batch1 = spark.createDataFrame(
-        [(1, 101), (2, 102)], "a_id long, b_id long"
-    )
-    batch2 = spark.createDataFrame([(1, 102)], "a_id long, b_id long")
-    ser.incremental_entity_labels(spark, labels_path, batch1, n_buckets=4)
-    shutil.rmtree(labels_path + "__cidx")
-
-    report = ser.incremental_entity_labels(
-        spark, labels_path, batch2, n_buckets=4
-    )
-    assert report.expansion_buckets is None  # full-scan path
-    assert os.path.isdir(labels_path + "__cidx")  # rebuilt after the fold
-
-    got = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in ser.entity_table(spark, labels_path).collect()
-    }
-    expected = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in cluster_matched_pairs(
-            batch1.unionByName(batch2), "a_id", "b_id"
-        ).collect()
-    }
-    assert got == expected
-
-    # the rebuilt index serves the NEXT fold (pruned again)
-    batch3 = spark.createDataFrame([(2, 103)], "a_id long, b_id long")
-    report = ser.incremental_entity_labels(
-        spark, labels_path, batch3, n_buckets=4
-    )
-    assert report.expansion_buckets is not None
-
-
-def test_expansion_falls_back_when_index_misses_a_component(
-    spark, tmp_path, monkeypatch
-):
-    """Crash-recovery contract: a hit component absent from the index
-    (the index ran ahead of the store in an interrupted fold) must force
-    the full-store expansion, never a silent partial one — on both the
-    driver and the distributed path."""
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
-    from pyspark_entity_resolution_spark.operators import clustering
-    from pyspark_entity_resolution_spark.operators.clustering import (
-        cluster_matched_pairs,
-    )
-    from pyspark_entity_resolution_spark.streaming import er as ser
-
-    batch1 = spark.createDataFrame(
-        [(1, 101), (2, 102)], "a_id long, b_id long"
-    )
-    batch2 = spark.createDataFrame([(1, 103)], "a_id long, b_id long")
-    expected = {
-        (r["id"], r["df_name"], r["cluster_id"])
-        for r in cluster_matched_pairs(
-            batch1.unionByName(batch2), "a_id", "b_id"
-        ).collect()
-    }
-    for bound in (clustering.DRIVER_BOUND, 0):
-        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
-        labels_path = str(tmp_path / f"labels_stale_{bound}")
-        cidx_path = labels_path + "__cidx"
-        ser.incremental_entity_labels(spark, labels_path, batch1, n_buckets=4)
-
-        # simulate an index that no longer knows the component of node a:1
-        victim = (
-            spark.read.parquet(labels_path)
-            .filter(F.col("node") == "a:1")
-            .select("component")
-            .collect()[0][0]
-        )
-        pruned_idx = (
-            spark.read.parquet(cidx_path)
-            .filter(F.col("component") != victim)
-            .localCheckpoint()
-        )
-        pruned_idx.write.mode("overwrite").partitionBy("bucket").parquet(cidx_path)
-
-        report = ser.incremental_entity_labels(
-            spark, labels_path, batch2, n_buckets=4
-        )
-        assert report.expansion_buckets is None  # detected, fell back
-        assert report.on_driver == (bound > 0)
-
-        got = {
-            (r["id"], r["df_name"], r["cluster_id"])
-            for r in ser.entity_table(spark, labels_path).collect()
-        }
-        assert got == expected
-
-
 def test_compaction_coalesces_hot_buckets_losslessly(spark, tmp_path):
     """compact_label_store must drop an over-threshold bucket to ~one
     data file while leaving the entity table row-identical and the
@@ -723,29 +562,22 @@ def test_entity_lookup_prunes_to_key_buckets(spark, tmp_path):
     ).count() == 0
 
 
-def test_fold_replay_with_index_ahead_of_store(spark, tmp_path, monkeypatch):
-    """Crash window the design explicitly claims safe: the fold writes
-    the component index BEFORE the label store, so a crash between the
-    two leaves the index AHEAD (keyed by the interrupted fold's ids)
-    while the store is still pre-fold. The replay must land on exactly
-    the from-scratch batch labels — either through superset bucket
-    lists for surviving ids or the detected full-scan fallback for
-    retired ids — on both the driver and the distributed path."""
-    import shutil
-
+def test_fold_replay_leaves_labels_unchanged(spark, tmp_path, monkeypatch):
+    """foreachBatch is at-least-once, so a restarted query can fold the
+    same batch twice. The second fold must leave the labels exactly as
+    the first left them and rewrite no bucket, on both the driver and
+    the distributed path."""
     from pyspark_entity_resolution_spark.operators import clustering
     from pyspark_entity_resolution_spark.operators.clustering import (
         cluster_matched_pairs,
     )
     from pyspark_entity_resolution_spark.streaming import er as ser
 
-    n_buckets = 8
     batch1 = spark.createDataFrame(
         [(1, 101), (2, 102), (3, 103), (4, 104)], "a_id long, b_id long"
     )
-    # batch2 merges components {1,101} and {2,102} -> the non-surviving
-    # old id is retired by the fold, the surviving min id gains buckets
-    batch2 = spark.createDataFrame([(1, 102)], "a_id long, b_id long")
+    # batch2 merges components {1,101} and {2,102} and adds a node
+    batch2 = spark.createDataFrame([(1, 102), (3, 105)], "a_id long, b_id long")
     expected = {
         (r["id"], r["df_name"], r["cluster_id"])
         for r in cluster_matched_pairs(
@@ -755,31 +587,23 @@ def test_fold_replay_with_index_ahead_of_store(spark, tmp_path, monkeypatch):
     for bound in (clustering.DRIVER_BOUND, 0):
         monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
         store = str(tmp_path / f"store_{bound}")
-        ghost = str(tmp_path / f"ghost_{bound}")  # scratch copy to produce
-        # the interrupted fold's index without advancing the real store
+        ser.incremental_entity_labels(spark, store, batch1, n_buckets=8)
+        first = ser.incremental_entity_labels(spark, store, batch2, n_buckets=8)
+        assert first.written_buckets
+        before = _snapshot_bucket_files(store)
 
-        ser.incremental_entity_labels(spark, store, batch1, n_buckets=n_buckets)
-        shutil.copytree(store, ghost)
-        shutil.copytree(store + "__cidx", ghost + "__cidx")
-
-        # run the fold to completion on the scratch copy, then transplant
-        # ONLY its (post-fold) index onto the real (pre-fold) store —
-        # byte-identical to crashing between the index and store writes
-        ser.incremental_entity_labels(spark, ghost, batch2, n_buckets=n_buckets)
-        shutil.rmtree(store + "__cidx")
-        shutil.copytree(ghost + "__cidx", store + "__cidx")
-
-        # replay the batch against the index-ahead store
-        report = ser.incremental_entity_labels(
-            spark, store, batch2, n_buckets=n_buckets
-        )
-        assert report.on_driver == (bound > 0)
-
+        replay = ser.incremental_entity_labels(spark, store, batch2, n_buckets=8)
+        assert replay.on_driver == (bound > 0)
+        assert replay.written_buckets == []
+        assert _snapshot_bucket_files(store) == before
         got = {
             (r["id"], r["df_name"], r["cluster_id"])
             for r in ser.entity_table(spark, store).collect()
         }
         assert got == expected
+    # observability is the FoldReport contract alone: no process-global
+    # back-channel
+    assert not hasattr(ser, "LAST_FOLD_INFO")
 
 
 def test_store_meta_rejects_mismatched_n_buckets(spark, tmp_path):
@@ -1046,11 +870,11 @@ def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
 def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
     """The fold's jobs are driver round trips on the micro-batch
     critical path. A small fold runs on the driver: the batch-edge
-    collect, the stored rows of the batch nodes' buckets, the index
-    probe, the member buckets not loaded yet, and the two writes, plus
-    the store and index reads' schema jobs (no listing jobs at 4
-    buckets). Pin the TOTAL per-fold job count so a future change can't
-    quietly stack more per-batch latency."""
+    collect, the stored rows of the batch nodes' buckets, the hit
+    components' members in the other buckets, and the one write, plus
+    the store read's schema job (no listing job at 4 buckets). Pin the
+    TOTAL per-fold job count so a future change can't quietly stack
+    more per-batch latency."""
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     labels_path = str(tmp_path / "labels_jobs")
@@ -1070,9 +894,8 @@ def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
     after = set(tracker.getJobIdsForGroup(None) or [])
     n_jobs = len(after - before)
     assert report.on_driver
-    # measured 8, with 2 of headroom; the distributed path runs 31-32
-    # in this shape
-    assert 0 < n_jobs <= 10, f"fold ran {n_jobs} driver jobs"
+    # measured 5, with 2 of headroom
+    assert 0 < n_jobs <= 7, f"fold ran {n_jobs} driver jobs"
 
 
 def test_entity_lookup_runs_without_a_bucket_job(spark, tmp_path):
@@ -1097,9 +920,9 @@ def test_entity_lookup_runs_without_a_bucket_job(spark, tmp_path):
 @pytest.mark.slow
 def test_store_and_index_file_counts_bounded_under_long_churn(spark, tmp_path):
     """A long match stream (120 folds, the compaction cadence every 10)
-    must keep BOTH the label store's and the __cidx index's per-bucket
-    data-file counts bounded — the cadence has to hold under churn, not
-    just in the three-batch smoke test above. Folds mirror
+    must keep the label store's per-bucket data-file counts bounded —
+    the cadence has to hold under churn, not just in the three-batch
+    smoke test above. Folds mirror
     streaming_resolve_entities' _fold exactly (fold, then compact on
     every Nth batch id)."""
     from pyspark_entity_resolution_spark.operators.clustering import (
@@ -1112,7 +935,7 @@ def test_store_and_index_file_counts_bounded_under_long_churn(spark, tmp_path):
     compact_every = 10
     max_files = 6
     pairs = []
-    worst_store, worst_cidx = 0, 0
+    worst_store = 0
     for batch_id in range(120):
         # rotating hot components plus periodic merges of older ones
         a = batch_id % 17
@@ -1130,20 +953,15 @@ def test_store_and_index_file_counts_bounded_under_long_churn(spark, tmp_path):
                 spark, labels_path, max_files_per_bucket=max_files
             )
             sc = ser._bucket_file_counts(spark, labels_path)
-            cc = ser._bucket_file_counts(spark, labels_path + "__cidx")
             worst_store = max(worst_store, *sc.values())
-            worst_cidx = max(worst_cidx, *cc.values()) if cc else worst_cidx
 
     # post-compaction counts stay at/below the threshold the whole run
     assert worst_store <= max_files, worst_store
-    assert worst_cidx <= max_files, worst_cidx
     # and BETWEEN compactions growth is bounded by what the folds since
     # the last compaction can add — never unbounded accumulation
     sc = ser._bucket_file_counts(spark, labels_path)
-    cc = ser._bucket_file_counts(spark, labels_path + "__cidx")
     bound = max_files + compact_every * 4  # <= width files per touched bucket/fold
     assert max(sc.values()) <= bound, sc
-    assert cc and max(cc.values()) <= bound, cc
 
     # churn never cost a row: labels equal the from-scratch batch run
     got = {
@@ -1273,7 +1091,6 @@ def _fold_twice(spark, tmp_path, monkeypatch, batch, bound, n_buckets=16):
     for name, patched in (("driver", None), ("patched", bound)):
         store = str(tmp_path / name)
         shutil.copytree(base, store)
-        shutil.copytree(base + "__cidx", store + "__cidx")
         if patched is not None:
             monkeypatch.setattr(clustering, "DRIVER_BOUND", patched)
         report = ser.incremental_entity_labels(spark, store, batch, n_buckets=n_buckets)
@@ -1333,10 +1150,9 @@ def test_fold_over_bound_falls_back_before_writing(spark, tmp_path, monkeypatch)
         spark, tmp_path, monkeypatch, batch, bound=10
     )
     assert driver.on_driver and not patched.on_driver
-    assert len(writes) == 2  # the driver fold's index and store, nothing more
+    assert writes == [str(tmp_path / "driver")]  # the driver fold's one write
     assert patched.written_buckets == driver.written_buckets
-    assert patched.n_hit_components == driver.n_hit_components
-    assert patched.expansion_buckets == driver.expansion_buckets
+    assert driver.n_hit_components == 3 and patched.n_hit_components is None
     assert labels_p == labels_d
 
 
@@ -1355,8 +1171,7 @@ def test_null_id_batch_row_folds_alike_on_both_paths(spark, tmp_path, monkeypatc
     assert labels_d == labels_t
     assert "a:5" in labels_d and "b:107" in labels_d  # stored, untouched
     assert "a:30" in labels_d and labels_d["b:700"] == "a:30"
-    assert (driver.written_buckets, driver.n_hit_components, driver.expansion_buckets) \
-        == (dist.written_buckets, dist.n_hit_components, dist.expansion_buckets)
+    assert driver.written_buckets == dist.written_buckets
 
 
 _LEASE_RACE_SCRIPT = r'''

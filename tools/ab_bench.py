@@ -15,7 +15,9 @@ Usage:
 
 A REF naming an existing directory is used as the checkout as-is (for
 example a ``git clone`` of the parent commit); any other REF is a git
-ref checked out into a detached worktree cached by commit sha.
+ref checked out into a detached worktree keyed by commit sha. A run
+removes the worktrees it created; one that already existed is reused
+and kept.
 
 ``--rows`` selects the corpus-generated ER pipeline rows (measured
 exactly as bench.py measures them: min-of-``--runs`` inside one JVM,
@@ -169,10 +171,11 @@ def resolve_ref(ref: str) -> str:
     ).stdout.strip()
 
 
-def ensure_worktree(ref: str) -> str:
+def ensure_worktree(ref: str, created: list[str] | None = None) -> str:
     """The checkout a REF names: an existing directory as-is (its
     absolute path, no git call), else a detached worktree under /tmp
-    cached by COMMIT SHA, created once and reused."""
+    cached by COMMIT SHA, created once and reused. A worktree this call
+    creates is appended to ``created``."""
     if os.path.isdir(ref):
         return os.path.abspath(ref)
     sha = resolve_ref(ref)
@@ -182,6 +185,8 @@ def ensure_worktree(ref: str) -> str:
             ["git", "worktree", "add", "--detach", path, sha],
             cwd=REPO, check=True, capture_output=True,
         )
+        if created is not None:
+            created.append(path)
     return path
 
 
@@ -226,24 +231,34 @@ def interleaved_ab(
     Returns (records, summary): one record dict per (pass, ref) — probe
     failures become {'error': ...} records rather than aborting, because
     the interleaved data already collected is the tool's output — and a
-    per-ref per-row {min, median, all} summary."""
-    trees = {ref: ensure_worktree(ref) for ref in refs}
-    records: list[dict] = []
-    results: dict[str, dict[str, list[float]]] = {r: {} for r in refs}
-    for p in range(passes):
-        order = list(refs) if p % 2 == 0 else list(reversed(refs))
-        for ref in order:
-            try:
-                res = run_probe(trees[ref], rows, queries, runs=runs)
-                rec = {"pass": p, "ref": ref, **res}
-            except (subprocess.TimeoutExpired, RuntimeError) as exc:
-                rec = {"pass": p, "ref": ref, "error": str(exc)[:500]}
-                res = {}
-            records.append(rec)
-            if on_record is not None:
-                on_record(rec)
-            for k, v in res.items():
-                results[ref].setdefault(k, []).append(v)
+    per-ref per-row {min, median, all} summary. Worktrees created by
+    this call are removed before it returns; directory REFs and
+    worktrees that already existed are left alone."""
+    created: list[str] = []
+    try:
+        trees = {ref: ensure_worktree(ref, created) for ref in refs}
+        records: list[dict] = []
+        results: dict[str, dict[str, list[float]]] = {r: {} for r in refs}
+        for p in range(passes):
+            order = list(refs) if p % 2 == 0 else list(reversed(refs))
+            for ref in order:
+                try:
+                    res = run_probe(trees[ref], rows, queries, runs=runs)
+                    rec = {"pass": p, "ref": ref, **res}
+                except (subprocess.TimeoutExpired, RuntimeError) as exc:
+                    rec = {"pass": p, "ref": ref, "error": str(exc)[:500]}
+                    res = {}
+                records.append(rec)
+                if on_record is not None:
+                    on_record(rec)
+                for k, v in res.items():
+                    results[ref].setdefault(k, []).append(v)
+    finally:
+        for path in created:
+            subprocess.run(
+                ["git", "worktree", "remove", "--force", path],
+                cwd=REPO, capture_output=True,
+            )
     summary = {
         ref: {
             k: {"min": min(v), "median": round(statistics.median(v), 3), "all": v}

@@ -18,10 +18,12 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE
 from pyspark_entity_resolution_spark.plans.registry import all_queries
@@ -67,7 +69,7 @@ def plan_digest(df) -> str:
 DIGEST_RE = re.compile(r"^## (\S+)$|^plan digest: `([0-9a-f]{12})`$")
 
 
-def committed_digests(path: str = "/root/repo/PLANS.md") -> dict[str, str]:
+def committed_digests(path: str = os.path.join(REPO, "PLANS.md")) -> dict[str, str]:
     """Parse the query -> digest map back out of a committed PLANS.md."""
     digests: dict[str, str] = {}
     current = None
@@ -141,7 +143,7 @@ def main() -> None:
         out.append("```\n")
         out.append(f"plan digest: `{plan_digest(df)}`\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import importlib
 import inspect
+import os
 import pkgutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pyspark_entity_resolution_spark as pkg
 
@@ -65,7 +67,7 @@ def main() -> None:
             rel = info.name.replace("pyspark_entity_resolution_spark.", "")
             out.append(f"\n## {rel}\n")
             out.extend(rows)
-    with open("/root/repo/API.md", "w") as f:
+    with open(os.path.join(REPO, "API.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote API.md")
 
