@@ -196,10 +196,8 @@ class FoldReport:
     def labels(self) -> DataFrame:
         from pyspark.sql import SparkSession
 
-        return (
-            SparkSession.active()
-            .read.parquet(self.labels_path)
-            .select("node", "component")
+        return _read_store(SparkSession.active(), self.labels_path).select(
+            "node", "component"
         )
 
 
@@ -340,26 +338,34 @@ def _write_store_meta(spark, labels_path: str, n_buckets: int) -> None:
     fs.rename(jtmp, jpath)
 
 
-def _check_store_meta(spark, labels_path: str, n_buckets: int) -> None:
-    """Raise with a clear message when the caller's ``n_buckets``
-    contradicts the store's recorded layout (a mismatch would compute
-    wrong bucket ids: folds would mis-place rows and lookups would
-    silently return nothing). Stores predating the sidecar pass."""
+def _recorded_n_buckets(spark, labels_path: str) -> int | None:
+    """The ``n_buckets`` the layout sidecar records, or None when the
+    store has no sidecar. Raises when the sidecar cannot be read."""
     import json as _json
 
     jpath = _meta_path(spark, labels_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
-        return
+        return None
+    stream = fs.open(jpath)
     try:
-        stream = fs.open(jpath)
-        try:
-            data = bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        recorded = _json.loads(data.decode())["n_buckets"]
+        data = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    return _json.loads(data.decode())["n_buckets"]
+
+
+def _check_store_meta(spark, labels_path: str, n_buckets: int) -> int | None:
+    """Raise with a clear message when the caller's ``n_buckets``
+    contradicts the store's recorded layout (a mismatch would compute
+    wrong bucket ids: folds would mis-place rows and lookups would
+    silently return nothing). Stores predating the sidecar pass.
+
+    Returns the layout the sidecar records once the check is done:
+    ``n_buckets``, or None for a store without a sidecar (absent, flat,
+    or bucketed before the sidecar existed)."""
+    try:
+        recorded = _recorded_n_buckets(spark, labels_path)
     except Exception:
         # an unreadable sidecar — truncated JSON or a failing read
         # (e.g. a checksum mismatch after a torn write on a store
@@ -379,7 +385,7 @@ def _check_store_meta(spark, labels_path: str, n_buckets: int) -> None:
         if not observed:
             # empty/absent store: nothing to contradict the caller
             _write_store_meta(spark, labels_path, n_buckets)
-            return
+            return n_buckets
         if max(observed) >= n_buckets:
             raise ValueError(
                 f"label store at {labels_path} has an unreadable "
@@ -400,7 +406,7 @@ def _check_store_meta(spark, labels_path: str, n_buckets: int) -> None:
         ).limit(1)
         if contradiction.isEmpty():
             _write_store_meta(spark, labels_path, n_buckets)  # healed
-            return
+            return n_buckets
         raise ValueError(
             f"label store at {labels_path} has an unreadable layout "
             f"sidecar and its rows do not hash to their buckets under "
@@ -408,13 +414,53 @@ def _check_store_meta(spark, labels_path: str, n_buckets: int) -> None:
             "is wrong; rebuild the sidecar with the store's true "
             "n_buckets"
         )
-    if recorded != n_buckets:
+    if recorded is not None and recorded != n_buckets:
         raise ValueError(
             f"label store at {labels_path} is laid out with "
             f"n_buckets={recorded}, but the caller passed "
             f"n_buckets={n_buckets} — the layout is immutable for the "
             f"lifetime of a store (rebuild the store to change it)"
         )
+    return recorded
+
+
+_STORE_SCHEMA = "node string, component string, bucket int"
+# above this many subdirectories Spark lists a path with a Spark job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_store(spark, labels_path: str, n_buckets: int | None = None) -> DataFrame:
+    """The label store ``(node, component, bucket)``.
+
+    ``n_buckets`` is the layout :func:`_check_store_meta` returned; None
+    reads it from the sidecar here. A store whose sidecar records a
+    layout is read with its fixed schema, and its bucket directories are
+    listed on the driver: no schema-inference job and no listing job.
+    Spark lists the files when the DataFrame is built, so the listing
+    threshold is raised to at least ``n_buckets`` for that call only and
+    then put back, unset if it was unset. The threshold decides how
+    Spark lists, never which files, so a concurrent reader in another
+    thread sees the same files either way. A store without a readable sidecar
+    keeps the inferred read, so a flat store shows no ``bucket`` column
+    (the fold migrates it, a lookup fails on it) and an absent one
+    raises AnalysisException."""
+    if n_buckets is None:
+        try:
+            n_buckets = _recorded_n_buckets(spark, labels_path)
+        except Exception:
+            pass  # an unreadable sidecar vouches for nothing
+    if n_buckets is None:
+        return spark.read.parquet(labels_path)
+    previous = spark.conf.get(_LISTING_THRESHOLD, None)
+    threshold = max(n_buckets, int(spark.conf.get(_LISTING_THRESHOLD)))
+    spark.conf.set(_LISTING_THRESHOLD, str(threshold))
+    try:
+        return spark.read.schema(_STORE_SCHEMA).parquet(labels_path)
+    finally:
+        if previous is None:
+            spark.conf.unset(_LISTING_THRESHOLD)
+        else:
+            spark.conf.set(_LISTING_THRESHOLD, previous)
 
 
 def _write_buckets(df: DataFrame, path: str, dynamic: bool = True) -> None:
@@ -472,8 +518,10 @@ def incremental_entity_labels(
     READS: the node probe prunes to the batch nodes' own buckets; when
     the batch touches a stored component, member expansion scans the
     rest of the store for its members, because a component's members
-    scatter over ~min(members, n_buckets) buckets. Each fold makes one
-    store write.
+    scatter over ~min(members, n_buckets) buckets. Opening the store
+    runs no Spark job: a store with a layout sidecar is read with its
+    fixed schema, and its bucket directories are listed on the driver
+    (:func:`_read_store`). Each fold makes one store write.
 
     Node identity is namespaced ``{side}:{id}`` exactly like the batch
     operator (operators/clustering.py cluster_matched_pairs), so drained
@@ -504,14 +552,14 @@ def incremental_entity_labels(
     finishing as this fold arrives — so callers need no hand-rolled
     retry loop; a lease still held past the wait raises as before.
     """
-    _check_store_meta(spark, labels_path, n_buckets)
+    layout = _check_store_meta(spark, labels_path, n_buckets)
     fs = _acquire_store_lease_retry(
         spark, labels_path, "incremental_entity_labels", lease_wait
     )
     try:
         return _fold_locked(
             spark, labels_path, new_matches, left_id, right_id,
-            left_name, right_name, n_buckets,
+            left_name, right_name, n_buckets, layout,
         )
     finally:
         _release_store_lease(spark, labels_path, fs)
@@ -519,7 +567,7 @@ def incremental_entity_labels(
 
 def _fold_locked(
     spark, labels_path, new_matches, left_id, right_id,
-    left_name, right_name, n_buckets,
+    left_name, right_name, n_buckets, layout,
 ) -> FoldReport:
     from pyspark.errors import AnalysisException
 
@@ -530,7 +578,7 @@ def _fold_locked(
         F.concat(F.lit(right_name + ":"), F.col(right_id).cast("string")).alias("dst"),
     )
     try:
-        prev = spark.read.parquet(labels_path)
+        prev = _read_store(spark, labels_path, layout)
     except AnalysisException:
         prev = None  # cold start: no labels yet
 
@@ -553,8 +601,7 @@ def _fold_locked(
     report = _fold_on_driver(spark, labels_path, edges, prev, n_buckets)
     if report is None:
         report = _fold_distributed(spark, labels_path, edges, prev, n_buckets)
-    jmeta = _meta_path(spark, labels_path)
-    if not jmeta.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jmeta):
+    if layout is None:
         # upgrade a pre-sidecar store in place (the check above already
         # accepted this fold's n_buckets as the layout)
         _write_store_meta(spark, labels_path, n_buckets)
@@ -580,6 +627,11 @@ def _sql_in(column: str, exprs: list[str]) -> Column:
     if not exprs:
         return F.lit(False)
     return F.expr(f"{column} IN ({', '.join(exprs)})")
+
+
+def _in_buckets(buckets) -> Column:
+    """``bucket IN (buckets)``, built by :func:`_sql_in`."""
+    return _sql_in("bucket", [str(int(b)) for b in buckets])
 
 
 def _write_sorted_buckets(spark, path: str, names: list[str], rows) -> None:
@@ -642,14 +694,14 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
         return True
 
     loaded = sorted(set(batch_bucket.values()))
-    if not load(F.col("bucket").isin(loaded)):
+    if not load(_in_buckets(loaded)):
         return None
     hit = {stored[n][0] for n in batch_bucket if n in stored}
     # member expansion: the hit components' rows in the other buckets,
     # filtered where they are read (a component's members scatter, so
     # whole buckets would bring the rest of the store to the driver)
     if hit and not load(
-        ~F.col("bucket").isin(loaded)
+        ~_in_buckets(loaded)
         & _sql_in("component", [_sql_string(c) for c in hit])
     ):
         return None
@@ -669,7 +721,7 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
     # the other rows of a rewritten bucket that was not loaded whole
     # (one holding a retired member) ride along in the rewrite
     partial = sorted(set(written_buckets) - set(loaded))
-    if partial and not load(F.col("bucket").isin(partial)):
+    if partial and not load(_in_buckets(partial)):
         return None
     rewrite = set(written_buckets)
     to_write = sorted(
@@ -702,14 +754,14 @@ def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
     # relabels both components wholesale). The node lookup PRUNES to the
     # batch nodes' own buckets: the bucket values are collected (at most
     # n_buckets small ints — driver-safe by construction) and applied as
-    # a static isin filter on the partition column, so the scan reads
+    # a static IN filter on the partition column, so the scan reads
     # only those directories instead of the whole store.
     batch_buckets = batch_nodes.withColumn("bucket", _node_bucket(n_buckets))
     probe_buckets = [
         r.bucket for r in batch_buckets.select("bucket").distinct().collect()
     ]
     hit_components = (
-        prev.filter(F.col("bucket").isin(probe_buckets))
+        prev.filter(_in_buckets(probe_buckets))
         .join(batch_buckets, on=["bucket", "node"], how="inner")
         .select("component")
         .distinct()
@@ -746,7 +798,7 @@ def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
     )
     # materialize the (small) changed set once: its bucket ids drive a
     # STATIC partition filter for the carried read (the same
-    # collect-then-isin pattern as the node probe above — join-based
+    # collect-then-IN pattern as the node probe above — join-based
     # pruning would hinge on DPP firing), and the write re-reads it
     changed = changed.withColumn(
         "bucket", _node_bucket(n_buckets)
@@ -758,7 +810,7 @@ def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
     # must ride along (partition-granularity overwrite); materialized
     # BEFORE their files are overwritten
     carried = (
-        prev.filter(F.col("bucket").isin(written_buckets))
+        prev.filter(_in_buckets(written_buckets))
         .join(changed.select("node"), on="node", how="left_anti")
         .select("node", "component", "bucket")
         .localCheckpoint()
@@ -831,8 +883,8 @@ def _compact_locked(spark, labels_path, max_files_per_bucket) -> list[int]:
     over = sorted(b for b, n in counts.items() if n > max_files_per_bucket)
     if over:
         rows = (
-            spark.read.parquet(labels_path)
-            .filter(F.col("bucket").isin(over))
+            _read_store(spark, labels_path)
+            .filter(_in_buckets(over))
             .localCheckpoint()  # materialize before replacing source files
         )
         _write_buckets(rows.repartition(len(over), "bucket"), labels_path)
@@ -896,7 +948,7 @@ def entity_table(spark, labels_path: str) -> DataFrame:
     """Current streaming entity table in the batch operator's column
     contract: ``(id, df_name, cluster_id)``."""
     split = F.split(F.col("node"), ":", 2)
-    return spark.read.parquet(labels_path).select(
+    return _read_store(spark, labels_path).select(
         split.getItem(1).alias("id"),
         split.getItem(0).alias("df_name"),
         F.col("component").alias("cluster_id"),
@@ -910,23 +962,27 @@ def entity_lookup(
     n_buckets: int = 64,
 ) -> DataFrame:
     """Point lookup into the bucketed label store: ``(node, component)``
-    for the requested node keys (``"{side}:{id}"`` format), reading ONLY
-    the bucket directories those keys hash into — the serving-path read
-    (which entity does this record belong to?) touches O(len(keys))
-    buckets, never the full store. ``n_buckets`` must match the store's
-    layout, like every other fold parameter.
+    for the requested node keys (``"{side}:{id}"`` format) — the
+    serving-path read (which entity does this record belong to?).
+    ``n_buckets`` must match the store's layout, like every other fold
+    parameter.
 
-    The bucket ids are Spark's own ``xxhash64`` of each key as a
-    literal, which constant folding turns into a static ``bucket IN
+    What it lists and reads: building the store DataFrame lists every
+    bucket directory of the store, on the driver (one filesystem listing
+    per directory, no Spark job; see :func:`_read_store`); the scan then
+    opens only the files of the buckets the keys hash into, O(len(keys))
+    buckets. The bucket ids are Spark's own ``xxhash64`` of each key as
+    a literal, which constant folding turns into a static ``bucket IN
     (...)`` partition filter at plan time: no job and no driver-side
-    reimplementation of the hash. The store's schema is still inferred,
-    so a flat-layout store fails on the missing ``bucket`` column
-    instead of returning nothing.
+    reimplementation of the hash. The collect is the lookup's one job.
+    A store without a layout sidecar keeps the inferred schema, so a
+    flat-layout store fails on the missing ``bucket`` column instead of
+    returning nothing.
     """
-    _check_store_meta(spark, labels_path, n_buckets)
+    layout = _check_store_meta(spark, labels_path, n_buckets)
     keys = [_sql_string(k) for k in node_keys if k is not None]
     return (
-        spark.read.parquet(labels_path)
+        _read_store(spark, labels_path, layout)
         .filter(_sql_in(
             "bucket", [f"pmod(xxhash64({k}), {n_buckets})" for k in keys]
         ))

@@ -871,10 +871,10 @@ def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
     """The fold's jobs are driver round trips on the micro-batch
     critical path. A small fold runs on the driver: the batch-edge
     collect, the stored rows of the batch nodes' buckets, the hit
-    components' members in the other buckets, and the one write, plus
-    the store read's schema job (no listing job at 4 buckets). Pin the
-    TOTAL per-fold job count so a future change can't quietly stack
-    more per-batch latency."""
+    components' members in the other buckets, and the one write; the
+    store read runs no schema job (the sidecar fixes the schema) and
+    lists the store on the driver. Pin the TOTAL per-fold job count so
+    a future change can't quietly stack more per-batch latency."""
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     labels_path = str(tmp_path / "labels_jobs")
@@ -894,13 +894,13 @@ def test_incremental_fold_driver_round_trips_are_bounded(spark, tmp_path):
     after = set(tracker.getJobIdsForGroup(None) or [])
     n_jobs = len(after - before)
     assert report.on_driver
-    # measured 5, with 2 of headroom
-    assert 0 < n_jobs <= 7, f"fold ran {n_jobs} driver jobs"
+    # measured 4, with 1 of headroom
+    assert 0 < n_jobs <= 5, f"fold ran {n_jobs} driver jobs"
 
 
 def test_entity_lookup_runs_without_a_bucket_job(spark, tmp_path):
-    """The lookup's bucket ids fold at plan time: only the store read's
-    schema job and the lookup itself run (no listing job at 8 buckets)."""
+    """The lookup's bucket ids fold at plan time, and the store read
+    runs no schema or listing job: only the lookup itself runs."""
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     labels_path = str(tmp_path / "labels_lookup_jobs")
@@ -914,7 +914,158 @@ def test_entity_lookup_runs_without_a_bucket_job(spark, tmp_path):
     rows = ser.entity_lookup(spark, labels_path, ["a:1", "b:105", "a:999"], n_buckets=8).collect()
     n_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
     assert {r.node for r in rows} == {"a:1", "b:105"}
-    assert n_jobs <= 3, f"lookup ran {n_jobs} jobs"  # measured 2
+    assert n_jobs <= 2, f"lookup ran {n_jobs} jobs"  # measured 1
+
+
+def _jobs_during(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def test_store_read_at_64_buckets_runs_no_listing_or_schema_job(spark, tmp_path):
+    """At the default 64 buckets an inferred store read runs a listing
+    job over the bucket directories and a schema job. The store read
+    runs neither: a warm driver fold stays at its collects and its
+    write, and a lookup runs only its own scan."""
+    import os
+
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    labels_path = str(tmp_path / "labels_64")
+    ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(i, 100 + i) for i in range(1, 31)], "a_id long, b_id long"),
+    )
+    # more bucket directories than Spark's parallel-listing threshold
+    # (32), where an inferred read lists the store with a Spark job
+    dirs = [d for d in os.listdir(labels_path) if d.startswith("bucket=")]
+    assert len(dirs) > 32, len(dirs)
+
+    report, n_jobs = _jobs_during(spark, lambda: ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(1, 500)], "a_id long, b_id long"),
+    ))
+    assert report.on_driver
+    assert n_jobs <= 5, f"warm fold ran {n_jobs} jobs"  # measured 4
+
+    rows, n_jobs = _jobs_during(spark, lambda: ser.entity_lookup(
+        spark, labels_path, ["a:1", "b:500", "a:999"]
+    ).collect())
+    assert {(r.node, r.component) for r in rows} == {("a:1", "a:1"), ("b:500", "a:1")}
+    assert n_jobs == 1, f"lookup ran {n_jobs} jobs"
+
+
+def test_store_read_restores_the_listing_threshold(spark, tmp_path, monkeypatch):
+    """The store read raises Spark's listing threshold for its own
+    ``parquet`` call only: after a cold-start fold, a warm fold, a
+    lookup and a read that raises, the session's setting is exactly
+    what it was before, unset or set."""
+    from pyspark.sql import DataFrameReader
+
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key, None)
+    during = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        during.append(spark.conf.get(key))
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    labels_path = str(tmp_path / "labels_threshold")
+    cycle = iter(range(1, 100))
+
+    def fold_and_look():
+        i = next(cycle)
+        report = ser.incremental_entity_labels(
+            spark, labels_path,
+            spark.createDataFrame([(i, 100 + i)], "a_id long, b_id long"),
+        )
+        assert ser.entity_lookup(spark, labels_path, [f"a:{i}"]).count() == 1
+        return report
+
+    assert fold_and_look().cold_start  # its read raised AnalysisException
+    fold_and_look()
+    assert spark.conf.get(key, None) == before
+    assert "64" in during  # raised while the warm reads listed
+
+    def failing(self, *paths, **options):
+        raise OSError("listing failed")
+
+    spark.conf.set(key, "7")
+    try:
+        assert not fold_and_look().cold_start
+        assert spark.conf.get(key) == "7"
+        monkeypatch.setattr(DataFrameReader, "parquet", failing)
+        with pytest.raises(OSError):
+            ser._read_store(spark, labels_path)
+        assert spark.conf.get(key) == "7"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_entity_lookup_on_flat_store_without_sidecar_raises(spark, tmp_path):
+    """Only the layout sidecar vouches for the fixed store schema: a
+    flat store has none, so the lookup keeps the inferred read and fails
+    on the missing ``bucket`` column instead of returning null buckets."""
+    from pyspark.errors import AnalysisException
+
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    labels_path = str(tmp_path / "labels_flat_lookup")
+    spark.createDataFrame(
+        [("a:1", "a:1"), ("b:101", "a:1")], "node string, component string"
+    ).write.parquet(labels_path)
+    with pytest.raises(AnalysisException):
+        ser.entity_lookup(spark, labels_path, ["a:1"]).collect()
+
+
+def test_store_paths_build_no_column_isin(spark, tmp_path, monkeypatch):
+    """``Column.isin`` pays a py4j round trip per value (about a second
+    for 850 buckets): the driver fold, the distributed fold and the
+    compaction build every list filter from one SQL string instead."""
+    from pyspark_entity_resolution_spark.operators import clustering
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    labels_path = str(tmp_path / "labels_isin")
+    ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(i, 100 + i) for i in range(1, 13)], "a_id long, b_id long"),
+        n_buckets=8,
+    )
+
+    def no_isin(self, *values):
+        raise AssertionError("Column.isin called")
+
+    # the session's concrete Column class, which overrides Column.isin
+    monkeypatch.setattr(type(F.col("bucket")), "isin", no_isin)
+    assert ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(1, 200)], "a_id long, b_id long"),
+        n_buckets=8,
+    ).on_driver
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", 0)
+    assert not ser.incremental_entity_labels(
+        spark, labels_path,
+        spark.createDataFrame([(2, 300), (3, 200)], "a_id long, b_id long"),
+        n_buckets=8,
+    ).on_driver
+    assert ser.compact_label_store(spark, labels_path, max_files_per_bucket=0)
+    labels = {
+        r.node: r.component
+        for r in ser.FoldReport(labels_path).labels.collect()
+    }
+    assert len(labels) == 26  # 24 stored nodes, b:200 and b:300
+    assert {labels[n] for n in ("a:1", "b:200", "a:3", "b:101")} == {"a:1"}
+    assert labels["b:300"] == "a:2"
 
 
 @pytest.mark.slow
