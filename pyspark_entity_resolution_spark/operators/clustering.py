@@ -7,9 +7,7 @@ crash on long chains. This module replaces it with the **alternating
 large-star / small-star algorithm** (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14): each round rewires edges
 toward each neighborhood's minimum and provably converges to star
-forests in O(log² n) rounds — independent of graph diameter. (Plain
-min-label propagation was measured needing >25 rounds on a long-chain
-match graph at sf0.1; this converges in ~5.)
+forests in O(log² n) rounds — independent of graph diameter.
 
 Every round is two window shuffle+sort passes over the edge list plus
 a round-final ``distinct`` — no joins (:func:`_round_step`) — with
@@ -18,14 +16,18 @@ final component id is the MIN node id in the component —
 deterministic, unlike the reference's enumeration-order cluster ids
 (SURVEY.md §7.3: tests compare cluster *partitions*, not ids).
 
-Small graphs skip the rounds: at most ``target_edges_per_partition``
-edges (the size at which the loop would run on one shuffle partition
-anyway) are collected once and labeled on the driver by a union-find
+Small graphs skip the rounds: at most :data:`DRIVER_BOUND` edges are
+collected once and labeled on the driver by a union-find
 (:func:`_label_on_driver`), so driver memory holds at most that many
-edges; the result is a local relation with the same labels.
+edges; the result is a local relation with the same labels. The
+incremental label store (streaming/er.py) shares this driver-side
+toolkit: the bound, the capped collect, the node-key codec, the
+union-find, the local-relation builder and the conf override.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,8 +35,76 @@ from pyspark.sql import functions as F
 # Row bound of the driver-side labeling paths: a graph of at most this
 # many edges is collected and labeled in-process (the size at which the
 # star loop would run on one shuffle partition anyway). Also bounds each
-# collect of the incremental fold's driver path (streaming/er.py).
+# collect of the incremental fold's driver path (streaming/er.py). Read
+# at call time, so patching it moves both.
 DRIVER_BOUND = 100_000
+# star rounds the loop runs before it gives up and raises
+MAX_ITERATIONS = 25
+# edge count from which the loop weighs its checkpoints' measured
+# footprint against the heap (see connected_components)
+DISK_ONLY_ABOVE_EDGES = 20_000_000
+
+
+def _capped_collect(df: DataFrame, cap: int):
+    """``df``'s rows as tuples, or None when it holds more than ``cap``
+    rows — in one job (a bare ``limit`` on a multi-partition scan runs
+    several), through Arrow, so an over-cap result is dropped without
+    building a Python object per row."""
+    table = df.coalesce(1).limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    return list(zip(*(col.to_pylist() for col in table.columns)))
+
+
+@contextmanager
+def _conf_override(spark, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block, then put
+    back its previous value, or unset it if it was unset."""
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
+
+
+def _local_relation(spark, schema, columns) -> DataFrame:
+    """A local DataFrame of ``schema`` (a ``StructType``) holding one
+    Python sequence per column, built through one pyarrow table. Its
+    rows keep their order in contiguous slices, one per
+    ``defaultParallelism``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), f.type) for col, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _encode_nodes(matches, left_id, right_id, left_name, right_name) -> DataFrame:
+    """The ``(src, dst)`` edges of matched pairs, each id namespaced by
+    its side as the node key ``"{side}:{id}"``."""
+    return matches.select(
+        F.concat(F.lit(left_name + ":"), F.col(left_id).cast("string")).alias("src"),
+        F.concat(F.lit(right_name + ":"), F.col(right_id).cast("string")).alias("dst"),
+    )
+
+
+def _decode_nodes(labels: DataFrame) -> DataFrame:
+    """``(id, df_name, cluster_id)`` of ``(node, component)`` labels:
+    each node key split back into its id and side."""
+    split = F.split(F.col("node"), ":", 2)
+    return labels.select(
+        split.getItem(1).alias("id"),
+        split.getItem(0).alias("df_name"),
+        F.col("component").alias("cluster_id"),
+    )
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -142,7 +212,7 @@ def _small_star_window(e: DataFrame) -> DataFrame:
 
 def _round_step(e: DataFrame) -> DataFrame:
     """One alternating round: window stars (no join) plus a round-final
-    distinct — the shape that won the r7 and r8 A/Bs (README has the numbers)."""
+    distinct."""
     return _small_star_window(_large_star_window(e))
 
 
@@ -150,10 +220,7 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 25,
-    target_edges_per_partition: int = DRIVER_BOUND,
     checkpoint_storage=None,
-    disk_only_above_edges: int = 20_000_000,
 ) -> DataFrame:
     """Return ``(node, component)`` for every node appearing in ``edges``.
 
@@ -162,45 +229,44 @@ def connected_components(
 
     Execution notes (deliberate, documented trade-offs):
 
-    - SMALL GRAPHS ARE LABELED ON THE DRIVER: when the edge count is at
-      most ``target_edges_per_partition`` the edges are collected once
-      (so the driver holds at most that many edges) and labeled by a
-      union-find whose roots are component minima; the result is a
-      local DataFrame with the same contract (null-endpoint edges
-      dropped, self-loop-only nodes as singletons, every node once) and
-      ``LAST_RUN_ROUND_STATS`` reads ``[]``. Larger graphs run the star
-      rounds below, and raise RuntimeError when ``max_iterations``
-      rounds pass without the fixed-point probe declaring convergence.
+    - SMALL GRAPHS ARE LABELED ON THE DRIVER: when at most
+      :data:`DRIVER_BOUND` edges have two non-null endpoints they come
+      back from one capped collect (so the driver holds at most that
+      many edges) and are labeled by a union-find whose roots are
+      component minima; the result is a local DataFrame with the same
+      contract (null-endpoint edges dropped, self-loop-only nodes as
+      singletons, every node once) and ``LAST_RUN_ROUND_STATS`` reads
+      ``[]``. Larger graphs run the star rounds below, and raise
+      RuntimeError when :data:`MAX_ITERATIONS` rounds pass without the
+      fixed-point probe declaring convergence.
     - EAGER at call time: the caller's edge plan is materialized once
-      (``localCheckpoint`` + count) so the iterative rounds never
-      re-evaluate an expensive upstream candidate join. This is not a
-      lazy transformation.
-    - Checkpoint STORAGE LEVEL is memory-aware: above
-      ``disk_only_above_edges`` edges the MEASURED footprint of the
+      (``localCheckpoint``) so the iterative rounds never re-evaluate an
+      expensive upstream candidate join. This is not a lazy
+      transformation.
+    - Checkpoint STORAGE LEVEL is memory-aware: from
+      :data:`DISK_ONLY_ABOVE_EDGES` edges the MEASURED footprint of the
       materialized edge checkpoint is compared against the JVM heap,
       and only when the loop's ~3 resident copies (previous + current
       round, with headroom for large-star expansion) would
       crowd the unified memory region do the per-round checkpoints
       demote to DISK_ONLY (the rounds re-read each checkpoint a handful
-      of times; the OS page cache absorbs most of it). Measured both
-      ways at 100M edges: at 8g heap MEMORY_AND_DISK dies in
-      AGGREGATE_OUT_OF_MEMORY — persisted blocks are protected
-      from execution eviction up to ``spark.memory.storageFraction`` —
-      while at 64g DISK_ONLY costs ~1.3x wall-clock over in-memory
-      checkpoints, so neither choice is right unconditionally. Pass
-      ``checkpoint_storage`` (a ``StorageLevel``) to override the
-      choice in either direction; an explicit level also applies to
-      the INITIAL edge-set materialization, which the automatic
-      demotion cannot protect (it measures the footprint only after
-      that first checkpoint exists).
+      of times; the OS page cache absorbs most of it). Neither level is
+      right unconditionally: on a small heap MEMORY_AND_DISK runs out of
+      execution memory, since persisted blocks are protected from
+      eviction up to ``spark.memory.storageFraction``, while on a large
+      one DISK_ONLY only adds wall-clock. Pass ``checkpoint_storage`` (a
+      ``StorageLevel``) to override the choice in either direction; an
+      explicit level also applies to the INITIAL edge-set
+      materialization, which the automatic demotion cannot protect (it
+      measures the footprint only after that first checkpoint exists).
     - NOT thread-safe with respect to ``spark.sql.shuffle.partitions``:
       the loop narrows the session conf to the edge volume for the
-      duration of the call (restored in a ``finally``), because Spark
-      has no per-plan shuffle-width control for groupBy/join. A
-      concurrent query planned on the same SparkSession during the call
-      can observe the narrowed width. The narrowed width never EXCEEDS
-      the session's configured value (a session width below the usual
-      floor is honored as-is).
+      duration of the call (then restores it), because Spark has no
+      per-plan shuffle-width control for groupBy/join. A concurrent
+      query planned on the same SparkSession during the call can observe
+      the narrowed width. The narrowed width never EXCEEDS the session's
+      configured value (a session width below the usual floor is
+      honored as-is).
     """
     # materialize the caller's edge plan ONCE: the self-loop-only set and
     # the working edge set both derive from the checkpointed raw list, so an
@@ -209,41 +275,44 @@ def connected_components(
     # An explicit ``checkpoint_storage`` applies HERE too, not only to
     # the per-round checkpoints: the automatic demotion below can only
     # act after this first materialization succeeds, so a caller on a
-    # heap-constrained driver (observed: 100M edges at 8g dies in a
-    # GCLocker-starved heap OOM during this very materialization) needs
-    # the override to reach the initial checkpoint as well.
+    # heap-constrained driver needs the override to reach the initial
+    # checkpoint as well.
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         storageLevel=checkpoint_storage
     )
-    n_edges = raw.count()  # one tiny job on the checkpointed rows
-    if n_edges <= target_edges_per_partition:
+    # the type the loop's union of both endpoint columns resolves to
+    key = raw.select("u").union(raw.select("v")).schema[0].dataType
+    rows = _capped_collect(
+        raw.filter(F.col("u").isNotNull() & F.col("v").isNotNull()).select(
+            F.col("u").cast(key), F.col("v").cast(key)
+        ),
+        DRIVER_BOUND,
+    )
+    if rows is not None:
         # one partition's worth of edges: the rounds would be one core's
         # work plus a dozen jobs of fixed cost, so label them in-process
         try:
-            return _label_on_driver(raw)
+            return _label_on_driver(raw, rows, key)
         finally:
             _release_checkpoint(raw)
 
+    n_edges = raw.count()
     # size the loop's shuffle width to the EDGE volume, not the session
-    # default: the rounds iterate on the (small) edge list, and a
-    # 10k-edge round at width 32 pays ~7 near-empty shuffle stages of
-    # pure task-launch latency per round (measured 7.1 s -> 4.6 s at
-    # width 4 on sf0.1). At real edge volumes the clamp leaves the
-    # session width untouched. Results are width-independent; the
-    # session conf is restored before returning.
+    # default: the rounds iterate on the edge list, and a small round at
+    # a wide session width pays near-empty shuffle stages of pure
+    # task-launch latency. At real edge volumes the clamp leaves the
+    # session width untouched. Results are width-independent.
     spark = raw.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    session_width = spark.conf.get(key)
+    width_key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(width_key)
     try:
         # never raise the width above the session's own setting (a
-        # session configured below the floor keeps its value); floor 1
-        # covers the empty edge list
-        width = max(1, min(int(session_width), -(-n_edges // target_edges_per_partition)))
+        # session configured below the floor keeps its value)
+        width = str(min(int(width), -(-n_edges // max(1, DRIVER_BOUND))))
     except ValueError:  # non-numeric (e.g. "auto") — leave it alone
-        width = None
+        pass
     level = checkpoint_storage
-    demote = False
-    if level is None and n_edges >= disk_only_above_edges:
+    if level is None and n_edges >= DISK_ONLY_ABOVE_EDGES:
         # memory-aware demotion: `raw` is materialized, so its real
         # block footprint is readable from the storage manager. The
         # loop keeps at most ~2 full-size checkpoints resident
@@ -261,24 +330,16 @@ def connected_components(
             from pyspark import StorageLevel
 
             level = StorageLevel.DISK_ONLY
-            demote = True
-    if demote:
-        # DEMOTE the raw checkpoint to the chosen level (the count above
-        # needed it materialized before the size was known): one cheap
-        # shuffle-free copy-through, after which the big edge set no
-        # longer occupies the storage-memory region the loop's first
-        # distinct() aggregations need: at 100M edges on an 8g heap,
-        # with raw resident in unified memory, a node distinct died in
-        # UNABLE_TO_ACQUIRE_MEMORY before the first round started.
-        demoted = raw.localCheckpoint(storageLevel=level)
-        _release_checkpoint(raw)
-        raw = demoted
-    try:
-        if width is not None:
-            spark.conf.set(key, str(width))
-        return _connected_components_loop(raw, max_iterations, level, n_edges)
-    finally:
-        spark.conf.set(key, session_width)
+            # DEMOTE the raw checkpoint too (the count above needed it
+            # materialized before the size was known): one cheap
+            # shuffle-free copy-through, after which the big edge set no
+            # longer occupies the storage-memory region the loop's first
+            # distinct() aggregations need.
+            demoted = raw.localCheckpoint(storageLevel=level)
+            _release_checkpoint(raw)
+            raw = demoted
+    with _conf_override(spark, width_key, width):
+        return _connected_components_loop(raw, level, n_edges)
 
 
 # Per-round diagnostics of the MOST RECENT connected_components call on
@@ -318,39 +379,25 @@ def _min_root_labels(pairs) -> dict:
     return {x: find(x) for x in parent}
 
 
-def _label_on_driver(raw: DataFrame) -> DataFrame:
-    """Label the (small) checkpointed edge list ``raw(u, v)`` on the
-    driver: one collect, :func:`_min_root_labels`, and the labels back
-    as a local DataFrame of the endpoints' common type. Edges with a
-    null endpoint are dropped, as the loop's ``u == v`` / ``u != v``
-    filters drop them."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+def _label_on_driver(raw: DataFrame, rows, key) -> DataFrame:
+    """Label the collected non-null edge ``rows`` of the checkpointed
+    edge list ``raw(u, v)`` on the driver: :func:`_min_root_labels`,
+    and the labels back as a local DataFrame of the endpoints' common
+    type ``key``."""
     from pyspark.sql.types import StructField, StructType
 
     global LAST_RUN_ROUND_STATS
     LAST_RUN_ROUND_STATS = []
-    # the type the loop's union of both endpoint columns resolves to
-    key = raw.select("u").union(raw.select("v")).schema[0].dataType
-    rows = (
-        raw.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .select(F.col("u").cast(key), F.col("v").cast(key))
-        .collect()
-    )
     labels = _min_root_labels(rows)
     schema = StructType(
         [StructField("node", key), StructField("component", key)]
     )
-    table = pa.Table.from_pydict(
-        {"node": list(labels), "component": list(labels.values())},
-        schema=to_arrow_schema(schema),
+    return _local_relation(
+        raw.sparkSession, schema, [labels.keys(), labels.values()]
     )
-    return raw.sparkSession.createDataFrame(table, schema)
 
 
-def _connected_components_loop(
-    raw: DataFrame, max_iterations: int, level, n_edges: int
-) -> DataFrame:
+def _connected_components_loop(raw: DataFrame, level, n_edges: int) -> DataFrame:
     import time as _time
 
     global LAST_RUN_ROUND_STATS
@@ -387,7 +434,7 @@ def _connected_components_loop(
     converged = False
 
     try:
-        for _ in range(max_iterations):
+        for _ in range(MAX_ITERATIONS):
             _round_t0 = _time.perf_counter()
             prev = e
             # lazy checkpoint: the count below is the action that
@@ -465,7 +512,7 @@ def _connected_components_loop(
             # can carry edges to two roots and come back twice
             raise RuntimeError(
                 f"connected_components did not converge within "
-                f"max_iterations={max_iterations} rounds"
+                f"MAX_ITERATIONS={MAX_ITERATIONS} rounds"
             )
 
         # converged: e is a star forest (child -> root). Roots label
@@ -492,7 +539,7 @@ def _connected_components_loop(
         # twice downstream
         result = labeled.union(singletons).localCheckpoint(storageLevel=level)
     finally:
-        # every exit path — convergence, max_iterations exhausted (or
+        # every exit path — convergence, MAX_ITERATIONS exhausted (or
         # 0, when the raw checkpoint still feeds `e`), or a raising
         # round — releases the checkpoints the loop still holds
         for held in (pending_release, e, self_only):
@@ -517,14 +564,5 @@ def cluster_matched_pairs(
     ``(id, df_name, cluster_id)`` with a deterministic dense cluster id
     derived from the min member key.
     """
-    edges = matches.select(
-        F.concat(F.lit(left_name + ":"), F.col(left_id).cast("string")).alias("src"),
-        F.concat(F.lit(right_name + ":"), F.col(right_id).cast("string")).alias("dst"),
-    )
-    components = connected_components(edges)
-    split = F.split(F.col("node"), ":", 2)
-    return components.select(
-        split.getItem(1).alias("id"),
-        split.getItem(0).alias("df_name"),
-        F.col("component").alias("cluster_id"),
-    )
+    edges = _encode_nodes(matches, left_id, right_id, left_name, right_name)
+    return _decode_nodes(connected_components(edges))

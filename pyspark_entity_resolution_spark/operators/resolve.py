@@ -2,10 +2,9 @@
 (reference src/create_graph.py:62-87, A1/A2/J2/U1 in SURVEY.md §2).
 
 The reference picks ``first(id)`` per (cluster, dataset) — explicitly
-"randomly picked" (report.pdf p.4 §4). We default to ``min(id)`` for
-deterministic, testable output, with ``deterministic=False`` restoring the
-reference behavior. The pivot passes explicit dataset values so Spark
-skips the extra distinct-scan pass.
+"randomly picked" (report.pdf p.4 §4). We pick ``min(id)`` for
+deterministic, testable output. The pivot passes explicit dataset values
+so Spark skips the extra distinct-scan pass.
 """
 
 from __future__ import annotations
@@ -19,11 +18,9 @@ def pick_representatives(
     cluster_col: str = "cluster_id",
     side_col: str = "df_name",
     id_col: str = "id",
-    deterministic: bool = True,
 ) -> DataFrame:
-    """One representative record id per (cluster, dataset)."""
-    agg = F.min(id_col) if deterministic else F.first(id_col)
-    return clustered.groupBy(cluster_col, side_col).agg(agg.alias(id_col))
+    """One representative record id per (cluster, dataset): the minimum."""
+    return clustered.groupBy(cluster_col, side_col).agg(F.min(id_col).alias(id_col))
 
 
 def entity_table(

@@ -8,7 +8,7 @@ Composition of the stage operators, mirroring the reference's five stages
 Stage boundaries are plain DataFrames; callers choose whether to
 materialize (parquet) or keep the plan fused. No driver-side loops over
 records; the one collect() on the data path is bounded — clustering
-labels a match graph of at most ``target_edges_per_partition`` edges on
+labels a match graph of at most ``clustering.DRIVER_BOUND`` edges on
 the driver (operators/clustering.py), larger graphs stay distributed.
 """
 

@@ -20,10 +20,14 @@ the batch twin in tests/test_streaming_er.py).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from ..operators import clustering
 
 
 def streaming_candidate_pairs(
@@ -201,24 +205,28 @@ class FoldReport:
         )
 
 
-def _lease_path(spark, labels_path: str):
-    """Sibling writer-lease marker of a label store (outside the store
-    directory so a cold-start full overwrite cannot delete it
+def _hadoop_path(spark, path: str):
+    """``(fs, path)``: the Hadoop ``FileSystem`` and ``Path`` of ``path``
+    under the session's Hadoop configuration (local, HDFS, S3A alike)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _lease_file(spark, labels_path: str):
+    """``(fs, path)`` of the store's sibling writer-lease marker (outside
+    the store directory so a cold-start full overwrite cannot delete it
     mid-write)."""
-    return spark._jvm.org.apache.hadoop.fs.Path(
-        labels_path.rstrip("/") + "__lease"
-    )
+    return _hadoop_path(spark, labels_path.rstrip("/") + "__lease")
 
 
-def _acquire_store_lease(spark, labels_path: str, owner: str):
+def _acquire_store_lease(spark, labels_path: str, owner: str) -> None:
     """Create-exclusive writer lease for the label store. The store's
     write protocol (dynamic partition overwrite, compaction's
     read-then-replace) is SINGLE-WRITER: two concurrent
     writers would silently corrupt buckets. ``foreachBatch`` already
     serializes fold+compact inside one streaming query; this lease
     extends the guarantee to direct callers in other processes.
-    Returns the filesystem handle for :func:`_release_store_lease`;
-    raises RuntimeError when another writer holds the lease. A lease
+    Raises RuntimeError when another writer holds the lease. A lease
     left behind by a crashed writer must be cleared explicitly with
     :func:`break_store_lease` — a deliberate manual step, since only
     an operator can know the other writer is truly gone.
@@ -232,8 +240,7 @@ def _acquire_store_lease(spark, labels_path: str, owner: str):
     import os as _os
     import time as _time
 
-    jpath = _lease_path(spark, labels_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _lease_file(spark, labels_path)
     try:
         out = fs.create(jpath, False)  # overwrite=False: create-exclusive
     except Exception as exc:  # Hadoop FileAlreadyExistsException et al.
@@ -258,53 +265,52 @@ def _acquire_store_lease(spark, labels_path: str, owner: str):
         )
     finally:
         out.close()
-    return fs
 
 
-def _acquire_store_lease_retry(
-    spark, labels_path: str, owner: str, lease_wait: float
-):
-    """Bounded wait-and-backoff around the create-exclusive lease, for
-    the BENIGN contention case: a fold arriving while a compaction (or
-    another fold) briefly holds the store. Retries acquisition with
-    exponential backoff until ``lease_wait`` seconds have elapsed, then
-    re-raises the final RuntimeError — a stale lease from a crashed
-    writer still surfaces (after the bounded wait) and still requires
-    the deliberate :func:`break_store_lease`. Each attempt is the same
-    atomic create-exclusive as the direct path; waiting never peeks or
-    pre-deletes, so there is no acquire race."""
+@contextmanager
+def _store_lease(spark, labels_path: str, owner: str, lease_wait: float):
+    """Hold the store's writer lease (:func:`_acquire_store_lease`) for
+    the block, then release it.
+
+    ``lease_wait`` bounds a wait-and-backoff for the BENIGN contention
+    case: a fold arriving while a compaction (or another fold) briefly
+    holds the store. Acquisition retries with exponential backoff until
+    ``lease_wait`` seconds have elapsed, then re-raises the final
+    RuntimeError — a stale lease from a crashed writer still surfaces
+    (after the bounded wait) and still requires the deliberate
+    :func:`break_store_lease`. Each attempt is the same atomic
+    create-exclusive; waiting never peeks or pre-deletes, so there is no
+    acquire race."""
     import time as _time
 
     deadline = _time.monotonic() + lease_wait
     backoff = 0.05
     while True:
         try:
-            return _acquire_store_lease(spark, labels_path, owner)
+            _acquire_store_lease(spark, labels_path, owner)
+            break
         except RuntimeError:
             remaining = deadline - _time.monotonic()
             if remaining <= 0:
                 raise
             _time.sleep(min(backoff, remaining))
             backoff = min(backoff * 2, 1.0)
-
-
-def _release_store_lease(spark, labels_path: str, fs) -> None:
-    fs.delete(_lease_path(spark, labels_path), False)
+    try:
+        yield
+    finally:
+        break_store_lease(spark, labels_path)
 
 
 def break_store_lease(spark, labels_path: str) -> bool:
     """Forcibly clear a label-store writer lease (after a writer crash).
     Returns True if a lease file was removed."""
-    jpath = _lease_path(spark, labels_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _lease_file(spark, labels_path)
     return bool(fs.delete(jpath, False))
 
 
-def _meta_path(spark, labels_path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.Path(
-        labels_path.rstrip("/") + "/_store_meta.json"
-    )
+def _meta_file(spark, labels_path: str, suffix: str = ""):
+    """``(fs, path)`` of the store's layout sidecar (plus ``suffix``)."""
+    return _hadoop_path(spark, labels_path.rstrip("/") + "/_store_meta.json" + suffix)
 
 
 def _write_store_meta(spark, labels_path: str, n_buckets: int) -> None:
@@ -323,12 +329,8 @@ def _write_store_meta(spark, labels_path: str, n_buckets: int) -> None:
     (:func:`_check_store_meta`) is the backstop."""
     import json as _json
 
-    jvm = spark._jvm
-    jpath = _meta_path(spark, labels_path)
-    jtmp = jvm.org.apache.hadoop.fs.Path(
-        labels_path.rstrip("/") + "/_store_meta.json.tmp"
-    )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _meta_file(spark, labels_path)
+    _, jtmp = _meta_file(spark, labels_path, ".tmp")
     out = fs.create(jtmp, True)
     try:
         out.write(bytearray(_json.dumps({"n_buckets": n_buckets}).encode()))
@@ -343,8 +345,7 @@ def _recorded_n_buckets(spark, labels_path: str) -> int | None:
     store has no sidecar. Raises when the sidecar cannot be read."""
     import json as _json
 
-    jpath = _meta_path(spark, labels_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _meta_file(spark, labels_path)
     if not fs.exists(jpath):
         return None
     stream = fs.open(jpath)
@@ -424,7 +425,11 @@ def _check_store_meta(spark, labels_path: str, n_buckets: int) -> int | None:
     return recorded
 
 
-_STORE_SCHEMA = "node string, component string, bucket int"
+_STORE_SCHEMA = StructType([
+    StructField("node", StringType()),
+    StructField("component", StringType()),
+    StructField("bucket", IntegerType()),
+])
 # above this many subdirectories Spark lists a path with a Spark job
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
@@ -451,16 +456,9 @@ def _read_store(spark, labels_path: str, n_buckets: int | None = None) -> DataFr
             pass  # an unreadable sidecar vouches for nothing
     if n_buckets is None:
         return spark.read.parquet(labels_path)
-    previous = spark.conf.get(_LISTING_THRESHOLD, None)
     threshold = max(n_buckets, int(spark.conf.get(_LISTING_THRESHOLD)))
-    spark.conf.set(_LISTING_THRESHOLD, str(threshold))
-    try:
+    with clustering._conf_override(spark, _LISTING_THRESHOLD, str(threshold)):
         return spark.read.schema(_STORE_SCHEMA).parquet(labels_path)
-    finally:
-        if previous is None:
-            spark.conf.unset(_LISTING_THRESHOLD)
-        else:
-            spark.conf.set(_LISTING_THRESHOLD, previous)
 
 
 def _write_buckets(df: DataFrame, path: str, dynamic: bool = True) -> None:
@@ -553,16 +551,11 @@ def incremental_entity_labels(
     retry loop; a lease still held past the wait raises as before.
     """
     layout = _check_store_meta(spark, labels_path, n_buckets)
-    fs = _acquire_store_lease_retry(
-        spark, labels_path, "incremental_entity_labels", lease_wait
-    )
-    try:
+    with _store_lease(spark, labels_path, "incremental_entity_labels", lease_wait):
         return _fold_locked(
             spark, labels_path, new_matches, left_id, right_id,
             left_name, right_name, n_buckets, layout,
         )
-    finally:
-        _release_store_lease(spark, labels_path, fs)
 
 
 def _fold_locked(
@@ -571,11 +564,8 @@ def _fold_locked(
 ) -> FoldReport:
     from pyspark.errors import AnalysisException
 
-    from ..operators.clustering import connected_components
-
-    edges = new_matches.select(
-        F.concat(F.lit(left_name + ":"), F.col(left_id).cast("string")).alias("src"),
-        F.concat(F.lit(right_name + ":"), F.col(right_id).cast("string")).alias("dst"),
+    edges = clustering._encode_nodes(
+        new_matches, left_id, right_id, left_name, right_name
     )
     try:
         prev = _read_store(spark, labels_path, layout)
@@ -591,7 +581,9 @@ def _fold_locked(
                     F.col("node").alias("src"), F.col("component").alias("dst")
                 )
             )
-        labels = connected_components(edges).localCheckpoint()
+        # a local relation or an eager checkpoint, never a lazy plan
+        # over the store it is about to overwrite
+        labels = clustering.connected_components(edges)
         bucketed = labels.withColumn("bucket", _node_bucket(n_buckets))
         _write_buckets(bucketed, labels_path, dynamic=False)
         _write_store_meta(spark, labels_path, n_buckets)
@@ -606,13 +598,6 @@ def _fold_locked(
         # accepted this fold's n_buckets as the layout)
         _write_store_meta(spark, labels_path, n_buckets)
     return report
-
-
-def _capped_collect(df: DataFrame, cap: int):
-    """``df``'s rows, or None when it holds more than ``cap`` rows — in
-    one job (a bare ``limit`` on a multi-partition scan runs several)."""
-    rows = df.coalesce(1).limit(cap + 1).collect()
-    return None if len(rows) > cap else rows
 
 
 def _sql_string(value: str) -> str:
@@ -634,18 +619,14 @@ def _in_buckets(buckets) -> Column:
     return _sql_in("bucket", [str(int(b)) for b in buckets])
 
 
-def _write_sorted_buckets(spark, path: str, names: list[str], rows) -> None:
-    """Dynamic-overwrite the buckets of ``rows`` — string tuples whose
-    last field is the int bucket, sorted by it — from one local
-    relation. Its contiguous slices (one per ``defaultParallelism``)
-    land each bucket in one file, two where a slice boundary splits it."""
-    import pyarrow as pa
-
-    types = [pa.string()] * (len(names) - 1) + [pa.int32()]
-    table = pa.table(
-        [pa.array(col, t) for col, t in zip(zip(*rows), types)], names=names
+def _write_sorted_buckets(spark, path: str, rows) -> None:
+    """Dynamic-overwrite the buckets of ``rows`` — ``(node, component,
+    bucket)`` tuples sorted by bucket — from one local relation. Its
+    contiguous slices (one per ``defaultParallelism``) land each bucket
+    in one file, two where a slice boundary splits it."""
+    _write_buckets(
+        clustering._local_relation(spark, _STORE_SCHEMA, zip(*rows)), path
     )
-    _write_buckets(spark.createDataFrame(table), path)
 
 
 def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
@@ -659,12 +640,10 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
     were not loaded yet, so the write carries every row of each
     rewritten bucket. The write is one bucket-sorted local relation,
     so a rewritten bucket lands in ~one file."""
-    from ..operators import clustering
-
     # everything held on the driver (batch edges plus stored rows, a
     # superset of the union-find's input) stays under the bound
     budget = clustering.DRIVER_BOUND
-    edge_rows = _capped_collect(
+    edge_rows = clustering._capped_collect(
         edges.select(
             "src", "dst",
             _node_bucket(n_buckets, "src"), _node_bucket(n_buckets, "dst"),
@@ -683,14 +662,14 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
 
     def load(bucket_filter) -> bool:
         nonlocal budget
-        rows = _capped_collect(
+        rows = clustering._capped_collect(
             prev.filter(bucket_filter).select("node", "component", "bucket"),
             budget,
         )
         if rows is None:
             return False
         budget -= len(rows)
-        stored.update((r.node, (r.component, r.bucket)) for r in rows)
+        stored.update((node, (comp, bucket)) for node, comp, bucket in rows)
         return True
 
     loaded = sorted(set(batch_bucket.values()))
@@ -731,9 +710,7 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
         key=lambda r: (r[2], r[0]),
     )
     if to_write:
-        _write_sorted_buckets(
-            spark, labels_path, ["node", "component", "bucket"], to_write
-        )
+        _write_sorted_buckets(spark, labels_path, to_write)
     return FoldReport(
         labels_path,
         n_hit_components=len(hit),
@@ -743,8 +720,6 @@ def _fold_on_driver(spark, labels_path, edges, prev, n_buckets):
 
 
 def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
-    from ..operators.clustering import connected_components
-
     batch_nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -773,7 +748,7 @@ def _fold_distributed(spark, labels_path, edges, prev, n_buckets) -> FoldReport:
     star = members.select(
         F.col("node").alias("src"), F.col("component").alias("dst")
     )
-    new_labels = connected_components(edges.unionByName(star))  # eager ckpt
+    new_labels = clustering.connected_components(edges.unionByName(star))  # eager ckpt
 
     # DIFF-BASED WRITE: rewrite only buckets holding rows whose label
     # actually CHANGED, not every bucket holding any member of a touched
@@ -823,9 +798,7 @@ def _bucket_file_counts(spark, path: str) -> dict[int, int]:
     """Per-bucket parquet data-file counts of a bucket-partitioned store,
     via the Hadoop FileSystem API (storage-agnostic: local, HDFS, S3A).
     Returns {} for a store that does not exist yet."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _hadoop_path(spark, path)
     if not fs.exists(jpath):
         return {}
     counts: dict[int, int] = {}
@@ -869,13 +842,8 @@ def compact_label_store(
     another process is mid-flight would replace bucket files the fold
     is reading and double-write the ones it is writing.
     """
-    fs = _acquire_store_lease_retry(
-        spark, labels_path, "compact_label_store", lease_wait
-    )
-    try:
+    with _store_lease(spark, labels_path, "compact_label_store", lease_wait):
         return _compact_locked(spark, labels_path, max_files_per_bucket)
-    finally:
-        _release_store_lease(spark, labels_path, fs)
 
 
 def _compact_locked(spark, labels_path, max_files_per_bucket) -> list[int]:
@@ -947,12 +915,7 @@ def streaming_resolve_entities(
 def entity_table(spark, labels_path: str) -> DataFrame:
     """Current streaming entity table in the batch operator's column
     contract: ``(id, df_name, cluster_id)``."""
-    split = F.split(F.col("node"), ":", 2)
-    return _read_store(spark, labels_path).select(
-        split.getItem(1).alias("id"),
-        split.getItem(0).alias("df_name"),
-        F.col("component").alias("cluster_id"),
-    )
+    return clustering._decode_nodes(_read_store(spark, labels_path))
 
 
 def entity_lookup(

@@ -1,14 +1,16 @@
 """Distributed connected-components tests (replaces reference driver DFS,
 src/clustering.py:6-54)."""
 
+from pyspark_entity_resolution_spark.operators import clustering
 from pyspark_entity_resolution_spark.operators.clustering import (
     cluster_matched_pairs,
     connected_components,
 )
 
-# Both labeling paths: the default bound sends these small graphs to the
-# driver-side union-find, a bound of one edge forces the star rounds.
-CC_PATHS = {"driver": {}, "star_loop": {"target_edges_per_partition": 1}}
+# Both labeling paths, as values of clustering.DRIVER_BOUND: the default
+# bound sends these small graphs to the driver-side union-find, a bound
+# of 0 edges sends any non-empty graph through the star rounds.
+CC_PATHS = {"driver": clustering.DRIVER_BOUND, "star_loop": 0}
 
 
 def _components_as_partitions(rows):
@@ -34,15 +36,16 @@ def test_chain_and_fanout(spark):
     }
 
 
-def test_long_chain_converges(spark):
+def test_long_chain_converges(spark, monkeypatch):
     # a 40-node path: the worst case for label propagation (diameter 40);
     # the reference's recursive DFS would be fine here but crashes at
     # recursion depth ~1000 — ours is bounded by iterations, not depth.
+    monkeypatch.setattr(clustering, "MAX_ITERATIONS", 64)
     n = 40
     edges = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)], ["src", "dst"]
     )
-    rows = connected_components(edges, max_iterations=64).collect()
+    rows = connected_components(edges).collect()
     comps = {r["component"] for r in rows}
     assert comps == {"n000"}  # min label wins
     assert len(rows) == n + 1
@@ -74,7 +77,7 @@ def test_cluster_matched_pairs_namespacing(spark):
     }
 
 
-def test_explicit_checkpoint_storage_and_probes(spark):
+def test_explicit_checkpoint_storage_and_probes(spark, monkeypatch):
     """checkpoint_storage overrides the memory-aware choice without
     changing results, and the storage probes the choice rests on return
     sane values on a materialized checkpoint (real footprint > 0, real
@@ -88,14 +91,13 @@ def test_explicit_checkpoint_storage_and_probes(spark):
         _jvm_max_heap,
     )
 
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", CC_PATHS["star_loop"])
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["src", "dst"]
     )
     got = _components_as_partitions(
         connected_components(
-            edges,
-            checkpoint_storage=StorageLevel.DISK_ONLY,
-            target_edges_per_partition=1,
+            edges, checkpoint_storage=StorageLevel.DISK_ONLY
         ).collect()
     )
     assert got == {frozenset({"a", "b", "c"}), frozenset({"x", "y"})}
@@ -167,7 +169,7 @@ def _labels(df):
     return {r["node"]: r["component"] for r in df.collect()}
 
 
-def test_window_stars_match_kiveris_definitions(spark):
+def test_window_stars_match_kiveris_definitions(spark, monkeypatch):
     """Each window star's row set equals the set-operation definition,
     and end-to-end labels (node -> min node, not only the partition)
     equal union-find, on a random multigraph with self-loops and
@@ -191,12 +193,11 @@ def test_window_stars_match_kiveris_definitions(spark):
     got_small = {(r["u"], r["v"]) for r in _small_star_window(e).collect()}
     assert got_small == _small_star_reference(raw)
 
-    assert _labels(
-        connected_components(edges, target_edges_per_partition=1)
-    ) == _union_find_labels(raw)
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", CC_PATHS["star_loop"])
+    assert _labels(connected_components(edges)) == _union_find_labels(raw)
 
 
-def test_labels_match_union_find_on_chain_and_string_keys(spark):
+def test_labels_match_union_find_on_chain_and_string_keys(spark, monkeypatch):
     """Convergence-sensitive shapes: a 200-node chain fed in shuffled
     order (the most alternating-star rounds for its size) and
     string-namespaced node keys (the cluster_matched_pairs path) — the
@@ -209,26 +210,30 @@ def test_labels_match_union_find_on_chain_and_string_keys(spark):
     chain_df = spark.createDataFrame(chain, ["src", "dst"])
     named = [("a:1", "b:2"), ("b:2", "a:3"), ("a:9", "b:9"), ("b:10", "a:9")]
     named_df = spark.createDataFrame(named, ["src", "dst"])
-    for path, kw in CC_PATHS.items():
-        labels = _labels(connected_components(chain_df, **kw))
+    for path, bound in CC_PATHS.items():
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        labels = _labels(connected_components(chain_df))
         assert labels == _union_find_labels(chain), path
         assert set(labels.values()) == {0}, path
-        got = _labels(connected_components(named_df, **kw))
+        got = _labels(connected_components(named_df))
         assert got == _union_find_labels(named), path
 
 
-def test_star_loop_raises_when_iterations_run_out(spark):
+def test_star_loop_raises_when_iterations_run_out(spark, monkeypatch):
     """An unconverged round output is not a star forest (one round on a
     65-node chain leaves nodes with edges to two roots), so running out
-    of max_iterations must raise instead of returning duplicate node
+    of MAX_ITERATIONS must raise instead of returning duplicate node
     rows; with enough rounds the same chain labels as one component."""
     import pytest
 
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", CC_PATHS["star_loop"])
     chain = [(i, i + 1) for i in range(64)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
-    with pytest.raises(RuntimeError, match="max_iterations=1"):
-        connected_components(edges, max_iterations=1, **CC_PATHS["star_loop"])
-    rows = connected_components(edges, **CC_PATHS["star_loop"]).collect()
+    with monkeypatch.context() as m:
+        m.setattr(clustering, "MAX_ITERATIONS", 1)
+        with pytest.raises(RuntimeError, match="MAX_ITERATIONS=1"):
+            connected_components(edges)
+    rows = connected_components(edges).collect()
     assert len(rows) == 65 and {r["component"] for r in rows} == {0}
 
 
@@ -255,13 +260,15 @@ def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
     )
     monkeypatch.setattr(C, "_label_on_driver", spying(C._label_on_driver))
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 4)], ["src", "dst"])
-    loop = CC_PATHS["star_loop"]
 
     def persisted(rdd_id):
         return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        C.connected_components(edges, max_iterations=0, **loop)
+    with monkeypatch.context() as m:
+        m.setattr(C, "DRIVER_BOUND", CC_PATHS["star_loop"])
+        m.setattr(C, "MAX_ITERATIONS", 0)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            C.connected_components(edges)
     assert not persisted(raw_ids[-1])
 
     C.connected_components(edges).collect()
@@ -271,27 +278,25 @@ def test_raw_checkpoint_released_on_every_exit_path(spark, monkeypatch):
         raise RuntimeError("round failed")
 
     monkeypatch.setattr(C, "_round_step", boom)
+    monkeypatch.setattr(C, "DRIVER_BOUND", CC_PATHS["star_loop"])
     with pytest.raises(RuntimeError, match="round failed"):
-        C.connected_components(edges, **loop)
+        C.connected_components(edges)
     assert len(raw_ids) == 3 and not persisted(raw_ids[-1])
 
 
-def test_round_stats_diagnostic_records_every_round(spark):
+def test_round_stats_diagnostic_records_every_round(spark, monkeypatch):
     """LAST_RUN_ROUND_STATS (read by erbench's ``clustering.rounds`` and
     ab_bench's ``cc_<edges>`` rows): one entry per executed round, seconds
     positive, edge counts non-increasing after the first star pass
     settles, and the final round is the probed one that converged."""
     from pyspark.sql import functions as F
 
-    from pyspark_entity_resolution_spark.operators import clustering
-
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", CC_PATHS["star_loop"])
     edges = spark.range(2000).select(
         (F.abs(F.xxhash64("id")) % 600).alias("src"),
         (F.abs(F.xxhash64(F.col("id") + 7)) % 600).alias("dst"),
     )
-    clustering.connected_components(
-        edges, target_edges_per_partition=1
-    ).count()
+    clustering.connected_components(edges).count()
     stats = clustering.LAST_RUN_ROUND_STATS
     assert stats, "no rounds recorded"
     assert all(s["sec"] > 0 for s in stats)
@@ -299,13 +304,12 @@ def test_round_stats_diagnostic_records_every_round(spark):
     assert stats[-1]["probed"] is True  # converged via the gated probe
     # a fresh call replaces the sink (last call wins)
     clustering.connected_components(
-        spark.createDataFrame([(1, 2)], "src long, dst long"),
-        target_edges_per_partition=1,
+        spark.createDataFrame([(1, 2)], "src long, dst long")
     ).count()
     assert clustering.LAST_RUN_ROUND_STATS is not stats
 
 
-def test_self_loop_only_nodes_label_as_singletons(spark):
+def test_self_loop_only_nodes_label_as_singletons(spark, monkeypatch):
     """r10: singleton recovery switched from an all-nodes anti-join to
     the self-loop-only set — nodes whose EVERY edge is a self-loop must
     still come back as their own component, nodes with both a self-loop
@@ -317,17 +321,18 @@ def test_self_loop_only_nodes_label_as_singletons(spark):
         ["src", "dst"],
     )
     edges2 = spark.createDataFrame([(1, 2), (4, 5)], ["src", "dst"])
-    for path, kw in CC_PATHS.items():
+    for path, bound in CC_PATHS.items():
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
         got = [(r.node, r.component)
-               for r in connected_components(edges, **kw).collect()]
+               for r in connected_components(edges).collect()]
         assert sorted(got) == [(1, 1), (2, 1), (3, 1), (900, 900), (901, 901)], path
         # empty-selfs fast path: all nodes labeled, no singleton branch
         got2 = {(r.node, r.component)
-                for r in connected_components(edges2, **kw).collect()}
+                for r in connected_components(edges2).collect()}
         assert got2 == {(1, 1), (2, 1), (4, 4), (5, 4)}, path
 
 
-def test_null_endpoint_edges_dropped_on_both_paths(spark):
+def test_null_endpoint_edges_dropped_on_both_paths(spark, monkeypatch):
     """An edge with a null endpoint carries no node (the loop's
     ``u == v`` / ``u != v`` filters are null-rejecting); the driver-side
     labeling must drop exactly the same edges."""
@@ -335,16 +340,18 @@ def test_null_endpoint_edges_dropped_on_both_paths(spark):
         [("a", None), (None, "b"), ("c", "d"), (None, None), ("e", "e")],
         "src string, dst string",
     )
-    for path, kw in CC_PATHS.items():
+    for path, bound in CC_PATHS.items():
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
         got = [(r.node, r.component)
-               for r in connected_components(edges, **kw).collect()]
+               for r in connected_components(edges).collect()]
         assert sorted(got) == [("c", "c"), ("d", "c"), ("e", "e")], path
 
 
-def test_small_graph_runs_at_most_five_jobs(spark):
-    """A graph within one partition's edge budget is labeled on the
-    driver: materialize, count and one collect — not a dozen star-round
-    jobs of fixed cost (the round loop ran 23 on this graph)."""
+def test_small_graph_runs_at_most_two_jobs(spark):
+    """A graph within the driver bound is labeled on the driver: the
+    edge checkpoint and one capped collect — no count, and not a dozen
+    star-round jobs of fixed cost (the round loop ran 23 on this
+    graph)."""
     sc = spark.sparkContext
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5), (6, 6), (7, 1)], "src long, dst long"
@@ -356,17 +363,29 @@ def test_small_graph_runs_at_most_five_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("cc-small-graph-jobs")
     assert len(rows) == 7
-    assert len(jobs) <= 5, jobs
+    assert len(jobs) <= 2, jobs
 
 
-def test_small_call_after_large_resets_round_stats(spark):
+def test_small_call_after_large_resets_round_stats(spark, monkeypatch):
     """LAST_RUN_ROUND_STATS describes the most recent call: a small
     (driver-labeled) graph after a star-loop run reports no rounds
     instead of the previous call's."""
-    from pyspark_entity_resolution_spark.operators import clustering
-
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    clustering.connected_components(edges, **CC_PATHS["star_loop"])
+    with monkeypatch.context() as m:
+        m.setattr(clustering, "DRIVER_BOUND", CC_PATHS["star_loop"])
+        clustering.connected_components(edges)
     assert clustering.LAST_RUN_ROUND_STATS
     clustering.connected_components(edges)
     assert clustering.LAST_RUN_ROUND_STATS == []
+
+
+def test_patched_driver_bound_moves_connected_components(spark, monkeypatch):
+    """connected_components reads DRIVER_BOUND when it is called, as the
+    incremental fold does: patched to 0, a tiny graph runs the star
+    rounds, and the shuffle width the loop derives from the bound stays
+    at least one partition."""
+    monkeypatch.setattr(clustering, "DRIVER_BOUND", 0)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    labels = _labels(clustering.connected_components(edges))
+    assert labels == {1: 1, 2: 1, 3: 1}
+    assert clustering.LAST_RUN_ROUND_STATS

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from pyspark_entity_resolution_spark.functions import text as T
+from pyspark_entity_resolution_spark.operators import clustering
 from pyspark_entity_resolution_spark.operators import dedup as D
 from pyspark_entity_resolution_spark.operators.asof import as_of_join
 from pyspark_entity_resolution_spark.operators.clustering import connected_components
@@ -32,25 +33,28 @@ def test_text_stats_on_degenerate_text(spark):
     assert by_n[2]["lang"] == "und"  # no marker words
 
 
-# the default edge bound labels these graphs on the driver; a bound of
-# one edge sends any non-empty graph through the star rounds
-CC_PATHS = ({}, {"target_edges_per_partition": 1})
+# values of clustering.DRIVER_BOUND: the default labels these graphs on
+# the driver; a bound of 0 edges sends any non-empty graph through the
+# star rounds
+CC_PATHS = (clustering.DRIVER_BOUND, 0)
 
 
-def test_connected_components_empty_edges(spark):
+def test_connected_components_empty_edges(spark, monkeypatch):
     edges = spark.createDataFrame([], "src string, dst string")
-    for kw in CC_PATHS:
-        assert connected_components(edges, **kw).count() == 0, kw
+    for bound in CC_PATHS:
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        assert connected_components(edges).count() == 0, bound
 
 
-def test_connected_components_self_loops_only(spark):
+def test_connected_components_self_loops_only(spark, monkeypatch):
     edges = spark.createDataFrame([("a", "a"), ("b", "b")], ["src", "dst"])
     # self-loops carry no connectivity, but the nodes still exist ->
     # singleton components (contract: every node appearing in edges)
-    for kw in CC_PATHS:
-        labels = connected_components(edges, **kw).collect()
+    for bound in CC_PATHS:
+        monkeypatch.setattr(clustering, "DRIVER_BOUND", bound)
+        labels = connected_components(edges).collect()
         rows = [(r["node"], r["component"]) for r in labels]
-        assert sorted(rows) == [("a", "a"), ("b", "b")], kw
+        assert sorted(rows) == [("a", "a"), ("b", "b")], bound
 
 
 def test_dedup_on_empty_documents(spark):

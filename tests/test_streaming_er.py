@@ -671,7 +671,7 @@ def test_writer_lease_blocks_concurrent_fold_and_compact(spark, tmp_path):
     ser.incremental_entity_labels(spark, labels_path, batch, n_buckets=4)
 
     # simulate another process's in-flight fold
-    held = ser._acquire_store_lease(spark, labels_path, "other-writer")
+    ser._acquire_store_lease(spark, labels_path, "other-writer")
     try:
         with pytest.raises(RuntimeError, match="locked by another writer"):
             ser.incremental_entity_labels(
@@ -694,7 +694,6 @@ def test_writer_lease_blocks_concurrent_fold_and_compact(spark, tmp_path):
     )
     assert report.labels.count() == 4
     assert ser.compact_label_store(spark, labels_path) == []
-    del held
 
 
 def test_truncated_store_meta_is_tolerated_and_rewritten(spark, tmp_path):
@@ -815,9 +814,9 @@ def test_lease_wait_retries_through_benign_contention(spark, tmp_path):
     )
 
     # benign: another writer holds the lease briefly, then releases
-    fs = ser._acquire_store_lease(spark, labels_path, "other-writer")
+    ser._acquire_store_lease(spark, labels_path, "other-writer")
     release = threading.Timer(
-        0.4, lambda: ser._release_store_lease(spark, labels_path, fs)
+        0.4, lambda: ser.break_store_lease(spark, labels_path)
     )
     release.start()
     try:
@@ -832,12 +831,12 @@ def test_lease_wait_retries_through_benign_contention(spark, tmp_path):
     assert report.labels.count() == 4
 
     # still-held past the bounded wait: the contention error surfaces
-    held = ser._acquire_store_lease(spark, labels_path, "stuck-writer")
+    ser._acquire_store_lease(spark, labels_path, "stuck-writer")
     t0 = time.monotonic()
     with pytest.raises(RuntimeError, match="locked by another writer"):
         ser.compact_label_store(spark, labels_path, lease_wait=0.3)
     assert time.monotonic() - t0 >= 0.3
-    ser._release_store_lease(spark, labels_path, held)
+    assert ser.break_store_lease(spark, labels_path)
 
 
 def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
@@ -850,9 +849,6 @@ def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
     from pyspark_entity_resolution_spark.streaming import er as ser
 
     class ReleasedMeanwhile:
-        def getFileSystem(self, conf):
-            return self
-
         def create(self, path, overwrite):
             raise OSError(
                 "org.apache.hadoop.fs.FileAlreadyExistsException: "
@@ -862,7 +858,9 @@ def test_lease_released_mid_acquire_is_contention(spark, monkeypatch):
         def exists(self, path):
             return False
 
-    monkeypatch.setattr(ser, "_lease_path", lambda *a: ReleasedMeanwhile())
+    monkeypatch.setattr(
+        ser, "_lease_file", lambda *a: (ReleasedMeanwhile(), "/store__lease")
+    )
     with pytest.raises(RuntimeError, match="locked by another writer"):
         ser._acquire_store_lease(spark, "/store", "me")
 
@@ -923,6 +921,25 @@ def _jobs_during(spark, fn):
     before = set(tracker.getJobIdsForGroup(None) or [])
     out = fn()
     return out, len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def test_cold_start_fold_runs_three_jobs(spark, tmp_path):
+    """A cold start of a small batch runs connected components' edge
+    checkpoint and capped collect, then the store write: no count inside
+    connected components and no second checkpoint of labels that come
+    back materialized (6 jobs before both went)."""
+    from pyspark_entity_resolution_spark.streaming import er as ser
+
+    batch = spark.createDataFrame([(1, 101), (2, 101), (3, 103)], "a_id long, b_id long")
+    report, n_jobs = _jobs_during(spark, lambda: ser.incremental_entity_labels(
+        spark, str(tmp_path / "labels_cold"), batch, n_buckets=4
+    ))
+    assert report.cold_start
+    assert n_jobs <= 3, f"cold fold ran {n_jobs} jobs"
+    assert {(r.node, r.component) for r in report.labels.collect()} == {
+        ("a:1", "a:1"), ("a:2", "a:1"), ("b:101", "a:1"),
+        ("a:3", "a:3"), ("b:103", "a:3"),
+    }
 
 
 def test_store_read_at_64_buckets_runs_no_listing_or_schema_job(spark, tmp_path):
@@ -1328,14 +1345,11 @@ def test_null_id_batch_row_folds_alike_on_both_paths(spark, tmp_path, monkeypatc
 _LEASE_RACE_SCRIPT = r'''
 import json, sys, time
 
-sys.path.insert(0, "/root/repo")
-role, labels_path, out_path, lease_wait, hold = sys.argv[1:6]
+role, labels_path, out_path, lease_wait, hold, root = sys.argv[1:7]
+sys.path.insert(0, root)
 
 from pyspark_entity_resolution_spark.session import get_spark
-from pyspark_entity_resolution_spark.streaming.er import (
-    _acquire_store_lease_retry,
-    _release_store_lease,
-)
+from pyspark_entity_resolution_spark.streaming.er import _store_lease
 
 spark = get_spark(
     app_name=f"lease-race-{role}", master="local[2]", shuffle_partitions=2
@@ -1351,12 +1365,9 @@ def log(event):
 
 log("started")
 try:
-    fs = _acquire_store_lease_retry(
-        spark, labels_path, owner=role, lease_wait=float(lease_wait)
-    )
-    log("acquired")
-    time.sleep(float(hold))
-    _release_store_lease(spark, labels_path, fs)
+    with _store_lease(spark, labels_path, role, float(lease_wait)):
+        log("acquired")
+        time.sleep(float(hold))
     log("released")
 except RuntimeError:
     log("denied")
@@ -1377,11 +1388,13 @@ def test_lease_mutual_exclusion_across_processes(tmp_path):
     test_writer_lease_blocks_concurrent_fold_and_compact,
     test_lease_wait_retries_through_benign_contention."""
     import json
+    import os
     import subprocess
     import sys
     import time
 
     labels_path = str(tmp_path / "labels_race")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = tmp_path / "lease_race.py"
     script.write_text(_LEASE_RACE_SCRIPT)
     out_a = str(tmp_path / "a.jsonl")
@@ -1407,7 +1420,7 @@ def test_lease_mutual_exclusion_across_processes(tmp_path):
     # A: acquire immediately, hold long enough for B and C to contend
     # (the hold must outlast B's and C's JVM startup, ~10s each here)
     a = subprocess.Popen(
-        [sys.executable, str(script), "A", labels_path, out_a, "0", "30"],
+        [sys.executable, str(script), "A", labels_path, out_a, "0", "30", root],
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
     try:
@@ -1415,12 +1428,12 @@ def test_lease_mutual_exclusion_across_processes(tmp_path):
         # C: tiny lease_wait while A holds -> denied (started first so
         # its attempt lands well inside A's hold window)
         c = subprocess.Popen(
-            [sys.executable, str(script), "C", labels_path, out_c, "0.3", "0"],
+            [sys.executable, str(script), "C", labels_path, out_c, "0.3", "0", root],
             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         )
         # B: generous lease_wait -> must block, then win after A releases
         b = subprocess.Popen(
-            [sys.executable, str(script), "B", labels_path, out_b, "90", "0"],
+            [sys.executable, str(script), "B", labels_path, out_b, "90", "0", root],
             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         )
         try:

@@ -106,7 +106,7 @@ def extra_plan_dfs(spark) -> dict[str, tuple[str, object]]:
             "ONE alternating large+small star round of "
             "connected_components (window-function stars, join-free) — "
             "the plan executed per iteration on graphs above "
-            "target_edges_per_partition edges; connected_components_labels' "
+            "clustering.DRIVER_BOUND edges; connected_components_labels' "
             "own section above is empty because the returned DF is "
             "already labeled (a local relation at sf0.01, a checkpoint "
             "above the bound).",

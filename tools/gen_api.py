@@ -2,11 +2,15 @@
 signature and first docstring sentence — the switch-over map for a user
 of the reference engine.
 
-Usage: python tools/gen_api.py
+Usage: python tools/gen_api.py [--check]
+
+Without arguments it rewrites API.md; with ``--check`` it writes nothing
+and exits 1 when API.md differs from what it would write.
 """
 
 from __future__ import annotations
 
+import argparse
 import importlib
 import inspect
 import os
@@ -34,7 +38,8 @@ def first_sentence(doc: str | None) -> str:
     return text if text.endswith(".") else text + "."
 
 
-def main() -> None:
+def render() -> str:
+    """The API.md text for the package as imported now."""
     out = [
         "# API index\n",
         "Generated by `tools/gen_api.py`. Every public operator/function",
@@ -67,10 +72,29 @@ def main() -> None:
             rel = info.name.replace("pyspark_entity_resolution_spark.", "")
             out.append(f"\n## {rel}\n")
             out.extend(rows)
-    with open(os.path.join(REPO, "API.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
+    return "\n".join(out) + "\n"
+
+
+def main(argv: list[str] | None = None) -> int:
+    parser = argparse.ArgumentParser(description="Generate API.md.")
+    parser.add_argument(
+        "--check", action="store_true",
+        help="write nothing; exit 1 when API.md is out of date",
+    )
+    args = parser.parse_args(argv)
+    path = os.path.join(REPO, "API.md")
+    text = render()
+    if args.check:
+        with open(path) as f:
+            if f.read() == text:
+                return 0
+        print("API.md is out of date: run python tools/gen_api.py")
+        return 1
+    with open(path, "w") as f:
+        f.write(text)
     print("wrote API.md")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
