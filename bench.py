@@ -450,117 +450,7 @@ def media_corpus_meta(n_audio: int = 400, n_images: int = 400,
     }
 
 
-def _auto_baseline_ref() -> str | None:
-    """The latest round-boundary commit STRICTLY BEFORE HEAD ("round N:
-    verdict/..." — the driver stamps one per round), i.e. the prior
-    round's final state. Searching from HEAD itself would, on the
-    boundary commit, baseline the run against identical code and bury
-    any real round-over-round delta under a tautological ~0. None
-    outside a git checkout or before round 1."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=repo, capture_output=True, text=True, timeout=30, check=True,
-        ).stdout.strip()
-        out = subprocess.run(
-            ["git", "log", "--grep", "^round [0-9]*:", "--format=%H", "-n", "2",
-             "HEAD"],
-            cwd=repo, capture_output=True, text=True, timeout=30, check=True,
-        ).stdout.split()
-        for sha in out:
-            if sha != head:
-                return sha
-        return None
-    except Exception:
-        return None
-
-
-def _baseline_same_host_interleaved(
-    ref: str,
-    rows: list | None = None,
-    queries: list | None = None,
-    passes: int | None = None,
-    runs: int | None = None,
-) -> dict:
-    """Interleaved same-host A/B of committed HEAD vs the prior round's
-    boundary commit, embedded in the artifact. Round 7's sequential
-    A-then-B version of this (HEAD in-process first, then one baseline
-    subprocess) read HEAD +10% at sf0.1 while a true interleaved A/B
-    showed HEAD flat-to-faster — the baseline arm ran second, into a
-    warm page cache and a different drift window, and the artifact
-    carried no way to see that. This version reuses ``ab_bench``'s pass
-    loop: fresh JVM per (ref, pass), refs alternated within each pass
-    (order reversed on odd passes), per-pass pairs embedded verbatim so
-    a judge can check straddle instead of trusting one delta.
-
-    Both arms measure COMMITTED state (cached detached worktrees keyed
-    by sha) — uncommitted edits are not in the HEAD arm; the official
-    in-process numbers above remain the working tree's. Defaults are the
-    headline set; ``--full`` passes the whole registry with fewer
-    runs-per-JVM (r8 judge finding #1: the full-registry artifact had no
-    same-host protocol and could not adjudicate its own 58.6 -> 73.6 s
-    move). Knobs: $SPARK_GRAFT_BASELINE_PASSES (default 2) / _RUNS
-    (min-of-N inside each JVM, default 2). Failures are embedded, not
-    fatal — the HEAD artifact must not die because an old ref can't run
-    on today's testdata."""
-    try:
-        from tools.ab_bench import interleaved_ab, resolve_ref
-
-        head = resolve_ref("HEAD")
-        base = resolve_ref(ref)
-    except Exception as exc:  # noqa: BLE001
-        return {"ref": ref, "error": f"ref resolution failed: {exc!r}"}
-    if head == base:
-        return {"ref": base,
-                "error": "baseline ref equals HEAD; nothing to compare"}
-    if passes is None:
-        passes = max(1, int(os.environ.get("SPARK_GRAFT_BASELINE_PASSES", "2")))
-    if runs is None:
-        runs = max(1, int(os.environ.get("SPARK_GRAFT_BASELINE_RUNS", "2")))
-    try:
-        records, summary = interleaved_ab(
-            [head, base],
-            rows=(["er_pipeline_blocked_n3", "er_pipeline_e2e_n3"]
-                  if rows is None else rows),
-            queries=HEADLINE if queries is None else queries,
-            passes=passes,
-            runs=runs,
-            on_record=lambda rec: print(
-                f"[bench] baseline pass {rec.get('pass')} "
-                f"{rec.get('ref', '')[:12]} done", file=sys.stderr, flush=True
-            ),
-        )
-    except Exception as exc:  # noqa: BLE001 — diagnostic sink by design
-        return {"ref": base, "error": repr(exc)}
-    out = {
-        "ref": base,
-        "head_ref": head,
-        "passes": passes,
-        "runs_per_query_per_pass": runs,
-        "pairs": records,
-        "summary": summary,
-        "protocol": "interleaved same-host A/B (tools/ab_bench.py pass "
-                    "loop): fresh JVM per (ref, pass), ref order reversed "
-                    "on odd passes, min-of-%d per query inside each JVM; "
-                    "both arms are COMMITTED shas in cached worktrees"
-                    % runs,
-    }
-    if passes < 2:
-        # one pass = A-then-B, no order reversal — exactly the
-        # sequential ordering this block exists to replace. Stamp it so
-        # a reader never mistakes a single-pass run (HEAD first, cold
-        # cache; baseline second, warm) for straddle-grade evidence.
-        out["sequential_grade"] = True
-        out["protocol"] += ("; WARNING: passes=1 is sequential A-then-B "
-                            "— no straddle evidence, ordering bias "
-                            "uncorrected")
-    return out
-
-
-def main(full: bool = False, baseline_ref: str | None = None) -> None:
+def main(full: bool = False) -> None:
     """Default: the HEADLINE set, min-of-3, plus the two ER pipeline
     rows — the driver's ``BENCH_r{N}.json`` artifact. ``--full``: every
     registry query (all 50 of the correctness gate), min-of-2 — the
@@ -742,48 +632,7 @@ def main(full: bool = False, baseline_ref: str | None = None) -> None:
     if build_exec_sec:
         workload["build_exec_sec"] = build_exec_sec
     metric = "full_total_runtime" if full else "headline_total_runtime"
-    # emit the HEAD artifact BEFORE the baseline subprocess: if a
-    # harness timeout kills the run mid-baseline, the measured numbers
-    # above must already be on stdout (the driver parses the final JSON
-    # line of a bounded tail, so the post-baseline re-emission below
-    # simply supersedes this one when it completes)
     emit_bench_artifact(total, per_query, sf, workload, metric=metric)
-
-    # same-host prior-round comparison (suppressed in the baseline
-    # subprocess itself and by SPARK_GRAFT_NO_BASELINE). Headline mode:
-    # passes x min-of-2 over the headline set. Full mode (r9, closing
-    # r8 judge finding #1): the WHOLE registry, min-of-1 inside each
-    # JVM — per-query precision is lower, but the artifact now carries
-    # its own same-host straddle evidence instead of a README narrative.
-    if not os.environ.get("SPARK_GRAFT_NO_BASELINE"):
-        ref = (baseline_ref
-               or os.environ.get("SPARK_GRAFT_BASELINE_REF")
-               or _auto_baseline_ref())
-        if ref:
-            print(f"[bench] baseline ref {ref[:12]} (interleaved same-host "
-                  "A/B) ...", file=sys.stderr, flush=True)
-            baseline = _baseline_same_host_interleaved(
-                ref,
-                rows=[] if full else None,
-                queries=sorted(specs) if full else None,
-                runs=1 if full else None,
-                # full mode is min-of-1 per JVM, so a 2-pass A-B-B-A
-                # window puts one ref on both EDGE slots — r10's first
-                # full artifact read a fake 1.30x regression when a
-                # mid-window spike landed on HEAD's slots while the
-                # boundary sat stable between them. Three passes
-                # (A B | B A | A B) straddle any single spike; headline
-                # mode keeps 2 passes (min-of-2 inside each JVM already
-                # absorbs one bad run).
-                # an explicit $SPARK_GRAFT_BASELINE_PASSES still wins
-                passes=(None if os.environ.get("SPARK_GRAFT_BASELINE_PASSES")
-                        else 3 if full else None),
-            )
-            if baseline:
-                workload["baseline_same_host_interleaved"] = baseline
-                emit_bench_artifact(
-                    total, per_query, sf, workload, metric=metric
-                )
     spark.stop()
 
 
@@ -818,11 +667,4 @@ def emit_bench_artifact(
 
 
 if __name__ == "__main__":
-    _argv = sys.argv[1:]
-    _ref = None
-    if "--baseline-ref" in _argv:
-        _i = _argv.index("--baseline-ref")
-        if _i + 1 >= len(_argv) or _argv[_i + 1].startswith("--"):
-            sys.exit("usage: bench.py [--full] [--baseline-ref <git-ref>]")
-        _ref = _argv[_i + 1]
-    main(full="--full" in _argv, baseline_ref=_ref)
+    main(full="--full" in sys.argv[1:])

@@ -65,7 +65,7 @@ def cmd_metrics(args) -> None:
     spark = get_spark("er-metrics")
     complete = read_parquet(spark, args.complete)
     blocked = read_parquet(spark, args.blocked)
-    print(json.dumps(match_quality(complete, blocked, keys=["a_id", "b_id"])))
+    print(json.dumps(match_quality(complete, blocked)))
 
 
 def cmd_run(args) -> None:

@@ -32,6 +32,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import LEFT, RIGHT
+
 # Row bound of the driver-side labeling paths: a graph of at most this
 # many edges is collected and labeled in-process (the size at which the
 # star loop would run on one shuffle partition anyway). Also bounds each
@@ -550,10 +552,10 @@ def _connected_components_loop(raw: DataFrame, level, n_edges: int) -> DataFrame
 
 def cluster_matched_pairs(
     matches: DataFrame,
-    left_id: str,
-    right_id: str,
-    left_name: str = "a",
-    right_name: str = "b",
+    left_id: str = f"{LEFT}_id",
+    right_id: str = f"{RIGHT}_id",
+    left_name: str = LEFT,
+    right_name: str = RIGHT,
 ) -> DataFrame:
     """Cluster matched pairs into entities.
 
@@ -562,7 +564,8 @@ def cluster_matched_pairs(
     synthetic ids collide across datasets; namespacing the id with the
     dataset name is sufficient and join-free. Returns
     ``(id, df_name, cluster_id)`` with a deterministic dense cluster id
-    derived from the min member key.
+    derived from the min member key. The columns and side names default
+    to the ER path's two sources (``sources.io.LEFT``/``RIGHT``).
     """
     edges = _encode_nodes(matches, left_id, right_id, left_name, right_name)
     return _decode_nodes(connected_components(edges))

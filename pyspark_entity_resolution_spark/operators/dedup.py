@@ -160,9 +160,7 @@ def minhash_lsh_candidates(
     -> self equi-join on (band_idx, band_key), each pair admitted exactly
     once.
 
-    Three deliberate scale choices (first two measured 2.8x together at
-    sf0.1, where the corpus is near-dup-heavy; the double-hash family
-    another ~3x on the signature stage):
+    Three deliberate scale choices:
 
     - The signature pipeline runs in STAGED projections: one md5 per
       distinct token into a (h1, h2) column, then the k permutation
@@ -198,19 +196,17 @@ def minhash_banded(
     ``(id_col, k0..k{bands-1}, band_idx, band_key)`` — one exploded row
     per (document, band) carrying ALL of the document's band keys as
     flattened scalars for first-colliding-band admission — eagerly
-    ``localCheckpoint``-ed. r11 split this out of
-    :func:`minhash_lsh_candidates` (identical plan, identical rows) so
-    one computation can serve the pair self-join AND the ingest paths:
-    an accepted-subset filter of these rows IS ``minhash_corpus_index``
-    of that subset (band keys are per-document), and an arriving-subset
-    filter is the probe side — previously each re-ran the whole
-    signature pipeline."""
+    ``localCheckpoint``-ed. It stands apart from
+    :func:`minhash_lsh_candidates` so one computation can serve the pair
+    self-join AND the ingest paths: an accepted-subset filter of these
+    rows IS ``minhash_corpus_index`` of that subset (band keys are
+    per-document), and an arriving-subset filter is the probe side."""
     rows_per_band = num_hashes // bands
     # lazy checkpoints as PROJECTION BARRIERS: without them Catalyst's
     # CollapseProject folds the three stages into one and re-inlines
     # `hs` into all k permutation transforms and `sig` into every band
     # key — recomputing the md5 pass k times and the permutation pass
-    # bands times (measured 4x on the cold first run). The barriers pin
+    # bands times. The barriers pin
     # each stage's output as a real column; everything materializes in
     # the single eager checkpoint below.
     hashed = df.select(
@@ -224,11 +220,7 @@ def minhash_banded(
 
     # band keys FLATTENED to one scalar column per band (bands is a plan
     # constant): the admission filter below then unrolls to plain string
-    # equality in whole-stage codegen. The previous array form
-    # (exists(zip_with(slice(a_keys), slice(b_keys)))) allocated three
-    # arrays per JOIN ROW, and at x100 data the candidate join evaluates
-    # ~600M rows — the allocation, not the join, was the bottleneck
-    # (measured x1.9 end-to-end on the two-decade probe).
+    # equality in whole-stage codegen, allocating no array per join row.
     # barrier so the md5 band-key array is computed once, not once per
     # element_at extraction below
     keyed = with_sig.select(F.col(id_col), keys.alias("keys")).localCheckpoint(
@@ -281,7 +273,7 @@ def jaccard_profile(
 ) -> DataFrame:
     """Per-document distinct-token verification profile ``(id_col, toks,
     nt)`` — the projection :func:`verify_token_jaccard` builds
-    internally, exposed (r11) so a pack computing SEVERAL verification
+    internally, exposed so a pack computing SEVERAL verification
     stages over one corpus (pair verify + ingest verify) tokenizes each
     document once instead of once per stage. ``hashed=None`` runs the
     :func:`_hash_injective` certificate and stores 64-bit token hashes
@@ -314,11 +306,11 @@ def verify_token_jaccard(
     ``hashed=None`` (default) runs the :func:`_hash_injective`
     planning-time certificate and, when it holds (always, in practice),
     intersects 64-bit token-hash arrays instead of string arrays —
-    provably the same jaccard, about half the per-pair cost (measured on
-    the x10 probe corpus). Pass False to force string verification, or
+    provably the same jaccard, about half the per-pair cost. Pass False
+    to force string verification, or
     True when the caller has already certified this corpus's vocabulary.
 
-    ``profile=`` (r11): pass a :func:`jaccard_profile` of ``df`` to
+    ``profile=``: pass a :func:`jaccard_profile` of ``df`` to
     reuse one tokenization across several verification stages (the
     caller owns any checkpoint barrier on it); ``df``/``text_col``/
     ``hashed`` are then ignored for side-building.
@@ -376,8 +368,8 @@ def simhash_signatures(
 
     A single scalar expression (nested transform/aggregate over the token
     array) would inline the token-md5 array into all 64 bit-sums: md5
-    recomputed 64x and an expression tree past codegen limits (measured
-    ~100x slower at sf0.1). Instead: explode tokens once, compute the 16
+    recomputed 64x and an expression tree past codegen limits.
+    Instead: explode tokens once, compute the 16
     md5 nibbles per token, and fold the 64 signed bit-sums in ONE hash
     aggregate with map-side partial aggregation — the shape that scales.
     """
@@ -387,9 +379,8 @@ def simhash_signatures(
     # one F.expr parse per aggregate (and ONE for the whole final
     # projection) instead of composing ~9,000 py4j calls column-by-
     # column: the SQL text parses to the identical Catalyst tree (same
-    # conv/shiftright/CASE shapes), measured 1.4-1.8 s -> ~0.2 s of
-    # plan-build per call at sf0.1 (r11; the same batching the vector
-    # builders in functions/vectors.py got)
+    # conv/shiftright/CASE shapes) at a fraction of the plan-build time
+    # (the same batching the vector builders in functions/vectors.py use)
     def _contrib_sql(p: int) -> str:
         nib = (f"cast(conv(substring(md5(tok), {p // 4 + 1}, 1), 16, 10) "
                "as int)")
@@ -523,8 +514,7 @@ def _hash_injective(df: DataFrame, grams: Column) -> bool:
     ANY corpus size), so this is a linear scan + a tiny aggregate, the
     same planning-cost class as :func:`~..ann.choose_num_planes`'s
     ``count()``. With the certificate in hand, per-pair verification can
-    intersect 8-byte hash arrays instead of string arrays — measured
-    2.1x faster end-to-end on the x10 probe corpus — while provably
+    intersect 8-byte hash arrays instead of string arrays while provably
     returning the exact string-gram jaccard (injective hash => the two
     intersections are equal element-for-element). A collision (expected
     never: probability ~ C(vocab, 2) / 2^64) falls back to string
@@ -658,8 +648,7 @@ def ngram_jaccard_pairs(
         # `verif` feeds both self-join sides: without a barrier each
         # side re-runs shingle + per-gram hashing over the raw text. A
         # lazy checkpoint of the slim (id, blocks, vg, ng) rows runs
-        # it once — measured (r9) 2.4 -> 1.2 s at sf0.1; at sf1 the
-        # O(pairs) verification join dominates and the win is ~10%.
+        # it once.
         # The select (not withColumn) matters: only vg/ng are consumed
         # downstream, so checkpointing the projection drops the raw
         # gram string arrays on the injective path instead of storing
@@ -688,10 +677,8 @@ def ngram_jaccard_pairs(
     # ordering, and both verification sides), and without a barrier
     # each re-runs the tokenize + shingle + dedup projection over the
     # raw text. Checkpointing the slim (id, blocks, grams, ng) rows
-    # runs the shingle work once — measured (r9) 4.7 -> 2.4 s on the
-    # token-prefix arm at sf0.1 and 12.1 -> 6.3 s at sf1, identical
-    # pair sets (oracle row + property suite unchanged). Same pattern
-    # as minhash_lsh_candidates' staged checkpoints above.
+    # runs the shingle work once. Same pattern as
+    # minhash_lsh_candidates' staged checkpoints above.
     base = base.localCheckpoint(eager=False)
     # global document frequency per gram; (df_cnt, gram) structs sort by
     # frequency-then-value, so the struct IS the total order key — no
@@ -827,7 +814,7 @@ def incremental_minhash_matches(
     accepted corpus: ``(doc_id, accepted_id, jaccard)``, exactly one row
     per matching (arriving, accepted) pair.
 
-    ``arriving_banded``/``arriving_profile`` (r11, batch-only, pass both
+    ``arriving_banded``/``arriving_profile`` (batch-only, pass both
     or neither): a caller that already holds a :func:`minhash_banded`
     projection and a :func:`jaccard_profile` covering the arriving rows
     (e.g. the pack that bands its WHOLE corpus once and filters subsets
@@ -974,7 +961,7 @@ def _match_candidates_verify(
 ) -> DataFrame:
     """Salted band join + first-colliding-band admission + exact-jaccard
     verification — the second half of :func:`incremental_minhash_matches`
-    (split r11 so the pre-banded bypass and the self-built path share
+    (separate so the pre-banded bypass and the self-built path share
     one join/verify implementation). ``arr`` carries the exploded salted
     arriving band rows; ``arr_verify`` the (id, toks, nt) verification
     rows on the batch path (None when streaming — tokens ride in
@@ -1010,10 +997,7 @@ def _match_candidates_verify(
     # the explicit fixed-width repartition below — exempt from AQE
     # coalescing — spreads the salted keys across the session width and
     # feeds whatever join shape the planner picks (broadcast index for
-    # small corpora, co-partitioned shuffle join at scale). Measured on
-    # the century ingest probe (500-doc batch vs 5k-doc index, 1.05M
-    # verified pairs): 11.3 s naive -> 5.7 s repartitioned -> ~2 s
-    # salted, matching the 500k-doc leg.
+    # small corpora, co-partitioned shuffle join at scale).
     width = arr.sparkSession.conf.get("spark.sql.shuffle.partitions")
     if str(width).isdigit():
         arr = arr.repartition(int(width), "band_idx", "band_key", "__salt")

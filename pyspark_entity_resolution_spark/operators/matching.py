@@ -1,7 +1,8 @@
 """Pair scoring + rule-based matching (reference src/similarity.py:47-74).
 
-Operates on a prefixed pair DataFrame (columns ``{l}_authors``,
-``{l}_title``, ``{l}_num_authors``, ``{l}_venue`` and the ``{r}_*`` twins).
+Operates on a prefixed pair DataFrame (columns ``a_authors``,
+``a_title``, ``a_num_authors``, ``a_venue`` and the ``b_*`` twins; the
+side names are ``sources.io.LEFT``/``RIGHT``).
 The filter order — author-count agreement first, then venue agreement, then
 Levenshtein band, then the match rule, then Jaccard — is the reference's
 manual expression ordering with the rule's shared ``num_authors`` equality
@@ -18,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import both_contain, match_rule, token_jaccard
+from ..sources.io import LEFT, RIGHT
 
 DEFAULT_VENUES = ["sigmod", "vldb"]
 SCORE_COL = "scores"
@@ -26,8 +28,6 @@ JACCARD_COL = "title_jaccard_sim"
 
 def score_and_match(
     pairs: DataFrame,
-    left_prefix: str = "a",
-    right_prefix: str = "b",
     venues: list[str] | None = None,
     max_levenshtein: int = 10,
     min_jaccard: float = 0.6,
@@ -35,7 +35,7 @@ def score_and_match(
     """Filter author-count- and venue-agreeing pairs, score author
     Levenshtein (-> ``scores``), apply the three-band rule, score title
     Jaccard (-> ``title_jaccard_sim``) and keep pairs above threshold."""
-    l, r = left_prefix, right_prefix
+    l, r = LEFT, RIGHT
     venues = DEFAULT_VENUES if venues is None else venues
 
     same_venue = both_contain(f"{l}_venue", f"{r}_venue", venues)
@@ -110,9 +110,9 @@ def deletion_neighborhood_pairs(
             ),
         ),
     )
-    # r10 (per-block since r11): build the neighborhood over
-    # affix-stripped middles — lev<=1 is invariant under the block's
-    # shared prefix/suffix, and on id-styled corpora the strip cuts
+    # build the neighborhood over affix-stripped middles — lev<=1 is
+    # invariant under the block's shared prefix/suffix, and on
+    # id-styled corpora the strip cuts
     # both the variant count (len+1 per row, e.g. 19 -> 6) and every
     # variant's key size. Strip AFTER the max_length truncation so the
     # truncated-prefix semantics documented above are unchanged.
@@ -121,7 +121,7 @@ def deletion_neighborhood_pairs(
         F.col(text_col).substr(1, max_length).alias("__raw"),
         *block_cols,
     )
-    # r11: the strip is per-BLOCK when blocked (heterogeneous id styles
+    # the strip is per-BLOCK when blocked (heterogeneous id styles
     # in different blocks each strip their own affixes; the global form
     # would see prefix 0 across styles), global otherwise. Exactness is
     # per-pair: a pair shares a block, hence its block's affixes.
@@ -178,9 +178,7 @@ def strip_common_affixes(
     to it (suffixes via the reversed column). So a pairwise distance
     scan may run its DP on the stripped middles and return identical
     distances for every pair, at a fraction of the per-pair work on
-    id-styled corpora ('Customer#000010139': 18-char DP -> 5-char DP,
-    measured 31.2 s -> 8.3 s at sf1 on levenshtein_blocked_pairs with
-    the identical 17M-row output).
+    id-styled corpora ('Customer#000010139': 18-char DP -> 5-char DP).
 
     One scalar aggregation (min/max of the column and its reverse plus
     the min length — the same driver-side plan-build collect class as
@@ -250,21 +248,12 @@ def strip_common_affixes_by_block(
     over that tiny result (no driver round-trip per block), and the
     |blocks|-row affix table broadcast-joined back onto the rows.
 
-    The affix table is NOT materialized, and that is the measured-right
-    deal twice over. (1) Runtime duplicate evaluation is NOT a cost:
-    although a downstream self-join carries this subtree once per side
-    in the logical plan, AQE stage reuse dedupes it at execution —
-    verified r12 against SQL-node metrics (executed plan: ONE
-    SortAggregate pair, ONE affix BroadcastExchange, 2 scans not 4).
-    (2) Every materialization alternative measured worse at sf0.1:
-    an eager ``localCheckpoint`` barrier +1.5 s (r11, 2.47 s vs
-    0.96 s on the bench lev row); collecting the aggregate to a
-    driver-side LocalRelation with the LCPs computed in Python read
-    3.09 s vs 1.28 s min (r12 interleaved in-JVM A/B, identical
-    163,383 rows) — a plan-build ACTION costs more per call than the
-    whole in-plan overhead. Rewriting the LCPs into layered
-    projections (each wide tree appearing once) was also a wash
-    (r12: mins 1.855 vs 1.829). A streaming input is returned unstripped
+    The affix table is NOT materialized: although a downstream self-join
+    carries this subtree once per side in the logical plan, AQE stage
+    reuse dedupes it at execution, and each materialization (an eager
+    checkpoint, a driver-side collect) costs a plan-build action that
+    measured more than the whole in-plan overhead
+    (OPTIMIZATION_r13.md). A streaming input is returned unstripped
     (the strip is an optimization, never a semantics change). Rows whose
     block key is NULL are dropped — they can never appear in a blocked
     pair, which is exactly how every blocked join downstream treats
@@ -339,17 +328,15 @@ def blocked_levenshtein_pairs(
     early-exits once the distance provably exceeds ``max_distance``.
     Deliberately NOT candidate-pruned beyond that: on dense-match
     corpora the output approaches the candidate count, so key-based
-    candidate generation (SymSpell r7: 97.9 s vs 40.1 s; adaptive
-    chunk-banding + del-1 variants + shifted-length keys r10: 59.1 s
-    vs 31.2 s, identical 17M rows) only adds explode/dedup/re-join
-    machinery on top of pairs that must be verified anyway. For SPARSE
+    candidate generation only adds explode/dedup/re-join machinery on
+    top of pairs that must be verified anyway. For SPARSE
     ed-1 matching use :func:`deletion_neighborhood_pairs`.
 
     Returns ``(a_id, b_id, scores)`` with ``a_id < b_id`` and
     ``scores`` the exact full-string distance.
     """
     block_cols = list(block_cols or [])
-    # r11: per-block strip when blocked (see deletion_neighborhood_pairs
+    # per-block strip when blocked (see deletion_neighborhood_pairs
     # — a pair always shares its block's affixes), global otherwise
     if block_cols:
         base = strip_common_affixes_by_block(

@@ -12,11 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import LEFT, RIGHT
+
 
 def match_quality(
     complete: DataFrame,
     blocked: DataFrame,
-    keys: list[str] = ("a_id", "b_id"),
+    keys: list[str] = (f"{LEFT}_id", f"{RIGHT}_id"),
     ndigits: int = 3,
 ) -> dict[str, float]:
     """Precision/recall/F1 of ``blocked`` against the exhaustive

@@ -13,24 +13,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pick_representatives(
-    clustered: DataFrame,
-    cluster_col: str = "cluster_id",
-    side_col: str = "df_name",
-    id_col: str = "id",
-) -> DataFrame:
+def pick_representatives(clustered: DataFrame) -> DataFrame:
     """One representative record id per (cluster, dataset): the minimum."""
-    return clustered.groupBy(cluster_col, side_col).agg(F.min(id_col).alias(id_col))
+    return clustered.groupBy("cluster_id", "df_name").agg(F.min("id").alias("id"))
 
 
 def entity_table(
     representatives: DataFrame,
     raw_by_side: dict[str, DataFrame],
     sides: list[str],
-    cluster_col: str = "cluster_id",
-    side_col: str = "df_name",
-    id_col: str = "id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Join each side's representative back to its raw record and pivot to
     one row per entity with a ``{side}_value`` column per dataset.
@@ -41,17 +32,15 @@ def entity_table(
     """
     joined = None
     for side in sides:
-        raw = raw_by_side[side].select(
-            F.col(id_col).cast("string").alias(id_col), F.col(value_col)
-        )
-        side_repr = representatives.filter(F.col(side_col) == side)
-        part = side_repr.join(raw, on=[id_col], how="left")
+        raw = raw_by_side[side].select(F.col("id").cast("string").alias("id"), "value")
+        side_repr = representatives.filter(F.col("df_name") == side)
+        part = side_repr.join(raw, on=["id"], how="left")
         joined = part if joined is None else joined.unionByName(part)
 
     pivoted = (
-        joined.groupBy(cluster_col)
-        .pivot(side_col, sides)
-        .agg(F.min(id_col).alias("id"), F.min(value_col).alias("value"))
+        joined.groupBy("cluster_id")
+        .pivot("df_name", sides)
+        .agg(F.min("id").alias("id"), F.min("value").alias("value"))
     )
     keep = [F.col(f"{side}_value") for side in sides]
-    return pivoted.select(F.col(cluster_col), *keep)
+    return pivoted.select(F.col("cluster_id"), *keep)

@@ -24,7 +24,7 @@ from .operators import blocking, matching
 from .operators.clustering import cluster_matched_pairs
 from .operators.resolve import entity_table, pick_representatives
 from .sources.aminer import read_aminer
-from .sources.io import prefix_columns
+from .sources.io import LEFT, RIGHT, prefix_columns
 
 
 @dataclass
@@ -35,8 +35,6 @@ class ERConfig:
     window: int | None = 3          # None -> exhaustive cross join
     max_levenshtein: int = 10
     min_jaccard: float = 0.6
-    left_name: str = "a"
-    right_name: str = "b"
 
 
 def prepare_publications(spark: SparkSession, path: str, cfg: ERConfig) -> DataFrame:
@@ -48,14 +46,12 @@ def prepare_publications(spark: SparkSession, path: str, cfg: ERConfig) -> DataF
     reference's ``monotonically_increasing_id``, SURVEY.md §7.3).
     """
     df = read_aminer(spark, path)
-    # NO forced repartition before the clean stage, by measurement: an
-    # exchange here shuffles the full raw `value` text and splits the
-    # two accent-folding ArrowEvalPython projections across a stage
-    # boundary — net x3.1 SLOWER at 30k records/side and x1.2 slower at
-    # 300k (r5 bisect). Spark's bytes-per-core file splitting already
-    # gives the text scan (and the narrow chain above it) adequate
-    # width; the blocked join downstream has its own targeted spread
-    # guard (operators/blocking.py).
+    # NO forced repartition before the clean stage: an exchange here
+    # shuffles the full raw `value` text and splits the two
+    # accent-folding projections across a stage boundary, and
+    # measured slower (OPTIMIZATION_r13.md). Spark's bytes-per-core file
+    # splitting already gives the text scan adequate width; the blocked
+    # join downstream has its own spread guard (operators/blocking.py).
     year = F.col("year")
     venue_ok = F.lit(False)
     for v in cfg.venues:
@@ -86,7 +82,7 @@ def clean_publications(df: DataFrame) -> DataFrame:
 def match_publications(left: DataFrame, right: DataFrame, cfg: ERConfig) -> DataFrame:
     """Block + score + match two cleaned publication tables; returns the
     matched-pair table with prefixed columns."""
-    l, r = cfg.left_name, cfg.right_name
+    l, r = LEFT, RIGHT
     keep = ["id", "index", "title", "authors", "year", "venue", "num_authors"]
     lp = prefix_columns(left.select(*keep), l)
     rp = prefix_columns(right.select(*keep), r)
@@ -107,8 +103,6 @@ def match_publications(left: DataFrame, right: DataFrame, cfg: ERConfig) -> Data
     )
     matched = matching.score_and_match(
         pairs,
-        left_prefix=l,
-        right_prefix=r,
         venues=cfg.venues,
         max_levenshtein=cfg.max_levenshtein,
         min_jaccard=cfg.min_jaccard,
@@ -125,16 +119,13 @@ def resolve_pipeline(
     cfg: ERConfig,
 ) -> DataFrame:
     """Cluster matches and emit the two-column matched-entities table
-    (reference src/create_graph.py:51-89)."""
-    l, r = cfg.left_name, cfg.right_name
-    clustered = cluster_matched_pairs(
-        matches, left_id=f"{l}_id", right_id=f"{r}_id", left_name=l, right_name=r
-    )
-    representatives = pick_representatives(clustered)
+    (reference src/create_graph.py:51-89). No ``cfg`` field applies to
+    these two stages; it is taken so every stage has the same call shape."""
+    clustered = cluster_matched_pairs(matches)
     return entity_table(
-        representatives,
-        raw_by_side={l: left_clean, r: right_clean},
-        sides=[l, r],
+        pick_representatives(clustered),
+        raw_by_side={LEFT: left_clean, RIGHT: right_clean},
+        sides=[LEFT, RIGHT],
     )
 
 

@@ -93,13 +93,16 @@ def write_csv(
                 break
 
 
-def prefix_columns(df: DataFrame, prefix: str, rename: dict[str, str] | None = None) -> DataFrame:
+# The two sources the ER path links (the paper's DBLP and ACM dumps).
+# Their names prefix the pair columns (``a_id``, ``b_title``), key the
+# graph nodes (``a:<id>``) and head the entity table (``a_value``).
+LEFT, RIGHT = "a", "b"
+
+
+def prefix_columns(df: DataFrame, prefix: str) -> DataFrame:
     """Prefix every column with ``{prefix}_`` in ONE projection (the
     reference chains a ``withColumnRenamed`` per column,
     src/utils.py:24-28 — N plan nodes for no reason)."""
     from pyspark.sql import functions as F
 
-    rename = rename or {}
-    return df.select(
-        *[F.col(f"`{c}`").alias(f"{prefix}_{rename.get(c, c)}") for c in df.columns]
-    )
+    return df.select(*[F.col(f"`{c}`").alias(f"{prefix}_{c}") for c in df.columns])

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..operators import clustering
+from ..sources.io import LEFT, RIGHT
 
 
 def streaming_candidate_pairs(
@@ -38,19 +39,18 @@ def streaming_candidate_pairs(
     within: str = "10 minutes",
     left_watermark: str = "30 minutes",
     right_watermark: str = "30 minutes",
-    left_prefix: str = "a",
-    right_prefix: str = "b",
 ) -> DataFrame:
     """Blocked candidate pairs from two record streams.
 
     Equi-join on ``block_cols`` (the blocking predicate — same role as the
     batch exploded-block-key join, operators/blocking.py) restricted to
     right-side records whose event time falls in
-    ``[left.ts, left.ts + within]``. Output columns are prefixed
-    ``{left_prefix}_`` / ``{right_prefix}_``; the block columns keep both
-    prefixed copies so downstream predicates can reference either side.
+    ``[left.ts, left.ts + within]``. Output columns are prefixed with the
+    side names (``a_`` / ``b_``, ``sources.io.LEFT``/``RIGHT``); the block
+    columns keep both prefixed copies so downstream predicates can
+    reference either side.
     """
-    l, r = left_prefix, right_prefix
+    l, r = LEFT, RIGHT
     lw = left.withWatermark(ts_col, left_watermark).select(
         *[F.col(c).alias(f"{l}_{c}") for c in left.columns]
     )
@@ -101,16 +101,17 @@ def streaming_match_documents(
         left_watermark=watermark,
         right_watermark=watermark,
     )
-    jac: Column = token_jaccard(f"a_{text_col}", f"b_{text_col}")
+    l, r = LEFT, RIGHT
+    jac: Column = token_jaccard(f"{l}_{text_col}", f"{r}_{text_col}")
     return (
-        pairs.filter(F.col(f"a_{id_col}") != F.col(f"b_{id_col}"))
+        pairs.filter(F.col(f"{l}_{id_col}") != F.col(f"{r}_{id_col}"))
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= min_jaccard)
         .select(
-            F.col(f"a_{id_col}").alias("a_id"),
-            F.col(f"b_{id_col}").alias("b_id"),
-            F.col(f"a_{ts_col}").alias("a_ts"),
-            F.col(f"b_{ts_col}").alias("b_ts"),
+            F.col(f"{l}_{id_col}").alias(f"{l}_id"),
+            F.col(f"{r}_{id_col}").alias(f"{r}_id"),
+            F.col(f"{l}_{ts_col}").alias(f"{l}_ts"),
+            F.col(f"{r}_{ts_col}").alias(f"{r}_ts"),
             "jaccard",
         )
     )
@@ -147,15 +148,16 @@ def streaming_match_publications(
         left_watermark=watermark,
         right_watermark=watermark,
     )
+    l, r = LEFT, RIGHT
     return (
         score_and_match(
             pairs, venues=venues, max_levenshtein=max_levenshtein,
             min_jaccard=min_jaccard,
         )
         .select(
-            "a_id", "b_id", SCORE_COL, JACCARD_COL,
-            F.col(f"a_{ts_col}").alias("a_ts"),
-            F.col(f"b_{ts_col}").alias("b_ts"),
+            f"{l}_id", f"{r}_id", SCORE_COL, JACCARD_COL,
+            F.col(f"{l}_{ts_col}").alias(f"{l}_ts"),
+            F.col(f"{r}_{ts_col}").alias(f"{r}_ts"),
         )
     )
 
@@ -179,8 +181,7 @@ class FoldReport:
     read from the store at ``labels_path`` only when the property is
     accessed (a fold pays no store listing for a table its caller may
     never read); it reflects the store at access time.
-    ``expansion_buckets`` is always ``None``: the member expansion reads
-    the whole store. ``n_hit_components`` counts the previously-known
+    ``n_hit_components`` counts the previously-known
     components this batch touched (driver path only; ``None`` on the
     distributed path and on cold start, which never count them).
     ``written_buckets`` is the sorted bucket list
@@ -190,11 +191,16 @@ class FoldReport:
     ``clustering.DRIVER_BOUND`` rows) or the distributed one."""
 
     labels_path: str
-    expansion_buckets: list[int] | None = None
     n_hit_components: int | None = None
     cold_start: bool = False
     written_buckets: list[int] | None = None
     on_driver: bool = False
+
+    @property
+    def expansion_buckets(self) -> None:
+        """Always ``None``: the member expansion reads the whole store,
+        not a bucket subset."""
+        return None
 
     @property
     def labels(self) -> DataFrame:
@@ -475,14 +481,11 @@ def incremental_entity_labels(
     spark,
     labels_path: str,
     new_matches: DataFrame,
-    left_id: str = "a_id",
-    right_id: str = "b_id",
-    left_name: str = "a",
-    right_name: str = "b",
     n_buckets: int = 64,
     lease_wait: float = 0.0,
 ) -> FoldReport:
-    """Fold one batch of matched pairs into the persistent entity labels.
+    """Fold one batch of matched pairs ``(a_id, b_id, ...)`` into the
+    persistent entity labels.
 
     Incremental connected components WITHOUT replaying history: the
     previous ``(node, component)`` labels of components TOUCHED by this
@@ -552,20 +555,14 @@ def incremental_entity_labels(
     """
     layout = _check_store_meta(spark, labels_path, n_buckets)
     with _store_lease(spark, labels_path, "incremental_entity_labels", lease_wait):
-        return _fold_locked(
-            spark, labels_path, new_matches, left_id, right_id,
-            left_name, right_name, n_buckets, layout,
-        )
+        return _fold_locked(spark, labels_path, new_matches, n_buckets, layout)
 
 
-def _fold_locked(
-    spark, labels_path, new_matches, left_id, right_id,
-    left_name, right_name, n_buckets, layout,
-) -> FoldReport:
+def _fold_locked(spark, labels_path, new_matches, n_buckets, layout) -> FoldReport:
     from pyspark.errors import AnalysisException
 
     edges = clustering._encode_nodes(
-        new_matches, left_id, right_id, left_name, right_name
+        new_matches, f"{LEFT}_id", f"{RIGHT}_id", LEFT, RIGHT
     )
     try:
         prev = _read_store(spark, labels_path, layout)
@@ -862,10 +859,6 @@ def _compact_locked(spark, labels_path, max_files_per_bucket) -> list[int]:
 def streaming_resolve_entities(
     matches: DataFrame,
     labels_path: str,
-    left_id: str = "a_id",
-    right_id: str = "b_id",
-    left_name: str = "a",
-    right_name: str = "b",
     query_name: str = "streaming_entities",
     checkpoint_dir: str | None = None,
     n_buckets: int = 64,
@@ -896,8 +889,7 @@ def streaming_resolve_entities(
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         incremental_entity_labels(
-            batch_df.sparkSession, labels_path, batch_df,
-            left_id, right_id, left_name, right_name, n_buckets,
+            batch_df.sparkSession, labels_path, batch_df, n_buckets,
             lease_wait=lease_wait,
         )
         if compact_every and (batch_id + 1) % compact_every == 0:

@@ -17,11 +17,14 @@ changed.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
-from tools.dump_plans import SF, committed_digests, extra_plan_dfs, plan_digest
+from tools.dump_plans import (
+    REPO, SF, committed_digests, extra_plan_dfs, plan_digest,
+)
 
 
 def test_committed_digests_cover_every_headline_query():
@@ -67,7 +70,7 @@ def test_plans_md_cc_round_step_is_window_form():
     """The r7 complaint, pinned directly: the committed per-round CC
     plan must be the join-free window form — Window nodes present, no
     join operator of any kind in the dumped lines."""
-    with open("/root/repo/PLANS.md") as f:
+    with open(os.path.join(REPO, "PLANS.md")) as f:
         text = f.read()
     m = re.search(
         r"## cc_round_step_default\n(.*?)\nplan digest:", text, re.DOTALL

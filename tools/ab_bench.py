@@ -26,8 +26,7 @@ hashed-edge graph of ``<edges>`` edges over ``<edges> // 2`` nodes,
 timed once per JVM (a 100M-edge call runs for minutes), reported as
 seconds plus ``<row>_components`` and ``<row>_rounds``. ``--queries``
 selects registry queries by name (same min-of-N, noop sink, sf dir from
-$SPARK_GRAFT_SF_DIR). bench.py embeds :func:`interleaved_ab` for the
-per-artifact same-host baseline. The probe script is embedded here and
+$SPARK_GRAFT_SF_DIR). The probe script is embedded here and
 injected into every checkout unchanged, so old refs that predate any
 bench.py flag still measure identically — the only API it uses
 (pipeline.ERConfig / prepare_publications / match_publications /
@@ -223,8 +222,7 @@ def interleaved_ab(
     runs: int = 3,
     on_record=None,
 ) -> tuple[list[dict], dict]:
-    """The interleaved pass loop, reusable (bench.py embeds it for the
-    same-host baseline). Fresh JVM per (ref, pass); within each pass the
+    """The interleaved pass loop. Fresh JVM per (ref, pass); within each pass the
     refs run back-to-back, and the ref ORDER REVERSES on odd passes so
     slow monotone drift (page-cache fill, thermal) lands on both arms
     symmetrically instead of always favoring whichever ref runs second.
